@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Per-query isolation harness for the optimization rounds (guide §1).
 
-bench.py is FROZEN (the driver times the round-start copy); this file holds
-the extra measurement machinery the optimization work needs:
+bench.py keeps the headline contract; this file holds the extra
+measurement machinery the optimization work needs:
 
 * time a SUBSET of declared queries in isolation, fresh-ish (clearCache
-  between runs, same session config as bench.py), with either the bench's
+  between runs, bench.py's own session builder), with either the bench's
   ``.count()`` action (comparable to BENCH_r*.json numbers) or a ``noop``
   sink (times every column of every row — guide §1.4);
 * capture ``.explain("formatted")`` for each query into plans/r06/ as
@@ -26,20 +26,7 @@ import os
 import time
 from statistics import median
 
-
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("jamie-spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+from bench import build_spark
 
 
 def main() -> None:

@@ -5,16 +5,18 @@ Re-expresses the semantics of the JaMIE medical information-extraction stack
 DataFrame pipeline over Common-Crawl-style page tables:
 
     pages(url, warc_ts, html, text, lang)
-      -> extract (byte-identical text per url)        [textnorm]
-      -> segment -> tokenize -> joint NER/mod/rel tag [segment, tokenizer, infer]
-      -> mentions + triples                           [mentions]
-      -> entity linking (MinHash-LSH + rerank)        [link]
-      -> canonicalization (connected components)      [canon]
-      -> graph materialization (salted, bucketed)     [graph]
-      -> lineage + idempotent resume                  [lineage]
+      -> extract -> normalize -> segment -> tokenize
+         -> joint NER/mod/rel tag + BIO decode     [textnorm, tokenizer, infer]
+      -> mentions + triples (flat rows)            [mentions]
+      -> entity linking (exact join, then broadcast
+         Jaccard or banded MinHash + top-1 rerank) [link]
+      -> canonicalization (connected components)   [canon]
+      -> graph materialization (salted, bucketed)  [graph]
+      -> lineage + idempotent resume               [lineage, pipeline]
 
 Everything heavy runs JVM-side (built-in functions) or in a single Arrow-batched
-``mapInPandas`` stage; there is no per-row Python anywhere in the hot path.
+``mapInArrow`` stage (``infer.annotate_pages_flat``); there is no per-row Python
+anywhere in the hot path.
 """
 
 __version__ = "0.1.0"

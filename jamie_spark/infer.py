@@ -1,7 +1,10 @@
-"""The fused NLP front-end: one Arrow-batched ``mapInPandas`` stage.
+"""The fused NLP front-end: one Arrow-batched python stage per output shape.
 
 pages(url, warc_ts, html, text, lang)
   -> annotations(url, sent_id, tokens, ner, mod, rels, heads, entities, triples)
+     (``annotate_pages``, ``mapInPandas``: the nested CONLL/XML/eval shape)
+  -> flat mention/triple rows
+     (``annotate_pages_flat``, ``mapInArrow``: the KG hot path)
 
 Everything the reference does per document — extraction (N1), width
 normalization (T1), segmentation (T2), tokenization (T3), joint
@@ -33,6 +36,7 @@ from typing import TYPE_CHECKING
 import pandas as pd
 from pyspark.sql import functions as F
 
+from .bio import bio_to_spans, rel_triplets
 from .standin import MODEL_VERSION
 from .subword import MAX_SUBWORDS, subword_count
 from .textnorm import SEP, extract_text, zen_to_han
@@ -260,12 +264,34 @@ def _iter_annotated(tagger, pdf_rows, mode: str, vocab: set[str] | None):
         yield url, sid, cid, toks, ner, mod, rels, heads
 
 
+def _decode_unit(toks, ner, mod, rels, heads) -> tuple[list, list]:
+    """One unit's span/triple decode (B1, M2-M3; semantics in ``bio``) —
+    the single copy both output shapes emit from.
+
+    mentions: (tag, begin, end, mod, surface), modality from the span-final
+    token. triples: (tail_tag, tail_begin, tail_end, tail_mod, tail_surface,
+    head_surface, head_tag, rel) for relations whose tail AND head anchor a
+    span-final token. Both lists are complete before the caller emits
+    anything, so a unit whose decode raises (e.g. a ``mod`` shorter than
+    ``ner``) yields no rows in either shape, never a partial unit.
+    """
+    mentions = [
+        (t, b, e, mod[e - 1], "".join(toks[b:e]))
+        for t, b, e in bio_to_spans(ner)
+    ]
+    last = {m[2] - 1: m for m in mentions}
+    triples = []
+    for ti, hi, rel in rel_triplets(rels, heads):
+        if ti in last and hi in last:
+            ht, _, _, _, hs = last[hi]
+            triples.append((*last[ti], hs, ht, rel))
+    return mentions, triples
+
+
 def _make_annotate_batches(mode: str, spec: str):
     def _annotate_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        from .bio import bio_to_spans, rel_triplets
-
         tagger = _get_tagger(spec)
         vocab = getattr(tagger, "subword_vocab", None)
         for pdf in batches:
@@ -280,33 +306,9 @@ def _make_annotate_batches(mode: str, spec: str):
                 )
             ):
                 try:
-                    spans = bio_to_spans(ner)
-                    entities = [
-                        {
-                            "tag": tag,
-                            "begin": b,
-                            "end": e,
-                            "mod": mod[e - 1],
-                            "surface": "".join(toks[b:e]),
-                        }
-                        for tag, b, e in spans
-                    ]
-                    last = {e - 1: (tag, b, e) for tag, b, e in spans}
-                    triples = []
-                    for tail_id, head_id, rel in rel_triplets(rels, heads):
-                        if tail_id in last and head_id in last:
-                            tt, tb, te = last[tail_id]
-                            ht, hb, he = last[head_id]
-                            triples.append(
-                                {
-                                    "tail_surface": "".join(toks[tb:te]),
-                                    "head_surface": "".join(toks[hb:he]),
-                                    "rel": rel,
-                                    "tail_tag": tt,
-                                    "head_tag": ht,
-                                    "tail_mod": mod[te - 1],
-                                }
-                            )
+                    mentions, triples = _decode_unit(
+                        toks, ner, mod, rels, heads
+                    )
                 except Exception:
                     continue  # per-unit decode isolation
                 out["url"].append(url)
@@ -317,8 +319,15 @@ def _make_annotate_batches(mode: str, spec: str):
                 out["mod"].append(mod)
                 out["rels"].append(rels)
                 out["heads"].append(heads)
-                out["entities"].append(entities)
-                out["triples"].append(triples)
+                out["entities"].append([
+                    {"tag": t, "begin": b, "end": e, "mod": m, "surface": sf}
+                    for t, b, e, m, sf in mentions
+                ])
+                out["triples"].append([
+                    {"tail_surface": ts, "head_surface": hs, "rel": rel,
+                     "tail_tag": tt, "head_tag": ht, "tail_mod": tm}
+                    for tt, _, _, tm, ts, hs, ht, rel in triples
+                ])
             if out["url"]:
                 # never yield an empty frame: pandas types empty columns
                 # float64, which Arrow cannot convert to list<string> (found
@@ -394,8 +403,6 @@ def _make_flat_arrow_batches(mode: str, spec: str):
         """
         import pyarrow as pa
 
-        from .bio import bio_to_spans, rel_triplets
-
         tagger = _get_tagger(spec)
         vocab = getattr(tagger, "subword_vocab", None)
         names = (
@@ -416,25 +423,21 @@ def _make_flat_arrow_batches(mode: str, spec: str):
                 )
             ):
                 try:
-                    spans = bio_to_spans(ner)
-                    last = {e - 1: (t, b, e) for t, b, e in spans}
-                    for t, b, e in spans:
-                        vals = (url, sid, cid, "m", t, b, e, mod[e - 1],
-                                "".join(toks[b:e]), None, None, None)
-                        for f, v in zip(add, vals):
-                            f(v)
-                    for ti, hi, rel in rel_triplets(rels, heads):
-                        if ti in last and hi in last:
-                            tt, tb, te = last[ti]
-                            ht, hb, he = last[hi]
-                            vals = (url, sid, cid, "t", tt, tb, te,
-                                    mod[te - 1], "".join(toks[tb:te]),
-                                    "".join(toks[hb:he]), ht, rel)
-                            for f, v in zip(add, vals):
-                                f(v)
+                    mentions, triples = _decode_unit(
+                        toks, ner, mod, rels, heads
+                    )
                 except Exception:
                     # per-unit decode isolation (reference utils.py:844-846)
                     continue
+                # mention/triple tuples are laid out in FLAT_DDL column
+                # order after ``kind``
+                for m in mentions:
+                    for f, v in zip(add, (url, sid, cid, "m", *m,
+                                          None, None, None)):
+                        f(v)
+                for t in triples:
+                    for f, v in zip(add, (url, sid, cid, "t", *t)):
+                        f(v)
             if cols["url"]:
                 yield pa.RecordBatch.from_pydict(
                     {k: pa.array(cols[k], types.get(k, pa.string()))

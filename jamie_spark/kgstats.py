@@ -143,13 +143,6 @@ def _und_degrees(und: "DataFrame") -> "DataFrame":
     )
 
 
-def _check_cadence(checkpoint_every: int) -> None:
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-
-
 def orient(edges: "DataFrame", und: "DataFrame | None" = None) -> "DataFrame":
     """Degree-order the undirected projection: every edge points from the
     LOWER to the HIGHER endpoint under the total order (degree, node) — so
@@ -220,9 +213,10 @@ def triangle_count(edges: "DataFrame") -> int:
     return triangles(edges).count()
 
 
-def label_propagation(
-    edges: "DataFrame", iters: int = 4, checkpoint_every: int = 3
-) -> "DataFrame":
+_LPA_CHECKPOINT_EVERY = 3
+
+
+def label_propagation(edges: "DataFrame", iters: int = 4) -> "DataFrame":
     """Synchronous label-propagation community detection, deterministic.
 
     label_0(v)     = v
@@ -243,13 +237,13 @@ def label_propagation(
     the round count independent of data (communities stabilize in a handful
     of rounds; convergence detection would add a driver action per round).
 
-    ``checkpoint_every``: lineage is truncated with an eager localCheckpoint
-    every N rounds, not every round — each eager checkpoint is a full
-    materialization barrier (a scheduled job), pure overhead when Catalyst
-    can plan 2-3 chained rounds as one job; unbounded chaining would instead
-    grow the plan tree superlinearly. Same knob on :func:`pagerank_fixed`.
+    Lineage is truncated with an eager localCheckpoint every
+    ``_LPA_CHECKPOINT_EVERY`` rounds, not every round — each eager
+    checkpoint is a full materialization barrier (a scheduled job), pure
+    overhead when Catalyst can plan 2-3 chained rounds as one job; unbounded
+    chaining would instead grow the plan tree superlinearly. Same cadence on
+    :func:`pagerank_fixed`.
     """
-    _check_cadence(checkpoint_every)
     adj = _adjacency(_undirected(edges)).persist()
     nodes = adj.select("node").distinct().persist()
     labels = nodes.select("node", F.col("node").alias("label"))
@@ -271,7 +265,7 @@ def label_propagation(
         labels = nodes.join(best, "node", "left").select(
             "node", F.coalesce(F.col("label"), F.col("node")).alias("label")
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        if (it + 1) % _LPA_CHECKPOINT_EVERY == 0 and it + 1 < iters:
             labels = labels.localCheckpoint(eager=True)
     # materialize BEFORE dropping the loop-invariant caches: the returned
     # frame must not silently recompute adj/nodes from the raw scan
@@ -335,9 +329,10 @@ def neighbor_jaccard(
     )
 
 
-def kcore(
-    edges: "DataFrame", k: int = 3, iters: int = 5, checkpoint_every: int = 1
-) -> "DataFrame":
+_KCORE_CHECKPOINT_EVERY = 1
+
+
+def kcore(edges: "DataFrame", k: int = 3, iters: int = 5) -> "DataFrame":
     """(node, deg) — the k-core after ``iters`` peeling rounds: repeatedly
     drop vertices whose UNDIRECTED degree is < k, then edges touching them.
 
@@ -351,14 +346,14 @@ def kcore(
     convergence detection would add a driver action per round. Per round:
     one degree aggregation + one semi-join per endpoint.
 
-    ``checkpoint_every`` defaults to 1 here, unlike pagerank/LPA: each
+    Lineage is truncated every round here (``_KCORE_CHECKPOINT_EVERY``),
+    unlike pagerank/LPA: each
     round references the PREVIOUS round's edge frame three times (degree
     union twice + the filter join), so an unmaterialized chain duplicates
     the whole prior-round subtree per reference — ~3^rounds copies of the
     scan by round 4 (measured 12s vs ~1s on the sf0.1 word graph). The
     per-round barrier is the cheap side of that trade.
     """
-    _check_cadence(checkpoint_every)
     und = _undirected(edges).persist()
     cur = und
     for it in range(iters):
@@ -368,7 +363,7 @@ def kcore(
             .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
             .select("a", "b")
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        if (it + 1) % _KCORE_CHECKPOINT_EVERY == 0 and it + 1 < iters:
             cur = cur.localCheckpoint(eager=True)
     out = (
         _und_degrees(cur)
@@ -379,12 +374,14 @@ def kcore(
     return out
 
 
+_PR_CHECKPOINT_EVERY = 3
+
+
 def pagerank_fixed(
     edges: "DataFrame",
     iters: int = 5,
     damping_num: int = 85,
     scale: int = PR_SCALE,
-    checkpoint_every: int = 3,
 ) -> "DataFrame":
     """Fixed-point integer PageRank, exactly reproducible across engines.
 
@@ -403,13 +400,12 @@ def pagerank_fixed(
     Dangling vertices (no out-edges) simply leak their mass, the classic
     simplified formulation. Each iteration is one join (edges x ranks,
     shuffled on src) + one aggregation (shuffled on dst); lineage is
-    truncated with an eager localCheckpoint every ``checkpoint_every``
+    truncated with an eager localCheckpoint every ``_PR_CHECKPOINT_EVERY``
     rounds (each is a full materialization barrier — pure overhead when
     Catalyst can plan a few chained rounds as one job) and once at the end,
     BEFORE the loop-invariant caches are released. At cluster scale a
     reliable checkpoint dir serves the same purpose.
     """
-    _check_cadence(checkpoint_every)
     e = edges.select("src", "dst").distinct()
     # both loop-invariant inputs are persisted: every iteration re-reads the
     # vertex set AND the degree-annotated edges — without the cache each
@@ -444,7 +440,7 @@ def pagerank_fixed(
                 ).cast("long").alias("rank_fp"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        if (it + 1) % _PR_CHECKPOINT_EVERY == 0 and it + 1 < iters:
             ranks = ranks.localCheckpoint(eager=True)
     ranks = ranks.localCheckpoint(eager=True)
     e_deg.unpersist()
@@ -452,12 +448,14 @@ def pagerank_fixed(
     return ranks
 
 
+_PR_WEIGHTED_CHECKPOINT_EVERY = 3
+
+
 def pagerank_weighted(
     edges: "DataFrame",
     iters: int = 5,
     damping_num: int = 85,
     scale: int = PR_SCALE,
-    checkpoint_every: int = 3,
     weight_col: str = "w",
 ) -> "DataFrame":
     """Fixed-point integer PageRank over a WEIGHTED multigraph
@@ -475,9 +473,9 @@ def pagerank_weighted(
     ``rank * max_w`` (safe while a vertex's total out-weight squared fits
     int64, i.e. out-weight < ~3e9 — pre-bucket heavier weights). Loop
     shape is identical: one join + one aggregation per iteration,
-    localCheckpoint cadence to truncate lineage.
+    localCheckpoint every ``_PR_WEIGHTED_CHECKPOINT_EVERY`` rounds to
+    truncate lineage.
     """
-    _check_cadence(checkpoint_every)
     e = edges.groupBy("src", "dst").agg(
         F.sum(weight_col).cast("long").alias("w")
     )
@@ -516,7 +514,7 @@ def pagerank_weighted(
                 ).cast("long").alias("rank_fp"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        if (it + 1) % _PR_WEIGHTED_CHECKPOINT_EVERY == 0 and it + 1 < iters:
             ranks = ranks.localCheckpoint(eager=True)
     ranks = ranks.localCheckpoint(eager=True)
     e_deg.unpersist()
@@ -524,11 +522,13 @@ def pagerank_weighted(
     return ranks
 
 
+_BFS_CHECKPOINT_EVERY = 3
+
+
 def bfs_distances(
     edges: "DataFrame",
     source: str,
     max_hops: int = 6,
-    checkpoint_every: int = 3,
 ) -> "DataFrame":
     """Single-source BFS hop distances over the DIRECTED edge table, bounded
     at ``max_hops`` — the multi-hop reachability primitive (path-length
@@ -548,13 +548,12 @@ def bfs_distances(
     build side. Bounded rounds keep the plan finite at web scale (a 100 TB
     KG has effectively unbounded diameter through crawl-noise chains; every
     production path query caps its radius). Lineage is truncated with an
-    eager localCheckpoint every ``checkpoint_every`` rounds, same contract
-    as ``pagerank_fixed``; early-exits when the frontier empties.
+    eager localCheckpoint every ``_BFS_CHECKPOINT_EVERY`` rounds, same
+    contract as ``pagerank_fixed``; early-exits when the frontier empties.
 
     Engine-portable by construction (set arithmetic only, no floats), so the
     driver oracle replays it as a depth-capped recursive CTE with MIN(d).
     """
-    _check_cadence(checkpoint_every)
     e = edges.select("src", "dst").distinct().persist()
     spark = edges.sparkSession
     settled = spark.createDataFrame(
@@ -577,7 +576,7 @@ def bfs_distances(
         settled = settled.unionByName(
             nxt.select("node", F.lit(hop).cast("long").alias("dist"))
         )
-        if hop % checkpoint_every == 0:
+        if hop % _BFS_CHECKPOINT_EVERY == 0:
             # the settled union chain feeds every later anti-join
             settled = settled.localCheckpoint(eager=True)
         frontier = nxt

@@ -23,6 +23,12 @@ if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
 
+def _with_tid(m: "DataFrame") -> "DataFrame":
+    """Document-order T{n} mention ids: the front-end's one url window."""
+    w = Window.partitionBy("url").orderBy("sent_id", "begin_tok")
+    return m.withColumn("tid", F.concat(F.lit("T"), F.row_number().over(w)))
+
+
 def mentions_from_annotations(annotations: "DataFrame") -> "DataFrame":
     """Explode per-sentence entity arrays into a mentions table (B1+B3)."""
     m = annotations.select(
@@ -38,8 +44,7 @@ def mentions_from_annotations(annotations: "DataFrame") -> "DataFrame":
         F.col("e.mod").alias("mod_tag"),
         F.col("e.surface").alias("surface"),
     )
-    w = Window.partitionBy("url").orderBy("sent_id", "begin_tok")
-    return m.withColumn("tid", F.concat(F.lit("T"), F.row_number().over(w)))
+    return _with_tid(m)
 
 
 def mentions_from_flat(flat: "DataFrame") -> "DataFrame":
@@ -53,8 +58,7 @@ def mentions_from_flat(flat: "DataFrame") -> "DataFrame":
         F.col("mod").alias("mod_tag"),
         "surface",
     )
-    w = Window.partitionBy("url").orderBy("sent_id", "begin_tok")
-    return m.withColumn("tid", F.concat(F.lit("T"), F.row_number().over(w)))
+    return _with_tid(m)
 
 
 def triples_from_flat(flat: "DataFrame") -> "DataFrame":

@@ -641,12 +641,14 @@ def cosine_topk_int8(
     # filter on the computed ``sq`` column is pushed through the projection
     # by substitution, re-inlining the whole quantization into the scan
     # filter — the duplication this rewrite removes (plan-asserted in
-    # tests; same row set by the equivalence above).
+    # tests; same row set by the equivalence above). Spark orders NaN above
+    # every number, so a NaN element makes amax NaN and ``amax > 0`` true:
+    # the isnan guard keeps such vectors out, as the sq > 0 filter did.
     amax = F.array_max(
         F.transform("embedding", lambda x: F.abs(x.cast("double")))
     )
     base = quantize_int8(
-        embeddings.where(amax.isNotNull() & (amax > 0))
+        embeddings.where(amax.isNotNull() & (amax > 0) & ~F.isnan(amax))
     )
     q = base.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),

@@ -33,12 +33,6 @@ def test_kgstats_final_ops_empty_graph(spark):
     e = _empty_edges(spark)
     assert kgstats.kcore(e, k=2, iters=3).count() == 0
     assert kgstats.neighbor_jaccard(e).count() == 0
-    import pytest
-
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        kgstats.kcore(e, k=2, checkpoint_every=0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        kgstats.label_propagation(e, checkpoint_every=-1)
 
 
 def test_approx_distinct_empty_frame(spark):
@@ -133,3 +127,34 @@ def test_quantize_zero_vector_excluded(spark):
     assert all(r["query_id"] != 0 and r["neighbor_id"] != 0 for r in topk)
     scores = {(r["query_id"], r["neighbor_id"]): r["score"] for r in topk}
     assert scores[(1, 2)] == 1.0 and scores[(1, 3)] == -1.0
+
+
+def test_int8_topk_drops_nan_embeddings_like_exact_path_without_them(spark):
+    """A NaN element makes max|x| NaN, which Spark orders above every
+    number, so the ``amax > 0`` pre-filter alone admits the vector (and the
+    NaN -> int cast then fails the query under ANSI). With the isnan guard
+    the int8 top-k must equal the exact top-k over the finite rows."""
+    from jamie_spark import sim
+
+    finite = [
+        (0, [1.0] * 64),
+        (2, [0.5] * 64),
+        (3, [-1.0] * 64),
+        (4, [float(j % 5) - 2.0 for j in range(64)]),
+    ]
+    schema = "vec_id long, embedding array<float>"
+    with_nan = spark.createDataFrame(
+        finite + [(1, [float("nan")] + [1.0] * 63)], schema
+    )
+    quant = sim.cosine_topk_int8(with_nan, n_queries=5, k=3).collect()
+    exact = sim.cosine_topk(
+        spark.createDataFrame(finite, schema), n_queries=5, k=3
+    ).collect()
+    assert all(r["query_id"] != 1 and r["neighbor_id"] != 1 for r in quant)
+    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+    quant, exact = sorted(quant, key=key), sorted(exact, key=key)
+    assert [(*key(r), r["neighbor_id"]) for r in quant] == [
+        (*key(r), r["neighbor_id"]) for r in exact
+    ]
+    for q, e in zip(quant, exact):
+        assert abs(q["score"] - e["score"]) <= 0.01

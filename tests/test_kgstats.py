@@ -435,7 +435,7 @@ def test_bfs_distances_matches_bruteforce_random_graph(spark):
     got = {
         r["node"]: r["dist"]
         for r in kgstats.bfs_distances(
-            _edges(spark, pairs), "n00", max_hops=4, checkpoint_every=2
+            _edges(spark, pairs), "n00", max_hops=4
         ).collect()
     }
     assert got == want

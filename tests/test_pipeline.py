@@ -65,6 +65,50 @@ def test_flat_path_equals_nested_path(spark, corpus, extracted):
     assert nt.exceptAll(ft).count() == 0 and ft.exceptAll(nt).count() == 0
 
 
+def test_unit_decode_failure_drops_whole_unit_in_both_shapes(spark, monkeypatch):
+    """A unit whose decode raises part-way (``mod`` shorter than ``ner``:
+    the first span decodes, the span ending on the last token does not)
+    must yield NO rows in either output shape; other units are untouched.
+    The tagger is defined locally so the executor closure ships it by value."""
+    from jamie_spark.standin import StandInJointExtractor
+
+    class ShortModTagger:
+        subword_vocab = None
+
+        def __init__(self):
+            self._inner = StandInJointExtractor()
+
+        def annotate_sentence(self, toks):
+            ner, mod, rels, heads = self._inner.annotate_sentence(toks)
+            if "破" in toks:
+                n = len(toks)
+                ner = ["B-d"] + ["O"] * (n - 2) + ["B-d"]
+                mod = ["_"] * (n - 1)
+            return ner, mod, rels, heads
+
+    pages = spark.createDataFrame(
+        [("u0", None, None, "肺癌を認める。破あり。胃癌を認める。", "ja")],
+        "url string, warc_ts string, html string, text string, lang string",
+    )
+
+    def run():
+        nested = sorted(
+            (r["sent_id"], r["entities"], r["triples"])
+            for r in infer.annotate_pages(pages).collect()
+        )
+        flat = sorted(map(tuple, infer.annotate_pages_flat(pages).collect()),
+                      key=repr)
+        return nested, flat
+
+    want_nested, want_flat = run()
+    monkeypatch.setattr(infer, "_get_tagger", lambda spec: ShortModTagger())
+    got_nested, got_flat = run()
+    assert [r[0] for r in got_nested] == [0, 2]
+    assert [r for r in want_nested if r[0] != 1] == got_nested
+    assert {r[1] for r in got_flat} == {0, 2}
+    assert [r for r in want_flat if r[1] != 1] == got_flat
+
+
 def test_mentions_match_gold(spark, corpus, extracted):
     """NER + modality P/R == 1.0 on the fixture corpus (E2/E3 gate)."""
     scores = ev.eval_mentions(corpus["gold_mentions"], extracted["mentions"])
