@@ -62,6 +62,9 @@ SMALL_GRAPH_EDGES = 100_000
 
 
 def _union_find(edge_rows: list) -> dict[str, str]:
+    """vertex -> lexicographic-min vertex of its component. An edge with a
+    null endpoint links nothing (as in SQL, and in the star path's
+    ``u != v`` filter); its non-null endpoint still becomes a vertex."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -72,12 +75,24 @@ def _union_find(edge_rows: list) -> dict[str, str]:
 
     for r in edge_rows:
         a, b = r["src"], r["dst"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
+        for v in (a, b):
+            if v is not None:
+                parent.setdefault(v, v)
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {v: find(v) for v in parent}
+
+
+def _small_graph_rows(edges: "DataFrame", small_graph_edges: int):
+    """The driver-strategy probe: the edge rows if there are at most
+    ``small_graph_edges`` of them (one ``limit+collect`` job), else None."""
+    if small_graph_edges <= 0:
+        return None
+    rows = edges.limit(small_graph_edges + 1).collect()
+    return rows if len(rows) <= small_graph_edges else None
 
 
 def _checksum(df: "DataFrame") -> tuple[int, int]:
@@ -211,14 +226,12 @@ def connected_components(
     exploratory use).
     """
     spark = edges.sparkSession
-    if small_graph_edges > 0:
-        sample = edges.limit(small_graph_edges + 1).collect()
-        if len(sample) <= small_graph_edges:
-            comp = _union_find(sample)
-            return spark.createDataFrame(
-                [(v, c) for v, c in sorted(comp.items())],
-                "vertex string, component string",
-            )
+    rows = _small_graph_rows(edges, small_graph_edges)
+    if rows is not None:
+        return spark.createDataFrame(
+            sorted(_union_find(rows).items()),
+            "vertex string, component string",
+        )
     if _graphframes_available(spark):  # pragma: no cover - not in sandbox
         from graphframes import GraphFrame
 
@@ -301,18 +314,40 @@ def connected_components(
 def canonicalize_concepts(
     concept_dict: "DataFrame", small_graph_edges: int = SMALL_GRAPH_EDGES
 ) -> "DataFrame":
-    """Alias table -> (concept_id, component) canonical mapping.
+    """Alias table -> (concept_id, canonical_id) canonical mapping.
 
     Edges: every alias row links alias<->concept_id, so aliases sharing a
     surface (deliberate cross-links, FIXTURES.md §3) merge their concepts into
     one component. Component representative = min vertex id; since concept ids
     sort before raw surfaces only within their own prefix, we re-canonicalize
     to the min concept_id of the component.
+
+    Below ``small_graph_edges`` alias edges (the dictionary case) the final
+    map is built on the driver from the one ``limit+collect`` of the edges
+    the strategy probe already runs: union-find, then the min concept id per
+    component. The result is a frame of driver rows with no dictionary scan
+    or join left in its plan, so every consumer (both broadcast builds of
+    ``graph.canonical_triples``) reads the finished map. A null alias links
+    nothing and a null concept id maps nowhere, exactly as in the
+    distributed path. Above the threshold the components come from
+    GraphFrames or the star rounds and the map is joined back there.
     """
     edges = concept_dict.select(
         F.col("alias").alias("src"), F.col("concept_id").alias("dst")
     ).distinct()
-    cc = connected_components(edges, small_graph_edges=small_graph_edges)
+    rows = _small_graph_rows(edges, small_graph_edges)
+    if rows is not None:
+        comp = _union_find(rows)
+        concept_ids = {r["dst"] for r in rows if r["dst"] is not None}
+        canonical: dict[str, str] = {}
+        for c in concept_ids:
+            root = comp[c]
+            canonical[root] = min(c, canonical.get(root, c))
+        return concept_dict.sparkSession.createDataFrame(
+            sorted((c, canonical[comp[c]]) for c in concept_ids),
+            "concept_id string, canonical_id string",
+        )
+    cc = connected_components(edges, small_graph_edges=0)
     concept_comp = (
         concept_dict.select("concept_id")
         .distinct()

@@ -34,10 +34,16 @@ def canonical_triples(
     ``links``: (surface, concept_id, score, method) from jamie_spark.link —
     a vocabulary-sized table, broadcast on both joins so the triple stream
     never shuffles here.
+
+    ``concept_canon`` (dictionary-sized, like the dictionary link.py
+    broadcasts) is broadcast into the ``links`` join too. Neither side has
+    statistics (links come from a checkpoint, the map from driver rows), so
+    without the hint Spark plans a SortMergeJoin and injects a runtime
+    bloom-filter subquery that aggregates the corpus-sized triples.
     """
     typed = "sem_type" in links.columns
     resolved = (
-        links.join(concept_canon, "concept_id", "left")
+        links.join(F.broadcast(concept_canon), "concept_id", "left")
         .select(
             "surface",
             *([F.col("sem_type")] if typed else []),

@@ -1,6 +1,6 @@
 """End-to-end pipeline composition (SURVEY.md §3.2 Spark re-expression).
 
-    pages -> annotate (one mapInPandas) -> mentions + triples
+    pages -> annotate (one mapInArrow) -> mentions + triples
           -> link surfaces (N2/N3) -> canonicalize (N4)
           -> canonical triples -> materialize salted (N5) [+ lineage N6]
 

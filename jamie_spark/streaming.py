@@ -219,8 +219,10 @@ def process_kg_dedup_batch(
         # store like everything else (ADVICE r04)
         short_fallback=True,
     ).persist()
+    keep = None
     try:
         prior = _prior_signatures(spark, store_dir, batch_id)
+        survivors = pages.select("doc_id")
         if prior is not None:
             dups = (
                 textstats.dedup_against_signatures(
@@ -230,9 +232,7 @@ def process_kg_dedup_batch(
                 .select(F.col("new_doc_id").alias("doc_id"))
                 .distinct()
             )
-            survivors = pages.join(dups, "doc_id", "left_anti")
-        else:
-            survivors = pages
+            survivors = survivors.join(dups, "doc_id", "left_anti")
         # INTRA-batch near-dups (a cold-start backlog collapses the whole
         # crawl into micro-batch 0 — prior-history dedup alone would admit
         # every mirror pair inside it): self-match the batch signatures and
@@ -247,17 +247,22 @@ def process_kg_dedup_batch(
             .select(F.col("new_doc_id").alias("doc_id"))
             .distinct()
         )
-        survivors = survivors.join(intra, "doc_id", "left_anti")
+        # the survivor doc_ids feed process_kg_batch's emptiness check, the
+        # extraction and the commit: materialize them once so the prior and
+        # intra probes run once per micro-batch, not three times
+        keep = survivors.join(intra, "doc_id", "left_anti").persist()
+        keep.count()
         process_kg_batch(
-            survivors.drop("doc_id"), batch_id, concept_dict, out_dir
+            pages.join(keep, "doc_id", "left_semi").drop("doc_id"),
+            batch_id, concept_dict, out_dir,
         )
         # commit step: survivors' signatures become history for batch_id + 1
-        new_sig.join(
-            survivors.select("doc_id"), "doc_id", "left_semi"
-        ).write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch={batch_id}")
-        )
+        new_sig.join(keep, "doc_id", "left_semi").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(store_dir, f"batch={batch_id}"))
     finally:
+        if keep is not None:
+            keep.unpersist()
         new_sig.unpersist()
         pages.unpersist()
 

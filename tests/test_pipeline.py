@@ -311,6 +311,67 @@ def test_canonicalization_components(spark, corpus):
     assert rows[cid["肺癌"]] != rows[cid["胃癌"]]
 
 
+def _canon_rows(concept_dict, **kw) -> list:
+    return sorted(
+        map(tuple, canon.canonicalize_concepts(concept_dict, **kw).collect())
+    )
+
+
+def test_canonical_map_driver_equals_star_on_cross_links(spark, corpus):
+    """The driver-built canonical map equals the distributed star path on
+    the fixture dictionary plus cross-link rows: C000090..C000092 chain
+    through shared aliases into 肺癌's concept, and one alias string is
+    another row's concept id (the alias and the id are one vertex)."""
+    cdf = corpus["concepts"]
+    extra = spark.createDataFrame(
+        [
+            ("C000090", "鎖甲", "鎖甲", "Disease"),
+            ("C000090", "鎖甲", "鎖の輪", "Disease"),
+            ("C000091", "鎖乙", "鎖の輪", "Disease"),
+            ("C000091", "鎖乙", "鎖の環", "Disease"),
+            ("C000092", "鎖丙", "鎖の環", "Disease"),
+            ("C000092", "鎖丙", "肺癌", "Disease"),
+            ("C000095", "別名", "C000003", "Disease"),
+        ],
+        cdf.schema,
+    )
+    d = cdf.unionByName(extra)
+    driver = _canon_rows(d)
+    assert driver == _canon_rows(d, small_graph_edges=0)
+    got = dict(driver)
+    assert len(got) == len(driver)  # one row per concept
+    cid = {
+        r["canonical"]: r["concept_id"]
+        for r in cdf.select("canonical", "concept_id").distinct().collect()
+    }
+    assert got["C000090"] == got["C000091"] == got["C000092"] == (
+        got[cid["肺癌"]]
+    )
+    assert got["C000095"] == got["C000003"]
+
+
+def test_canonical_map_null_alias_matches_star(spark, corpus):
+    """A null alias links nothing on either strategy: the driver path used
+    to raise comparing None with a concept id. A concept whose only alias
+    is null maps to itself; a null concept id maps nowhere."""
+    cdf = corpus["concepts"]
+    extra = spark.createDataFrame(
+        [
+            ("C000097", "孤立", None, "Disease"),
+            ("C000005", "欠落", None, "Disease"),
+            (None, "無番号", "肺癌", "Disease"),
+        ],
+        cdf.schema,
+    )
+    d = cdf.unionByName(extra)
+    driver = _canon_rows(d)
+    assert driver == _canon_rows(d, small_graph_edges=0)
+    got = dict(driver)
+    assert got["C000097"] == "C000097"
+    assert None not in got
+    assert got == {**dict(_canon_rows(cdf)), "C000097": "C000097"}
+
+
 def test_full_kg_and_materialization(spark, corpus, tmp_path):
     result = pipeline.run_kg(corpus["pages"], corpus["concepts"])
     canonical = result["canonical_triples"].cache()

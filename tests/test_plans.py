@@ -4,7 +4,7 @@ actually appear in the executed plans (SURVEY.md §4)."""
 import pytest
 from pyspark.sql import functions as F
 
-from jamie_spark import fixtures, infer, link, textstats
+from jamie_spark import fixtures, infer, link, pipeline, textstats
 
 
 def _plan(df) -> str:
@@ -196,3 +196,20 @@ def test_int8_quantization_computed_once_per_row(spark):
             assert "CASE WHEN" not in line, (
                 "quantization re-inlined into a filter:\n" + line.strip()[:400]
             )
+
+
+def test_canonical_triples_plan_has_no_sort_merge_join(spark):
+    """The canonical join must broadcast the canonical map: neither the
+    checkpointed links nor the driver-built map carries statistics, so an
+    un-hinted join is planned as a SortMergeJoin with an injected runtime
+    bloom filter that aggregates the corpus-sized triples."""
+    pages = fixtures.pages_df(spark, 60, seed=11)
+    result = pipeline.run_kg(pages, fixtures.concept_df(spark))
+    canonical = result["canonical_triples"]
+    try:
+        assert canonical.count() > 0
+        plan = _plan(canonical)  # the final adaptive plan, after the action
+        assert "SortMergeJoin" not in plan
+        assert "bloom_filter_agg" not in plan
+    finally:
+        pipeline.release(result)

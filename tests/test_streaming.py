@@ -492,6 +492,41 @@ def test_process_kg_dedup_batch_replay_idempotent(spark, tmp_path):
     assert sig2 == sig1
 
 
+def _persisted_rdds(spark) -> int:
+    """Persistent RDDs, leaving out ``localCheckpoint`` blocks: the
+    ContextCleaner frees those when their plans are garbage-collected, so
+    their count moves with JVM GC timing, not with what a caller released."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(
+        not rdds.get(k).rdd().isLocallyCheckpointed()
+        for k in rdds.keySet().toArray()
+    )
+
+
+def test_process_kg_dedup_batch_releases_its_caches(spark, tmp_path):
+    """A dedup micro-batch with both prior and intra-batch dups leaves no
+    cached RDD behind: the persisted pages, signatures and survivor set
+    are all released, so a long-running stream does not leak cache."""
+    out = str(tmp_path / "out")
+    store = str(tmp_path / "sigstore")
+    concepts = fixtures.concept_df(spark)
+    b0 = fixtures.pages_df(spark, 10, seed=5)
+    streaming.process_kg_dedup_batch(b0, 0, concepts, out, store)
+    fresh = fixtures.pages_df(spark, 6, seed=8).withColumn(
+        "url", F.concat(F.lit("https://fresh.test/"), F.col("url"))
+    )
+    mirrors = fresh.withColumn(
+        "url", F.concat(F.lit("https://mirror.test/"), F.col("url"))
+    )
+    # prior dups: b0 re-crawled; intra dups: each fresh page and its mirror
+    b1 = b0.limit(4).unionByName(fresh).unionByName(mirrors)
+    before = _persisted_rdds(spark)
+    streaming.process_kg_dedup_batch(b1, 1, concepts, out, store)
+    assert _persisted_rdds(spark) == before
+    # both kinds of dup were dropped: only one copy per fresh page commits
+    assert spark.read.parquet(store + "/batch=1").count() == 6
+
+
 def test_stream_dedup_short_pages_not_exempt(spark, tmp_path):
     """ADVICE r04: pages shorter than one char-shingle (< 8 chars) used to
     get no signature row — never entering the store and never deduping.
