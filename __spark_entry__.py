@@ -1921,7 +1921,7 @@ def _concept_edge_values() -> str:
 def _cc_ctes() -> str:
     """Connected-components CTE chain over the alias graph: recursive
     reachability, comp(v) = min reachable vertex (UTF-8 binary MIN in both
-    engines — matching the engine's union-find / min-label-propagation
+    engines — matching the engine's union-find / large-small star
     semantics exactly), then min-concept_id canonicalization. Yields the CTE
     ``canon_map(concept_id, canonical_id)``; must follow a WITH RECURSIVE."""
     return f"""

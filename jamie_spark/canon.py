@@ -1,8 +1,9 @@
 """Canonicalization by connected components over alias edges (N4).
 
 GraphFrames is the first choice on a real cluster (north_star names it); its
-jar is not present in this sandbox, so the engine ships pure-DataFrame
-fallbacks and picks at runtime (SURVEY.md §7 step 6). Physical strategies:
+jar is optional, so the engine ships a pure-DataFrame fallback and picks at
+runtime (SURVEY.md §7 step 6). Physical strategies, chosen from what the
+call can observe:
 
 * driver union-find below ``SMALL_GRAPH_EDGES`` — tiny alias dictionaries
   don't deserve shuffles;
@@ -11,11 +12,8 @@ fallbacks and picks at runtime (SURVEY.md §7 step 6). Physical strategies:
   Components in MapReduce and Beyond") — the distributed default: converges
   in O(log n) rounds regardless of graph diameter, each round two grouped
   aggregations. This is the algorithm that survives adversarial graphs
-  (long alias chains) where naive min-label propagation needs
-  O(diameter) rounds;
-* iterative minimum-label propagation (``algorithm="minlabel"``) — kept as
-  the simple cross-check twin; raises by default if ``max_iter`` is
-  exhausted unconverged.
+  (long alias chains) where naive label propagation needs O(diameter)
+  rounds. It raises if ``CC_MAX_ROUNDS`` pass unconverged.
 
 Alias graphs are usually shallow (a component is one concept's alias star
 plus a few cross-links), but the star algorithm costs the same there and
@@ -43,7 +41,7 @@ def _graphframes_available(spark) -> bool:
         # through reflection, which raises when the jar is absent. Without
         # this, pip-installed graphframes with no spark-packages jar (the
         # common misconfiguration) would take the GraphFrames branch and
-        # crash mid-job instead of falling back to star/minlabel.
+        # crash mid-job instead of falling back to the star rounds.
         # context classloader, not Class.forName: jars added at session
         # start (--packages / spark.jars) live there, not always on the
         # JVM system classpath
@@ -59,6 +57,10 @@ def _graphframes_available(spark) -> bool:
 #: the driver — one job instead of O(diameter) iterations. Same adaptive idea
 #: as Spark's broadcast-join threshold: tiny graphs don't deserve shuffles.
 SMALL_GRAPH_EDGES = 100_000
+
+#: round cap of the distributed star path, which raises when the cap passes
+#: unconverged; the star rounds need O(log n), so 50 leaves wide headroom
+CC_MAX_ROUNDS = 50
 
 
 def _union_find(edge_rows: list) -> dict[str, str]:
@@ -108,9 +110,17 @@ def _checksum(df: "DataFrame") -> tuple[int, int]:
     return row["n"], row["h"]
 
 
-def _star_components(
-    edges: "DataFrame", max_iter: int = 50, on_nonconverged: str = "raise"
-) -> "DataFrame":
+def _endpoints(edges: "DataFrame") -> "DataFrame":
+    """(vertex) — the distinct non-null endpoints of an edge set."""
+    return (
+        edges.select(F.col("src").alias("vertex"))
+        .union(edges.select(F.col("dst").alias("vertex")))
+        .where(F.col("vertex").isNotNull())
+        .distinct()
+    )
+
+
+def _star_components(edges: "DataFrame") -> "DataFrame":
     """Alternating large-star / small-star -> (vertex, component=min vertex).
 
     Each round:
@@ -120,14 +130,10 @@ def _star_components(
         (and u itself) to the minimum — over the oriented set.
     The edge set converges to per-component stars rooted at the minimum
     vertex in O(log n) rounds (Kiveris et al.); convergence is detected by
-    an order-insensitive checksum of the edge set.
+    an order-insensitive checksum of the edge set. A null endpoint links
+    nothing and is no vertex, as in ``_union_find``.
     """
-    verts = (
-        edges.select(F.col("src").alias("vertex"))
-        .union(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = _endpoints(edges).localCheckpoint(eager=True)
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -136,7 +142,7 @@ def _star_components(
     )
     prev = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         if e.isEmpty():
             converged = True
             break
@@ -173,22 +179,13 @@ def _star_components(
             break
         prev = cur
     if not converged:
-        # same contract as the min-label path: an unconverged edge set can
-        # hold several (u -> v) edges per vertex, which would emit duplicate
-        # conflicting (vertex, component) rows — never return that silently.
-        msg = (
-            f"star connected_components did not converge within {max_iter}"
-            " rounds; components are non-canonical"
+        # an unconverged edge set can hold several (u -> v) edges per
+        # vertex, which would emit duplicate conflicting (vertex,
+        # component) rows — never return that silently
+        raise RuntimeError(
+            f"star connected_components did not converge within"
+            f" {CC_MAX_ROUNDS} rounds; components are non-canonical"
         )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        import logging
-
-        logging.getLogger(__name__).warning(msg)
-        # an unconverged star set can hold several (u -> v) rows per vertex;
-        # the caller opted into APPROXIMATE labels, not a shape-invalid
-        # result — reduce to one (minimum) label per vertex.
-        e = e.groupBy("u").agg(F.min("v").alias("v"))
     # converged: e holds (vertex -> component-min) star edges; roots map to
     # themselves, isolated vertices cannot occur (every vertex came from an
     # edge), so coalesce covers exactly the roots.
@@ -202,28 +199,19 @@ def _star_components(
 
 
 def connected_components(
-    edges: "DataFrame",
-    max_iter: int = 25,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
-    on_nonconverged: str = "raise",
-    algorithm: str = "star",
+    edges: "DataFrame", small_graph_edges: int = SMALL_GRAPH_EDGES
 ) -> "DataFrame":
     """edges(src string, dst string) -> (vertex string, component string).
 
     ``component`` is the lexicographic minimum vertex id in the component
-    (deterministic canonical representative). Physical strategy is adaptive:
-    driver-side union-find below ``small_graph_edges`` (the alias dictionary
-    case), GraphFrames when its jar is present, else the distributed
-    ``algorithm``: ``"star"`` (default — O(log n) rounds, diameter-proof) or
-    ``"minlabel"`` (forced in tests via ``small_graph_edges=0`` +
-    ``algorithm=...`` to cross-check the strategies).
-
-    The min-label loop converges in O(component diameter) rounds; if
-    ``max_iter`` is exhausted first the labels are WRONG (some vertices still
-    carry a non-minimal component id). ``on_nonconverged`` decides what
-    happens then: ``"raise"`` (default — canonicalizing with unconverged
-    labels silently corrupts the KG) or ``"warn"`` (log and return, for
-    exploratory use).
+    (deterministic canonical representative); a null endpoint links nothing
+    and is no vertex. Physical strategy is adaptive: driver-side union-find
+    below ``small_graph_edges`` (the alias dictionary case; tests force the
+    distributed path with ``small_graph_edges=0``), GraphFrames when its jar
+    is present, else the star rounds, which raise ``RuntimeError`` if
+    ``CC_MAX_ROUNDS`` pass unconverged (canonicalizing with unconverged
+    labels would silently corrupt the KG). Runs Spark jobs when called:
+    the probe's ``limit+collect``, and the whole star solve.
     """
     spark = edges.sparkSession
     rows = _small_graph_rows(edges, small_graph_edges)
@@ -235,11 +223,7 @@ def connected_components(
     if _graphframes_available(spark):  # pragma: no cover - not in sandbox
         from graphframes import GraphFrame
 
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        vertices = _endpoints(edges).withColumnRenamed("vertex", "id")
         g = GraphFrame(vertices, edges)
         cc = g.connectedComponents()
         # GraphFrames emits arbitrary numeric component ids; every other
@@ -252,63 +236,7 @@ def connected_components(
             F.col("id").alias("vertex"),
             F.col("_minv").cast("string").alias("component"),
         )
-
-    if algorithm == "star":
-        return _star_components(
-            edges, max_iter=max_iter * 2, on_nonconverged=on_nonconverged
-        )
-    if algorithm != "minlabel":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-
-    # undirected closure
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-    )
-    labels = (
-        und.select(F.col("src").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
-    )
-    und = und.localCheckpoint(eager=True)
-    labels = labels.localCheckpoint(eager=True)
-
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            und.join(labels, und["dst"] == labels["vertex"], "inner")
-            .groupBy(F.col("src").alias("vertex"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    "component", F.coalesce("nbr_component", "component")
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_component", "component") < F.col("component")
-                ).alias("changed"),
-            )
-        ).localCheckpoint(eager=True)
-        n_changed = new_labels.where("changed").count()
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"connected_components did not converge within max_iter={max_iter}"
-            " rounds (graph diameter exceeds it); labels are non-canonical"
-        )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        import logging
-
-        logging.getLogger(__name__).warning(msg)
-    return labels
+    return _star_components(edges)
 
 
 def canonicalize_concepts(
@@ -331,6 +259,8 @@ def canonicalize_concepts(
     nothing and a null concept id maps nowhere, exactly as in the
     distributed path. Above the threshold the components come from
     GraphFrames or the star rounds and the map is joined back there.
+    Runs Spark jobs when called: the probe, and above the threshold the
+    solve of :func:`connected_components`.
     """
     edges = concept_dict.select(
         F.col("alias").alias("src"), F.col("concept_id").alias("dst")
@@ -365,7 +295,6 @@ def canonicalize_concepts(
 def incremental_components(
     labels: "DataFrame",
     new_edges: "DataFrame",
-    max_iter: int = 25,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> "DataFrame":
     """Fold a batch of NEW edges into an existing (vertex, component)
@@ -395,7 +324,7 @@ def incremental_components(
          shuffle join for a giant backfill batch, where a forced
          broadcast would OOM the executors. Untouched rows coalesce
          through unchanged; new vertices append with their merged (or
-         own) root.
+         own) root. A null endpoint is no vertex, as in the full solve.
     """
     lab = labels.select("vertex", "component")
     src_c = lab.select(
@@ -421,9 +350,7 @@ def incremental_components(
     )
     # delta solve on the contracted (batch-sized) graph; reuse the adaptive
     # strategy — union-find for dictionary-sized batches, star-CC above
-    delta = connected_components(
-        contracted, max_iter=max_iter, small_graph_edges=small_graph_edges
-    )
+    delta = connected_components(contracted, small_graph_edges=small_graph_edges)
     moved = delta.where(F.col("vertex") != F.col("component")).select(
         F.col("vertex").alias("component"), F.col("component").alias("new_comp")
     )
@@ -436,12 +363,7 @@ def incremental_components(
     )
     # vertices first seen in this batch: their contracted node is themselves
     known = lab.select("vertex")
-    new_vs = (
-        new_edges.select(F.col("src").alias("vertex"))
-        .union(new_edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .join(known, "vertex", "left_anti")
-    )
+    new_vs = _endpoints(new_edges).join(known, "vertex", "left_anti")
     new_rows = (
         new_vs.join(delta, "vertex", "left")
         .select(

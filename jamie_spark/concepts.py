@@ -28,6 +28,19 @@ TAG2NAME = {
     "m-val": "MedicineVal",
 }
 
+
+def sem_type_of(tag_col: str):
+    """Column: the semantic type (``TAG2NAME`` value) of the NER tag in
+    column ``tag_col`` — the one tag -> sem_type mapping shared by the
+    linking keys of ``pipeline.run_kg`` and the canonical join."""
+    from pyspark.sql import functions as F
+
+    tag2sem = F.create_map(
+        *[F.lit(x) for pair in TAG2NAME.items() for x in pair]
+    )
+    return tag2sem[F.col(tag_col)]
+
+
 # modality label -> attribute family, mirroring reference data_objects.py:6-10
 MOD_DICT = {
     "positive": "certainty",

@@ -31,9 +31,11 @@ def canonical_triples(
 ) -> "DataFrame":
     """Resolve subj/obj surfaces -> canonical concept ids.
 
-    ``links``: (surface, concept_id, score, method) from jamie_spark.link —
-    a vocabulary-sized table, broadcast on both joins so the triple stream
-    never shuffles here.
+    ``links``: (surface, sem_type, concept_id, score, method) from
+    jamie_spark.link — a vocabulary-sized table, broadcast on both joins so
+    the triple stream never shuffles here. A mention resolves only through
+    a link of its own semantic type (its tag mapped by
+    ``concepts.sem_type_of``); unresolved surfaces keep themselves as id.
 
     ``concept_canon`` (dictionary-sized, like the dictionary link.py
     broadcasts) is broadcast into the ``links`` join too. Neither side has
@@ -41,50 +43,34 @@ def canonical_triples(
     without the hint Spark plans a SortMergeJoin and injects a runtime
     bloom-filter subquery that aggregates the corpus-sized triples.
     """
-    typed = "sem_type" in links.columns
-    resolved = (
-        links.join(F.broadcast(concept_canon), "concept_id", "left")
-        .select(
-            "surface",
-            *([F.col("sem_type")] if typed else []),
-            F.coalesce("canonical_id", "concept_id").alias("canon_id"),
-        )
-    )
-    if typed:
-        from .concepts import TAG2NAME
+    from .concepts import sem_type_of
 
-        tag2sem = F.create_map(
-            *[F.lit(x) for pair in TAG2NAME.items() for x in pair]
-        )
-        triples = triples.withColumn(
-            "subj_sem", tag2sem[F.col("subj_tag")]
-        ).withColumn("obj_sem", tag2sem[F.col("obj_tag")])
-        subj_keys = ["subj_surface", "subj_sem"]
-        obj_keys = ["obj_surface", "obj_sem"]
-    else:
-        subj_keys = ["subj_surface"]
-        obj_keys = ["obj_surface"]
-    subj = F.broadcast(
-        resolved.select(
-            F.col("surface").alias("subj_surface"),
-            *([F.col("sem_type").alias("subj_sem")] if typed else []),
-            F.col("canon_id").alias("subj_id"),
-        )
+    resolved = links.join(
+        F.broadcast(concept_canon), "concept_id", "left"
+    ).select(
+        "surface",
+        "sem_type",
+        F.coalesce("canonical_id", "concept_id").alias("canon_id"),
     )
-    obj = F.broadcast(
-        resolved.select(
-            F.col("surface").alias("obj_surface"),
-            *([F.col("sem_type").alias("obj_sem")] if typed else []),
-            F.col("canon_id").alias("obj_id"),
+
+    def side(role: str) -> "DataFrame":
+        return F.broadcast(
+            resolved.select(
+                F.col("surface").alias(f"{role}_surface"),
+                F.col("sem_type").alias(f"{role}_sem"),
+                F.col("canon_id").alias(f"{role}_id"),
+            )
         )
-    )
-    out = (
-        triples.join(subj, subj_keys, "left")
-        .join(obj, obj_keys, "left")
+
+    return (
+        triples.withColumn("subj_sem", sem_type_of("subj_tag"))
+        .withColumn("obj_sem", sem_type_of("obj_tag"))
+        .join(side("subj"), ["subj_surface", "subj_sem"], "left")
+        .join(side("obj"), ["obj_surface", "obj_sem"], "left")
         .withColumn("subj_id", F.coalesce("subj_id", F.col("subj_surface")))
         .withColumn("obj_id", F.coalesce("obj_id", F.col("obj_surface")))
+        .drop("subj_sem", "obj_sem")
     )
-    return out.drop("subj_sem", "obj_sem") if typed else out
 
 
 def salted(

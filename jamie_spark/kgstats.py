@@ -186,6 +186,8 @@ def triangles(edges: "DataFrame") -> "DataFrame":
     The wedge join shuffles on the wedge's low vertex; the closing join on
     (y, z) is an equi-join on both endpoints. Output columns are the
     id-sorted triple so the result is orientation-independent.
+
+    Runs one Spark job when called: the eager checkpoint of ``und``.
     """
     # und feeds the closing join AND orient's degree lineage (3+ reads of
     # the raw scan + distinct otherwise; the branches shuffle on different
@@ -243,6 +245,8 @@ def label_propagation(edges: "DataFrame", iters: int = 4) -> "DataFrame":
     overhead when Catalyst can plan 2-3 chained rounds as one job; unbounded
     chaining would instead grow the plan tree superlinearly. Same cadence on
     :func:`pagerank_fixed`.
+
+    Runs Spark jobs when called: the labels are computed here.
     """
     adj = _adjacency(_undirected(edges)).persist()
     nodes = adj.select("node").distinct().persist()
@@ -291,6 +295,8 @@ def neighbor_jaccard(
     power-law graphs should pre-cap hubs (drop or sample neighbors of
     degree > D, exactly like textstats' max_df cap — not applied by default
     because, unlike boilerplate shingles, hubs may be the signal).
+
+    Runs one Spark job when called: the eager checkpoint of ``adj``.
     """
     # adj feeds THREE distinct subplans (deg, both wedge sides) with
     # different shuffle keys — ReuseExchange can't collapse them, so
@@ -353,6 +359,8 @@ def kcore(edges: "DataFrame", k: int = 3, iters: int = 5) -> "DataFrame":
     the whole prior-round subtree per reference — ~3^rounds copies of the
     scan by round 4 (measured 12s vs ~1s on the sf0.1 word graph). The
     per-round barrier is the cheap side of that trade.
+
+    Runs Spark jobs when called: the core is computed here.
     """
     und = _undirected(edges).persist()
     cur = und
@@ -398,57 +406,14 @@ def pagerank_fixed(
     vertex per iteration, i.e. ~1e-9 of mass at the default scale).
 
     Dangling vertices (no out-edges) simply leak their mass, the classic
-    simplified formulation. Each iteration is one join (edges x ranks,
-    shuffled on src) + one aggregation (shuffled on dst); lineage is
-    truncated with an eager localCheckpoint every ``_PR_CHECKPOINT_EVERY``
-    rounds (each is a full materialization barrier — pure overhead when
-    Catalyst can plan a few chained rounds as one job) and once at the end,
-    BEFORE the loop-invariant caches are released. At cluster scale a
-    reliable checkpoint dir serves the same purpose.
+    simplified formulation. Runs as :func:`pagerank_weighted` over the
+    distinct edges at unit weight: with ``w = 1`` its per-edge floor
+    ``(r div W) * w + ((r mod W) * w) div W`` is ``r div out_deg``, so the
+    result is the recurrence above, bit for bit. Runs Spark jobs when
+    called: the ranks are computed here.
     """
-    e = edges.select("src", "dst").distinct()
-    # both loop-invariant inputs are persisted: every iteration re-reads the
-    # vertex set AND the degree-annotated edges — without the cache each
-    # round would re-run the upstream scan + distinct lineage
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    e_deg = e.join(out_deg, "src").persist()
-    base = scale * (100 - damping_num) // 100
-    ranks = nodes.select("node", F.lit(int(scale)).cast("long").alias("rank_fp"))
-    for it in range(iters):
-        contribs = (
-            e_deg.join(ranks, e_deg["src"] == ranks["node"])
-            .select(
-                F.col("dst"),
-                F.expr("rank_fp div out_deg").alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(int(base))
-                    + _damped(damping_num, "coalesce(in_mass, 0L)")
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if (it + 1) % _PR_CHECKPOINT_EVERY == 0 and it + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    ranks = ranks.localCheckpoint(eager=True)
-    e_deg.unpersist()
-    nodes.unpersist()
-    return ranks
-
-
-_PR_WEIGHTED_CHECKPOINT_EVERY = 3
+    unit = edges.select("src", "dst").distinct().withColumn("w", F.lit(1))
+    return pagerank_weighted(unit, iters, damping_num, scale)
 
 
 def pagerank_weighted(
@@ -456,7 +421,6 @@ def pagerank_weighted(
     iters: int = 5,
     damping_num: int = 85,
     scale: int = PR_SCALE,
-    weight_col: str = "w",
 ) -> "DataFrame":
     """Fixed-point integer PageRank over a WEIGHTED multigraph
     (src, dst, w): each vertex pushes ``rank * w(e) DIV w_out(src)`` per
@@ -471,14 +435,21 @@ def pagerank_weighted(
     ``(rank * w) div W == (rank div W) * w + ((rank mod W) * w) div W``
     so intermediate products stay below ``W * max_w`` instead of
     ``rank * max_w`` (safe while a vertex's total out-weight squared fits
-    int64, i.e. out-weight < ~3e9 — pre-bucket heavier weights). Loop
-    shape is identical: one join + one aggregation per iteration,
-    localCheckpoint every ``_PR_WEIGHTED_CHECKPOINT_EVERY`` rounds to
-    truncate lineage.
+    int64, i.e. out-weight < ~3e9 — pre-bucket heavier weights).
+
+    Each iteration is one join (edges x ranks, shuffled on src) + one
+    aggregation (shuffled on dst); lineage is truncated with an eager
+    localCheckpoint every ``_PR_CHECKPOINT_EVERY`` rounds (each is a full
+    materialization barrier — pure overhead when Catalyst can plan a few
+    chained rounds as one job) and once at the end, BEFORE the
+    loop-invariant caches are released. At cluster scale a reliable
+    checkpoint dir serves the same purpose. Runs Spark jobs when called:
+    the ranks are computed here.
     """
-    e = edges.groupBy("src", "dst").agg(
-        F.sum(weight_col).cast("long").alias("w")
-    )
+    e = edges.groupBy("src", "dst").agg(F.sum("w").cast("long").alias("w"))
+    # both loop-invariant inputs are persisted: every iteration re-reads the
+    # vertex set AND the weight-annotated edges — without the cache each
+    # round would re-run the upstream scan + aggregation lineage
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -514,7 +485,7 @@ def pagerank_weighted(
                 ).cast("long").alias("rank_fp"),
             )
         )
-        if (it + 1) % _PR_WEIGHTED_CHECKPOINT_EVERY == 0 and it + 1 < iters:
+        if (it + 1) % _PR_CHECKPOINT_EVERY == 0 and it + 1 < iters:
             ranks = ranks.localCheckpoint(eager=True)
     ranks = ranks.localCheckpoint(eager=True)
     e_deg.unpersist()
@@ -553,6 +524,8 @@ def bfs_distances(
 
     Engine-portable by construction (set arithmetic only, no floats), so the
     driver oracle replays it as a depth-capped recursive CTE with MIN(d).
+
+    Runs Spark jobs when called: the distances are computed here.
     """
     e = edges.select("src", "dst").distinct().persist()
     spark = edges.sparkSession
@@ -647,6 +620,9 @@ def negative_sample(
     broadcast limits) and a left-anti join against the positive set.
     ``n_entities`` skips the vocab count when the caller already knows it
     (same contract as sim's ``n_rows``).
+
+    Runs Spark jobs when called: the eager checkpoints of ``t`` and ``ent``,
+    and the vocab count unless ``n_entities`` is given.
     """
     if k <= 0:
         # k=0 means "no negatives", not sequence(0, -1) — Spark's sequence

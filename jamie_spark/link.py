@@ -103,12 +103,12 @@ def link_surfaces(
     fuzzy: str = "broadcast",
     materialize: bool = True,
 ) -> "DataFrame":
-    """(surface[, sem_type]) x dictionary -> (surface, concept_id, score, method).
+    """(surface, sem_type) x dictionary -> (surface, sem_type, concept_id,
+    score, method).
 
-    ``surfaces`` needs a ``surface`` column; if it also carries ``sem_type``,
-    candidates are restricted to dictionary rows of the same semantic family —
-    without this an anatomy mention like 肺 happily fuzzy-matches the disease
-    肺癌 (observed in verification).
+    Candidates are restricted to dictionary rows of the surface's semantic
+    family — without this an anatomy mention like 肺 happily fuzzy-matches
+    the disease 肺癌 (observed in verification).
 
     ``fuzzy`` picks the candidate-generation strategy for surfaces that miss
     the exact join:
@@ -130,9 +130,8 @@ def link_surfaces(
       dictionary needs sub-0.3 matches at LSH scale.
     """
     strategy = fuzzy  # `fuzzy` is rebound to the candidate frame below
-    typed = "sem_type" in surfaces.columns
-    surf_cols = ["surface"] + (["sem_type"] if typed else [])
-    surf = surfaces.select(*surf_cols).distinct()
+    keys = ["surface", "sem_type"]
+    surf = surfaces.select(*keys).distinct()
     if materialize:
         # vocabulary-sized and scanned by three branches (exact, anti-join,
         # fuzzy) — persist so the upstream corpus-sized plan runs exactly
@@ -146,13 +145,14 @@ def link_surfaces(
         "sem_type",
     ).distinct()
 
-    exact_cond = surf["surface"] == dic["alias_norm"]
-    if typed:
-        exact_cond = exact_cond & (surf["sem_type"] == dic["sem_type"])
-
     # exact path: broadcast equi-join
-    exact = surf.join(F.broadcast(dic), exact_cond, "inner").select(
-        *[surf[c].alias(c) for c in surf_cols],
+    exact = surf.join(
+        F.broadcast(dic),
+        (surf["surface"] == dic["alias_norm"])
+        & (surf["sem_type"] == dic["sem_type"]),
+        "inner",
+    ).select(
+        *[surf[c].alias(c) for c in keys],
         "concept_id",
         F.lit(1.0).alias("score"),
         F.lit("exact").alias("method"),
@@ -160,51 +160,35 @@ def link_surfaces(
 
     # fuzzy path for the misses only
     dic_surfaces = dic.select(
-        F.col("alias_norm").alias("surface"),
-        *([F.col("sem_type")] if typed else []),
+        F.col("alias_norm").alias("surface"), "sem_type"
     ).distinct()
-    missed = surf.join(F.broadcast(dic_surfaces), surf_cols, "left_anti")
+    missed = surf.join(F.broadcast(dic_surfaces), keys, "left_anti")
     d_grams = _with_grams(dic.withColumnRenamed("alias_norm", "alias"), "alias")
     m_grams = _with_grams(missed, "surface")
+    same_type = F.col("m.sem_type") == F.col("d.sem_type")
     if fuzzy == "broadcast":
-        cand_cond = F.lit(True)
-        if typed:
-            cand_cond = F.col("m.sem_type") == F.col("d.sem_type")
-        cand = (
-            m_grams.alias("m")
-            .join(F.broadcast(d_grams.alias("d")), cand_cond)
-            .select(
-                F.col("m.surface").alias("surface"),
-                *([F.col("m.sem_type").alias("sem_type")] if typed else []),
-                F.col("m.grams").alias("s_grams"),
-                F.col("d.concept_id").alias("concept_id"),
-                F.col("d.alias").alias("alias"),
-                F.col("d.grams").alias("a_grams"),
-            )
+        pairs = m_grams.alias("m").join(
+            F.broadcast(d_grams.alias("d")), same_type
         )
     elif fuzzy == "minhash":
-        m_bands = _with_bands(m_grams)
-        d_bands = _with_bands(d_grams)
         band_cond = (F.col("m.band.band_id") == F.col("d.band.band_id")) & (
             F.col("m.band.band_key") == F.col("d.band.band_key")
         )
-        if typed:
-            band_cond = band_cond & (F.col("m.sem_type") == F.col("d.sem_type"))
-        cand = (
-            m_bands.alias("m")
-            .join(F.broadcast(d_bands.alias("d")), band_cond)
-            .select(
-                F.col("m.surface").alias("surface"),
-                *([F.col("m.sem_type").alias("sem_type")] if typed else []),
-                F.col("m.grams").alias("s_grams"),
-                F.col("d.concept_id").alias("concept_id"),
-                F.col("d.alias").alias("alias"),
-                F.col("d.grams").alias("a_grams"),
-            )
-            .dropDuplicates(surf_cols + ["concept_id", "alias"])
+        pairs = _with_bands(m_grams).alias("m").join(
+            F.broadcast(_with_bands(d_grams).alias("d")), band_cond & same_type
         )
     else:
         raise ValueError(f"unknown fuzzy strategy: {fuzzy}")
+    cand = pairs.select(
+        F.col("m.surface").alias("surface"),
+        F.col("m.sem_type").alias("sem_type"),
+        F.col("m.grams").alias("s_grams"),
+        F.col("d.concept_id").alias("concept_id"),
+        F.col("d.alias").alias("alias"),
+        F.col("d.grams").alias("a_grams"),
+    )
+    if fuzzy == "minhash":
+        cand = cand.dropDuplicates(keys + ["concept_id", "alias"])
     fuzzy = cand.withColumn(
         "score",
         F.size(F.array_intersect("s_grams", "a_grams"))
@@ -212,13 +196,13 @@ def link_surfaces(
     ).where(F.col("score") >= min_jaccard).select(
         # method reports the strategy that actually produced the candidate
         # (was hardcoded 'minhash' even on the broadcast path)
-        *surf_cols, "concept_id", "score", F.lit(strategy).alias("method")
+        *keys, "concept_id", "score", F.lit(strategy).alias("method")
     )
 
     candidates = exact.unionByName(fuzzy)
 
-    # N3 rerank: top-1 per (surface[, sem_type]), deterministic tie-break
-    w = Window.partitionBy(*surf_cols).orderBy(
+    # N3 rerank: top-1 per (surface, sem_type), deterministic tie-break
+    w = Window.partitionBy(*keys).orderBy(
         F.desc("score"), F.asc("concept_id"), F.asc("method")
     )
     return (

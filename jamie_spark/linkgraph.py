@@ -224,6 +224,9 @@ def crawl_frontier(
     the quota walk is the shared two-phase prefix sum with unit weights —
     per-host slot numbers without a single-task host sort (a top host's
     candidate list IS a hot key at crawl scale).
+
+    Runs Spark jobs when called: the ranks (and so the link extraction)
+    and the eager checkpoint of the gated candidate set.
     """
     from . import kgstats, textstats
 

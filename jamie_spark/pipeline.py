@@ -58,7 +58,7 @@ def run_kg(
     ``numpy:<dir>``, ``torch:<dir>``) — resolved driver-side and shipped by
     closure, same contract as infer.annotate_pages_flat.
     """
-    from .concepts import TAG2NAME
+    from .concepts import sem_type_of
 
     if checkpoint_dir is not None:
         spark = pages.sparkSession
@@ -79,18 +79,15 @@ def run_kg(
         "triples": mentions_mod.triples_from_flat(flat),
     }
     triples = ext["triples"]
-    tag2sem = F.create_map(
-        *[F.lit(x) for pair in TAG2NAME.items() for x in pair]
-    )
     surfaces = (
         triples.select(
             F.col("subj_surface").alias("surface"),
-            tag2sem[F.col("subj_tag")].alias("sem_type"),
+            sem_type_of("subj_tag").alias("sem_type"),
         )
         .union(
             triples.select(
                 F.col("obj_surface").alias("surface"),
-                tag2sem[F.col("obj_tag")].alias("sem_type"),
+                sem_type_of("obj_tag").alias("sem_type"),
             )
         )
         .distinct()

@@ -302,6 +302,8 @@ def ngram_jaccard_pairs(
     The filtered stream feeds three branches (both join sides + the size
     table) with different shuffle keys; it is materialized once so the
     corpus explode + distinct + df-cap runs once, not per branch.
+
+    Runs one Spark job when called: that eager checkpoint of ``sh``.
     """
     sh = _filtered_shingles(docs, n, max_df).localCheckpoint(eager=True)
     # the posting-list self-join must SHUFFLE on the shingle key: the
@@ -509,7 +511,10 @@ def dedup_against_signatures(
     so a replayed micro-batch never dedups against its own signatures).
     Pass ``new_sig`` (from :func:`minhash_signature_table`) to reuse an
     already-computed batch signature table instead of re-shingling
-    ``new_docs``."""
+    ``new_docs``.
+
+    Without ``new_sig`` this runs one Spark job when called: the eager
+    checkpoint of the batch signature table."""
     if max_bucket is None:
         max_bucket = MAX_BAND_BUCKET
     if new_sig is None:
@@ -605,6 +610,8 @@ def minhash_pairs(
     ``MAX_BAND_BUCKET``), bounding candidate volume at
     ``n_bands * corpus`` even under power-law boilerplate. Both bucket-size
     classes come off ONE windowed shuffle on (band_id, band_key).
+
+    Runs one Spark job when called: the eager checkpoint of ``ranked``.
     """
     from pyspark.sql import Window
 
@@ -666,6 +673,9 @@ def near_dup_pairs(
     df-capped verify universe, and the size table (previously three
     independent corpus explodes — branches with different shuffle keys
     that ReuseExchange cannot collapse).
+
+    Runs Spark jobs when called: the eager checkpoints of both shingle
+    streams and the one inside :func:`minhash_pairs`.
     """
     sh_all = _distinct_shingles(docs, n).localCheckpoint(eager=True)
     cand = minhash_pairs(docs, n, sh=sh_all)

@@ -198,8 +198,9 @@ def test_per_label_counts_null_safe(spark):
 
 def test_linking_exact_and_fuzzy(spark, corpus):
     surfaces = spark.createDataFrame(
-        [("肺癌",), ("アスピリン",), ("肺がん",), ("はいえん",), ("ワーファリン",)],
-        "surface string",
+        [("肺癌", "Disease"), ("アスピリン", "Remedy"), ("肺がん", "Disease"),
+         ("はいえん", "Disease"), ("ワーファリン", "Remedy")],
+        "surface string, sem_type string",
     )
     links = link.link_surfaces(surfaces, corpus["concepts"]).collect()
     by_surface = {r["surface"]: r for r in links}
@@ -216,7 +217,9 @@ def test_linking_fuzzy_minhash(spark, corpus):
     (fuzzy='minhash' requested explicitly — the method column reports the
     strategy that actually ran; it used to say 'minhash' even on the
     default broadcast path)."""
-    surfaces = spark.createDataFrame([("アスピリン錠剤",)], "surface string")
+    surfaces = spark.createDataFrame(
+        [("アスピリン錠剤", "Remedy")], "surface string, sem_type string"
+    )
     links = link.link_surfaces(
         surfaces, corpus["concepts"], fuzzy="minhash"
     ).collect()
@@ -233,46 +236,45 @@ def test_linking_fuzzy_minhash(spark, corpus):
 
 
 def test_canonicalization_distributed_equals_unionfind(spark, corpus):
-    """All physical strategies (driver union-find / large-small star /
-    min-label propagation) produce identical components."""
+    """The driver union-find and the large-small star strategies produce
+    identical components."""
     edges = corpus["concepts"].select(
         F.col("alias").alias("src"), F.col("concept_id").alias("dst")
     ).distinct()
     key = lambda r: (r["vertex"], r["component"])  # noqa: E731
     fast = sorted(map(key, canon.connected_components(edges).collect()))
     star = sorted(map(key, canon.connected_components(
-        edges, small_graph_edges=0, algorithm="star").collect()))
-    minl = sorted(map(key, canon.connected_components(
-        edges, small_graph_edges=0, algorithm="minlabel").collect()))
-    assert fast == star == minl
+        edges, small_graph_edges=0).collect()))
+    assert fast == star
 
 
-def test_star_components_solve_deep_graphs(spark):
-    """A 120-vertex path (diameter 119): min-label propagation exhausts
-    max_iter=25 and raises; the star algorithm converges in O(log n) rounds
-    — the diameter failure mode is gone at any scale."""
+def test_star_components_solve_deep_graphs(spark, monkeypatch):
+    """A 120-vertex path (diameter 119): the star algorithm converges in
+    O(log n) rounds, where label propagation would need 119 — the diameter
+    failure mode is gone at any scale. Cut short of convergence, it raises
+    instead of returning non-canonical labels."""
     n = 120
     edges = spark.createDataFrame(
         [(f"v{i:03d}", f"v{i + 1:03d}") for i in range(n - 1)],
         "src string, dst string",
     )
-    with pytest.raises(RuntimeError):
-        canon.connected_components(
-            edges, small_graph_edges=0, algorithm="minlabel", max_iter=25
-        ).collect()
     got = {
         r["vertex"]: r["component"]
         for r in canon.connected_components(
-            edges, small_graph_edges=0, algorithm="star"
+            edges, small_graph_edges=0
         ).collect()
     }
     assert len(got) == n
     assert set(got.values()) == {"v000"}
+    monkeypatch.setattr(canon, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        canon.connected_components(edges, small_graph_edges=0)
 
 
 def test_star_components_random_graph_vs_unionfind(spark):
     """Star components == union-find ground truth on a seeded random graph
-    with several components and cycles."""
+    with several components and cycles, plus null-endpoint edges (they link
+    nothing; the null is no vertex, the non-null end still is one)."""
     import random
 
     rng = random.Random(13)
@@ -283,12 +285,13 @@ def test_star_components_random_graph_vs_unionfind(spark):
             edges.append((members[i], members[rng.randrange(i)]))
         for _ in range(len(members) // 3):  # extra cycle edges
             edges.append((rng.choice(members), rng.choice(members)))
+    edges += [("c0_00", None), (None, "lone")]
     df = spark.createDataFrame(edges, "src string, dst string")
     truth = canon._union_find([{"src": a, "dst": b} for a, b in edges])
     got = {
         r["vertex"]: r["component"]
         for r in canon.connected_components(
-            df, small_graph_edges=0, algorithm="star"
+            df, small_graph_edges=0
         ).collect()
     }
     # union-find may include self-loop-only vertices identically
@@ -622,7 +625,8 @@ def test_incremental_components_equals_full_recompute(spark):
     """Folding an edge batch into existing labels == full CC over the union,
     on a seeded random graph where the batch merges components, extends
     them with new vertices, adds batch-only components, and lands edges
-    INSIDE existing components (no-ops). Distributed star path forced."""
+    INSIDE existing components (no-ops), plus a null-endpoint edge (links
+    nothing, adds no vertex). Distributed star path forced."""
     import random
 
     rng = random.Random(4052)
@@ -638,27 +642,27 @@ def test_incremental_components_equals_full_recompute(spark):
     batch += [
         ("g0_00", "g1_00"), ("g2_01", "g3_02"),
         ("g4_00", "new_a"), ("new_a", "new_b"),
-        ("island_x", "island_y"),
+        ("island_x", "island_y"), ("island_y", None),
     ]
     base_df = spark.createDataFrame(base, "src string, dst string")
     batch_df = spark.createDataFrame(batch, "src string, dst string")
-    labels = canon.connected_components(
-        base_df, small_graph_edges=0, algorithm="star"
-    )
+    labels = canon.connected_components(base_df, small_graph_edges=0)
     got = sorted(
-        (r["vertex"], r["component"])
-        for r in canon.incremental_components(
-            labels, batch_df, small_graph_edges=0
-        ).collect()
+        ((r["vertex"], r["component"])
+         for r in canon.incremental_components(
+             labels, batch_df, small_graph_edges=0
+         ).collect()),
+        key=str,
     )
     want = sorted(
-        (r["vertex"], r["component"])
-        for r in canon.connected_components(
-            base_df.unionByName(batch_df), small_graph_edges=0,
-            algorithm="star",
-        ).collect()
+        ((r["vertex"], r["component"])
+         for r in canon.connected_components(
+             base_df.unionByName(batch_df), small_graph_edges=0
+         ).collect()),
+        key=str,
     )
-    assert got == want
+    truth = canon._union_find([{"src": a, "dst": b} for a, b in base + batch])
+    assert got == want == sorted(truth.items(), key=str)
 
 
 def test_incremental_components_batch_only_touches_batch(spark):

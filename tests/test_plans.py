@@ -45,7 +45,9 @@ def test_column_pruning_reaches_scan(spark, tmp_path):
 def test_dictionary_join_is_broadcast(spark):
     """Entity linking must broadcast the dictionary, never shuffle the
     mention side."""
-    surfaces = spark.createDataFrame([("肺癌",)], "surface string")
+    surfaces = spark.createDataFrame(
+        [("肺癌", "Disease")], "surface string, sem_type string"
+    )
     links = link.link_surfaces(surfaces, fixtures.concept_df(spark))
     plan = _plan(links)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
