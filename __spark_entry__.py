@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from jamie_spark import canon, eval as jeval, fixtures, graph, pipeline, sim, textstats
 from jamie_spark import search as search_mod
 from jamie_spark.concepts import MOD_DICT
+from jamie_spark.frames import local_frame
 from jamie_spark.textstats import LANG_MARKERS, LANG_PRIORITY, STOPWORDS
 
 
@@ -125,7 +126,7 @@ _KG_DICT = [
 def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dictionary mention extraction over documents (S2/B3 analog, SQL form)."""
     docs = _docs(spark, sf_dir)
-    d = spark.createDataFrame(_KG_DICT, "surface string, tag string")
+    d = local_frame(spark, _KG_DICT, "surface string, tag string")
     words = docs.select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("pos0", "surface"),
@@ -175,7 +176,7 @@ def _kg_link_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.length("w") >= 2)
         .distinct()
     )
-    concepts = spark.createDataFrame(_LINK_CONCEPTS, "concept_id string, term string")
+    concepts = local_frame(spark, _LINK_CONCEPTS, "concept_id string, term string")
     bigrams = "transform(sequence(1, length({c}) - 1), i -> substring({c}, i, 2))"
     w_bg = words.select(
         "w",

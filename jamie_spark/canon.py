@@ -6,7 +6,9 @@ runtime (SURVEY.md §7 step 6). Physical strategies, chosen from what the
 call can observe:
 
 * driver union-find below ``SMALL_GRAPH_EDGES`` — tiny alias dictionaries
-  don't deserve shuffles;
+  don't deserve shuffles; the result goes back to Spark as a local relation
+  built through Arrow (:func:`frames.local_frame`), a ``LocalTableScan``
+  that runs no Python task when it is read or broadcast;
 * GraphFrames ``connectedComponents`` when the jar is present;
 * **alternating large-star / small-star** (Kiveris et al., "Connected
   Components in MapReduce and Beyond") — the distributed default: converges
@@ -27,6 +29,8 @@ from __future__ import annotations
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
+
+from .frames import local_frame
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -216,7 +220,8 @@ def connected_components(
     spark = edges.sparkSession
     rows = _small_graph_rows(edges, small_graph_edges)
     if rows is not None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(_union_find(rows).items()),
             "vertex string, component string",
         )
@@ -253,12 +258,14 @@ def canonicalize_concepts(
     Below ``small_graph_edges`` alias edges (the dictionary case) the final
     map is built on the driver from the one ``limit+collect`` of the edges
     the strategy probe already runs: union-find, then the min concept id per
-    component. The result is a frame of driver rows with no dictionary scan
-    or join left in its plan, so every consumer (both broadcast builds of
-    ``graph.canonical_triples``) reads the finished map. A null alias links
-    nothing and a null concept id maps nowhere, exactly as in the
-    distributed path. Above the threshold the components come from
-    GraphFrames or the star rounds and the map is joined back there.
+    component. The result is a local relation built through Arrow (a
+    ``LocalTableScan``, evaluated by the JVM with no Python task) with no
+    dictionary scan or join left in its plan, so every consumer (both
+    broadcast builds of ``graph.canonical_triples``) reads the finished
+    map. A null alias links nothing and a null concept id maps nowhere,
+    exactly as in the distributed path. Above the threshold the components
+    come from GraphFrames or the star rounds and the map is joined back
+    there.
     Runs Spark jobs when called: the probe, and above the threshold the
     solve of :func:`connected_components`.
     """
@@ -273,7 +280,8 @@ def canonicalize_concepts(
         for c in concept_ids:
             root = comp[c]
             canonical[root] = min(c, canonical.get(root, c))
-        return concept_dict.sparkSession.createDataFrame(
+        return local_frame(
+            concept_dict.sparkSession,
             sorted((c, canonical[comp[c]]) for c in concept_ids),
             "concept_id string, canonical_id string",
         )

@@ -37,6 +37,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from .frames import local_frame
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
@@ -529,9 +531,7 @@ def bfs_distances(
     """
     e = edges.select("src", "dst").distinct().persist()
     spark = edges.sparkSession
-    settled = spark.createDataFrame(
-        [(source, 0)], schema="node string, dist int"
-    ).withColumn("dist", F.col("dist").cast("long"))
+    settled = local_frame(spark, [(source, 0)], "node string, dist long")
     frontier = settled.select("node")
     for hop in range(1, max_hops + 1):
         # materialize the frontier ONCE per round: it is consumed three

@@ -28,6 +28,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from .frames import local_frame
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
 
@@ -57,7 +59,7 @@ def read_lineage(spark: "SparkSession", base: str) -> "DataFrame":
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return spark.createDataFrame([], schema=LINEAGE_DDL)
+            return local_frame(spark, [], LINEAGE_DDL)
         raise
 
 
@@ -78,12 +80,19 @@ def pending_buckets(
     kept ``bucket=N`` data dirs no longer mean what the new bucket list
     means — documents would silently duplicate (reprocessed under a new
     bucket id while the old dir remains) or drop. Same contract as the
-    search index's stats-row validation."""
-    lin = read_lineage(spark, base).where(F.col("stage") == stage)
-    moduli = {
-        r["n_buckets"]
-        for r in lin.select("n_buckets").distinct().collect()
-    }
+    search index's stats-row validation.
+
+    One Spark job: the distinct (n_buckets, model_version, bucket) rows of
+    the stage are collected once; the modulus check and the model filter
+    run on the driver."""
+    ledger = (
+        read_lineage(spark, base)
+        .where(F.col("stage") == stage)
+        .select("n_buckets", "model_version", "bucket")
+        .distinct()
+        .collect()
+    )
+    moduli = {r["n_buckets"] for r in ledger}
     if moduli - {None, n_buckets}:
         raise ValueError(
             f"lineage at {base!r} (stage {stage!r}) was written with "
@@ -91,9 +100,11 @@ def pending_buckets(
             f"resume must use the same modulus, not {n_buckets} "
             "(or start a fresh out dir)"
         )
-    if model_version is not None:
-        lin = lin.where(F.col("model_version") == model_version)
-    done = {r["bucket"] for r in lin.select("bucket").distinct().collect()}
+    done = {
+        r["bucket"]
+        for r in ledger
+        if model_version is None or r["model_version"] == model_version
+    }
     return [b for b in range(n_buckets) if b not in done]
 
 
@@ -116,21 +127,13 @@ def append_lineage_row(
     triple_count: int,
     n_buckets: int | None = None,
 ) -> None:
-    row = [
-        {
-            "stage": stage,
-            "bucket": bucket,
-            "n_buckets": n_buckets,
-            "url_min": url_min,
-            "url_max": url_max,
-            "model_version": model_version,
-            "row_count": row_count,
-            "triple_count": triple_count,
-        }
-    ]
+    row = (
+        stage, bucket, n_buckets, url_min, url_max, model_version,
+        row_count, triple_count,
+    )
     with _APPEND_LOCK:
         (
-            spark.createDataFrame(row, schema=LINEAGE_DDL.rsplit(",", 1)[0])
+            local_frame(spark, [row], LINEAGE_DDL.rsplit(",", 1)[0])
             .withColumn("completed_at", F.current_timestamp())
             .coalesce(1)
             .write.mode("append")

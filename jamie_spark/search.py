@@ -24,6 +24,8 @@ from typing import TYPE_CHECKING, Sequence
 
 from pyspark.sql import functions as F
 
+from .frames import local_frame
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
@@ -181,7 +183,7 @@ def search_index(
     bucket_of = {t: None for t in terms}
     # same hash the writer used, evaluated cheaply on a literal frame
     for row in (
-        spark.createDataFrame([(t,) for t in terms], "term string")
+        local_frame(spark, [(t,) for t in terms], "term string")
         .select("term", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("b"))
         .collect()
     ):

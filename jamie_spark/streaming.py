@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from . import pipeline
 from .fixtures import PAGES_DDL
+from .frames import local_frame
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -82,7 +83,15 @@ def process_kg_batch(
     """
     if batch_df.isEmpty():
         return
-    result = pipeline.run_kg(batch_df, concept_dict)
+    _write_kg_batch(batch_df, batch_id, concept_dict, out_dir)
+
+
+def _write_kg_batch(
+    pages: "DataFrame", batch_id: int, concept_dict: "DataFrame", out_dir: str
+) -> None:
+    """Extract and overwrite ``out_dir/batch={batch_id}`` from non-empty
+    ``pages``; callers check emptiness, each with the probe it already has."""
+    result = pipeline.run_kg(pages, concept_dict)
     from . import graph
 
     (
@@ -222,7 +231,10 @@ def process_kg_dedup_batch(
     keep = None
     try:
         prior = _prior_signatures(spark, store_dir, batch_id)
-        survivors = pages.select("doc_id")
+        # a null url has no doc_id and the semi-joins below never extract
+        # it; leaving it out makes the survivor count an exact emptiness
+        # check of the extraction input
+        survivors = pages.select("doc_id").dropna()
         if prior is not None:
             dups = (
                 textstats.dedup_against_signatures(
@@ -247,15 +259,16 @@ def process_kg_dedup_batch(
             .select(F.col("new_doc_id").alias("doc_id"))
             .distinct()
         )
-        # the survivor doc_ids feed process_kg_batch's emptiness check, the
-        # extraction and the commit: materialize them once so the prior and
-        # intra probes run once per micro-batch, not three times
+        # the survivor doc_ids feed the emptiness check, the extraction and
+        # the commit: materialize them once so the prior and intra probes
+        # run once per micro-batch, not three times; the count is the
+        # emptiness check, so the extraction needs no probe of its own
         keep = survivors.join(intra, "doc_id", "left_anti").persist()
-        keep.count()
-        process_kg_batch(
-            pages.join(keep, "doc_id", "left_semi").drop("doc_id"),
-            batch_id, concept_dict, out_dir,
-        )
+        if keep.count():
+            _write_kg_batch(
+                pages.join(keep, "doc_id", "left_semi").drop("doc_id"),
+                batch_id, concept_dict, out_dir,
+            )
         # commit step: survivors' signatures become history for batch_id + 1
         new_sig.join(keep, "doc_id", "left_semi").write.mode(
             "overwrite"
@@ -382,8 +395,8 @@ def host_graph_totals(spark: "SparkSession", store_dir: str) -> "DataFrame":
     if k is not None:
         paths.append(dict(bases)[k])
     if not paths:
-        return spark.createDataFrame(
-            [], "src_host string, dst_host string, n_links long"
+        return local_frame(
+            spark, [], "src_host string, dst_host string, n_links long"
         )
     return (
         spark.read.parquet(*paths)

@@ -24,6 +24,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .frames import local_frame
+
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
@@ -1174,7 +1176,7 @@ def cms_estimate(
     the preserved side is silently ignored and falls back to a sort-merge
     join). Point queries touch the sketch only, never the raw data."""
     spark = sketch.sparkSession
-    kdf = spark.createDataFrame([(k,) for k in keys], "k string")
+    kdf = local_frame(spark, [(k,) for k in keys], "k string")
     probes = kdf.select(
         "k",
         F.explode(

@@ -721,3 +721,23 @@ def test_stream_link_hosts_end_to_end(spark, staged_corpus, tmp_path):
     q.awaitTermination(300)
     ref = linkgraph.host_graph(linkgraph.extract_links(pages))
     assert _hosts_equal(streaming.host_graph_totals(spark, store), ref)
+
+
+def test_process_kg_dedup_batch_null_url_only_extracts_nothing(spark, tmp_path):
+    """A page with a null url has no doc_id, so the survivor semi-join can
+    never extract it: a batch of only such pages writes no triples
+    partition (the survivor count is the extraction's emptiness check) and
+    commits no signature."""
+    import os
+
+    out = str(tmp_path / "out")
+    store = str(tmp_path / "sigstore")
+    batch = spark.createDataFrame(
+        [(None, None, None, "昨日、左肺に肺癌を認める。", "ja")],
+        fixtures.PAGES_DDL,
+    )
+    streaming.process_kg_dedup_batch(
+        batch, 0, fixtures.concept_df(spark), out, store
+    )
+    assert not os.path.exists(os.path.join(out, "batch=0"))
+    assert spark.read.parquet(store + "/batch=0").count() == 0
