@@ -20,7 +20,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jamie_spark import canon, eval as jeval, fixtures, graph, pipeline, sim, textstats
+from jamie_spark import (
+    canon, eval as jeval, fixtures, graph, link, pipeline, sim, textstats,
+)
 from jamie_spark import search as search_mod
 from jamie_spark.concepts import MOD_DICT
 from jamie_spark.frames import local_frame
@@ -2371,7 +2373,7 @@ def _kg_pipeline_oracle_sql(
 ) -> str:
     """The ENTIRE fixture KG pipeline re-expressed in DuckDB SQL: sentence
     split + pinned tokenizer (as RE2), greedy dictionary NER, the stand-in
-    relation grammar, sem_type-restricted exact+Dice linking with top-1
+    relation grammar, sem_type-restricted exact+Jaccard linking with top-1
     rerank, connected-component canonicalization. Only the INPUT corpus is
     inlined (VALUES rendered from the same deterministic generator the Spark
     entry calls); every transformation is computed by DuckDB.
@@ -2526,12 +2528,12 @@ dgg AS (
     FROM (SELECT DISTINCT concept_id, alias_norm, sem_type FROM dic)
 ),
 fz AS (
-    SELECT surface, sem, concept_id, score, 'minhash' AS method FROM (
+    SELECT surface, sem, concept_id, score, 'broadcast' AS method FROM (
         SELECT mg.surface, mg.sem, dgg.concept_id,
                CAST(len(list_intersect(mg.g, dgg.g)) AS DOUBLE)
                  / (len(mg.g) + len(dgg.g) - len(list_intersect(mg.g, dgg.g))) AS score
         FROM mg JOIN dgg ON mg.sem = dgg.sem_type
-    ) WHERE score >= 0.10
+    ) WHERE score >= {link.MIN_JACCARD}
 ),
 cand AS (SELECT * FROM exact UNION ALL SELECT * FROM fz),
 links AS (

@@ -9,7 +9,7 @@ DataFrame pipeline over Common-Crawl-style page tables:
          -> joint NER/mod/rel tag + BIO decode     [textnorm, tokenizer, infer]
       -> mentions + triples (flat rows)            [mentions]
       -> entity linking (exact join, then broadcast
-         Jaccard or banded MinHash + top-1 rerank) [link]
+         Jaccard + top-1 rerank)                   [link]
       -> canonicalization (connected components)   [canon]
       -> graph materialization (salted, bucketed)  [graph]
       -> lineage + idempotent resume               [lineage, pipeline]

@@ -7,14 +7,15 @@ Links mention surfaces to the concept dictionary:
    into an O(vocabulary) one. This is the single biggest scale lever here.
 2. exact path — broadcast equi-join surface == normalized alias (the dictionary
    is small: broadcast, no shuffle of the big side).
-3. fuzzy path (MinHash-LSH) — surfaces that miss exactly go through banded
-   MinHash over character {1,2}-grams, built ENTIRELY from JVM-side built-ins
-   (``transform``/``sequence``/``substring``/``xxhash64``/``array_min`` —
-   no UDF, whole-stage codegen applies): band-key equi-join against alias
-   bands, then exact Jaccard verification via ``array_intersect`` /
-   ``array_union`` on distinct grams.
-4. rerank (N3) — ``Window.partitionBy(surface).orderBy(desc(score), concept_id)``
-   + ``row_number() == 1``; ties break deterministically on concept_id.
+3. fuzzy path — surfaces that miss exactly are scored against every
+   same-sem_type alias of a broadcast dictionary by exact Jaccard over
+   distinct character {1,2}-grams, built ENTIRELY from JVM-side built-ins
+   (``transform``/``sequence``/``substring``/``array_intersect``/
+   ``array_union`` — no UDF, whole-stage codegen applies); pairs below
+   ``MIN_JACCARD`` are dropped.
+4. rerank (N3) — ``Window.partitionBy(surface, sem_type)`` ordered by
+   ``desc(score), concept_id, method`` + ``row_number() == 1``; ties break
+   deterministically on concept_id.
 
 Width normalization of the alias side is JVM-side too (``translate`` over the
 full-width ASCII block), mirroring jamie_spark.textnorm.zen_to_han.
@@ -39,8 +40,9 @@ from .textnorm import _ZEN2HAN as _Z2H
 _ZEN = "".join(chr(c) for c in sorted(_Z2H))
 _HAN = "".join(chr(_Z2H[c]) for c in sorted(_Z2H))
 
-N_HASHES = 16
-N_BANDS = 8  # rows-per-band = N_HASHES // N_BANDS = 2
+#: Jaccard floor for a fuzzy candidate; single source of truth for the
+#: Spark path AND the DuckDB oracle (``kg_pipeline_triples*``).
+MIN_JACCARD = 0.10
 
 
 def normalize_col(col: "Column") -> "Column":
@@ -66,41 +68,9 @@ def _with_grams(df: "DataFrame", colname: str, out: str = "grams") -> "DataFrame
     )
 
 
-def _with_bands(df: "DataFrame", out: str = "band") -> "DataFrame":
-    """MinHash signature -> exploded (band_id, band_key) rows.
-
-    minhash_k = min over grams of xxhash64(gram, k); band key = hash of the
-    band's signature slice. All JVM-side.
-    """
-    sig = F.array(
-        *[
-            F.array_min(
-                F.expr(f"transform(grams, g -> xxhash64(g, {k}))")
-            )
-            for k in range(N_HASHES)
-        ]
-    )
-    rows_per_band = N_HASHES // N_BANDS
-    df = df.withColumn("sig", sig)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.xxhash64(
-                    *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                ).alias("band_key"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    return df.withColumn(out, F.explode(bands)).drop("sig")
-
-
 def link_surfaces(
     surfaces: "DataFrame",
     concept_dict: "DataFrame",
-    min_jaccard: float = 0.10,
-    fuzzy: str = "broadcast",
     materialize: bool = True,
 ) -> "DataFrame":
     """(surface, sem_type) x dictionary -> (surface, sem_type, concept_id,
@@ -110,26 +80,18 @@ def link_surfaces(
     family — without this an anatomy mention like 肺 happily fuzzy-matches
     the disease 肺癌 (observed in verification).
 
-    ``fuzzy`` picks the candidate-generation strategy for surfaces that miss
-    the exact join:
-
-    * ``"broadcast"`` (default): score every same-sem_type alias directly via
-      exact Jaccard on a broadcast of the dictionary — one stage, no banding.
-      Correct choice whenever the dictionary fits a broadcast (UMLS/MedDRA
-      ~10^6 aliases still does); the surfaces side is already deduped to the
-      vocabulary, so the cross product is |missed| x |aliases per sem_type|.
-    * ``"minhash"``: banded MinHash-LSH equi-join — the plan for dictionaries
-      too large to broadcast; candidates then verified with exact Jaccard.
-      RECALL CAVEAT: with N_HASHES=16 / N_BANDS=8 (2 rows per band) the
-      LSH s-curve's 50%-recall point sits near Jaccard ~0.35 — pairs with
-      true Jaccard between ``min_jaccard`` and ~0.3 are mostly NOT
-      generated as candidates (e.g. J=0.15: P(any band) = 1-(1-0.15^2)^8
-      ~= 0.17), so switching from ``"broadcast"`` keeps the same verify
-      threshold but silently trades away low-similarity recall. Raise
-      N_BANDS (more bands of fewer rows) to push the curve left if the
-      dictionary needs sub-0.3 matches at LSH scale.
+    Surfaces that miss the exact join are scored against every alias of
+    their sem_type by exact Jaccard on a broadcast of the dictionary
+    (``method == "broadcast"``), kept at >= ``MIN_JACCARD``. Cost: one
+    array_intersect/array_union pair per (missed surface, same-sem_type
+    alias), i.e. |missed| x |aliases per sem_type|. The surfaces side is
+    already deduped to the vocabulary, so this is cheap at fixture and
+    clinical-dictionary sizes; at UMLS size (~10^6 aliases of one type)
+    the cross product dominates. The scale path for that case — a
+    (sem_type, gram) posting join with length/overlap bounds, so aliases
+    that share no gram are never scored — is deferred until a workload
+    actually scores fuzzy pairs.
     """
-    strategy = fuzzy  # `fuzzy` is rebound to the candidate frame below
     keys = ["surface", "sem_type"]
     surf = surfaces.select(*keys).distinct()
     if materialize:
@@ -163,40 +125,24 @@ def link_surfaces(
         F.col("alias_norm").alias("surface"), "sem_type"
     ).distinct()
     missed = surf.join(F.broadcast(dic_surfaces), keys, "left_anti")
-    d_grams = _with_grams(dic.withColumnRenamed("alias_norm", "alias"), "alias")
+    d_grams = _with_grams(dic, "alias_norm")
     m_grams = _with_grams(missed, "surface")
-    same_type = F.col("m.sem_type") == F.col("d.sem_type")
-    if fuzzy == "broadcast":
-        pairs = m_grams.alias("m").join(
-            F.broadcast(d_grams.alias("d")), same_type
-        )
-    elif fuzzy == "minhash":
-        band_cond = (F.col("m.band.band_id") == F.col("d.band.band_id")) & (
-            F.col("m.band.band_key") == F.col("d.band.band_key")
-        )
-        pairs = _with_bands(m_grams).alias("m").join(
-            F.broadcast(_with_bands(d_grams).alias("d")), band_cond & same_type
-        )
-    else:
-        raise ValueError(f"unknown fuzzy strategy: {fuzzy}")
-    cand = pairs.select(
+    pairs = m_grams.alias("m").join(
+        F.broadcast(d_grams.alias("d")),
+        F.col("m.sem_type") == F.col("d.sem_type"),
+    )
+    fuzzy = pairs.select(
         F.col("m.surface").alias("surface"),
         F.col("m.sem_type").alias("sem_type"),
         F.col("m.grams").alias("s_grams"),
         F.col("d.concept_id").alias("concept_id"),
-        F.col("d.alias").alias("alias"),
         F.col("d.grams").alias("a_grams"),
-    )
-    if fuzzy == "minhash":
-        cand = cand.dropDuplicates(keys + ["concept_id", "alias"])
-    fuzzy = cand.withColumn(
+    ).withColumn(
         "score",
         F.size(F.array_intersect("s_grams", "a_grams"))
         / F.size(F.array_union("s_grams", "a_grams")),
-    ).where(F.col("score") >= min_jaccard).select(
-        # method reports the strategy that actually produced the candidate
-        # (was hardcoded 'minhash' even on the broadcast path)
-        *keys, "concept_id", "score", F.lit(strategy).alias("method")
+    ).where(F.col("score") >= MIN_JACCARD).select(
+        *keys, "concept_id", "score", F.lit("broadcast").alias("method")
     )
 
     candidates = exact.unionByName(fuzzy)

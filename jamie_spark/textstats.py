@@ -400,13 +400,6 @@ def _bands_of(sig: "DataFrame") -> "DataFrame":
     )
 
 
-def minhash_signatures(
-    docs: "DataFrame", n: int = 3, sh: "DataFrame | None" = None
-) -> "DataFrame":
-    """(doc_id, band_id, band_key) — md5-MinHash banded signatures."""
-    return _bands_of(_minhash_sig_table(docs, n, sh=sh))
-
-
 def write_signature_store(
     docs: "DataFrame",
     path: str,
@@ -465,11 +458,11 @@ def minhash_signature_table(
     short_fallback: bool = False,
 ) -> "DataFrame":
     """Public face of the PER-DOC signature table (doc_id + N_MINHASHES md5
-    minima — the store row format; distinct from :func:`minhash_signatures`,
-    which returns banded (doc_id, band_id, band_key) rows). For callers
-    that need to compute signatures ONCE and both dedup with them and
-    commit them (the streaming ingest loop: shingling is the dominant
-    per-batch cost, so recomputing for the commit step would double it).
+    minima — the store row format; :func:`minhash_pairs` bands the same
+    rows into (doc_id, band_id, band_key)). For callers that need to
+    compute signatures ONCE and both dedup with them and commit them (the
+    streaming ingest loop: shingling is the dominant per-batch cost, so
+    recomputing for the commit step would double it).
 
     ``short_fallback=True`` closes the sub-shingle exemption (ADVICE r04):
     a doc shorter than one shingle (< n chars for unit="char", < n words
@@ -617,7 +610,7 @@ def minhash_pairs(
     """
     from pyspark.sql import Window
 
-    sig = minhash_signatures(docs, n, sh=sh)
+    sig = _bands_of(_minhash_sig_table(docs, n, sh=sh))
     wp = Window.partitionBy("band_id", "band_key")
     # ranked feeds FOUR join sides (small a/b + chain a/b); materialize the
     # windowed frame once instead of re-running the shingle explode +

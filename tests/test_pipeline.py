@@ -212,23 +212,14 @@ def test_linking_exact_and_fuzzy(spark, corpus):
     assert by_surface["肺がん"]["concept_id"] == lung
 
 
-def test_linking_fuzzy_minhash(spark, corpus):
-    """A surface absent from the alias table links via MinHash candidates
-    (fuzzy='minhash' requested explicitly — the method column reports the
-    strategy that actually ran; it used to say 'minhash' even on the
-    default broadcast path)."""
+def test_linking_fuzzy_jaccard(spark, corpus):
+    """A surface absent from the alias table links through the Jaccard
+    path, and the method column names that path."""
     surfaces = spark.createDataFrame(
         [("アスピリン錠剤", "Remedy")], "surface string, sem_type string"
     )
-    links = link.link_surfaces(
-        surfaces, corpus["concepts"], fuzzy="minhash"
-    ).collect()
-    assert len(links) == 1
-    assert links[0]["method"] == "minhash"
-    # the default path labels its own strategy
-    bl = link.link_surfaces(surfaces, corpus["concepts"]).collect()
-    assert len(bl) == 1 and bl[0]["method"] == "broadcast"
-    assert bl[0]["concept_id"] == links[0]["concept_id"]
+    links = link.link_surfaces(surfaces, corpus["concepts"]).collect()
+    assert len(links) == 1 and links[0]["method"] == "broadcast"
     aspirin = (
         corpus["concepts"].where(F.col("canonical") == "アスピリン").first()["concept_id"]
     )
