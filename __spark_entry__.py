@@ -2356,8 +2356,8 @@ _SENT_PATTERN = "[^。！？]*[。！？]|[^。！？]+"
 
 
 def _grams_sql(col: str) -> str:
-    """link._with_grams in DuckDB: distinct char {1,2}-grams (bigram index
-    capped at greatest(len-1, 1), exactly like the Spark sequence bounds)."""
+    """link._grams in DuckDB: distinct char {1,2}-grams (bigram index
+    capped at greatest(len-1, 1), exactly like the Python slice bounds)."""
     return (
         "list_distinct(list_concat("
         f"list_transform(range(1, greatest(length({col}), 1) + 1),"

@@ -8,15 +8,16 @@ DataFrame pipeline over Common-Crawl-style page tables:
       -> extract -> normalize -> segment -> tokenize
          -> joint NER/mod/rel tag + BIO decode     [textnorm, tokenizer, infer]
       -> mentions + triples (flat rows)            [mentions]
-      -> entity linking (exact join, then broadcast
-         Jaccard + top-1 rerank)                   [link]
+      -> entity linking (driver-built alias index,
+         one mapInArrow probe + top-1)             [link]
       -> canonicalization (connected components)   [canon]
       -> graph materialization (salted, bucketed)  [graph]
       -> lineage + idempotent resume               [lineage, pipeline]
 
 Everything heavy runs JVM-side (built-in functions) or in a single Arrow-batched
-``mapInArrow`` stage (``infer.annotate_pages_flat``); there is no per-row Python
-anywhere in the hot path.
+``mapInArrow`` stage (``infer.annotate_pages_flat``); the only other Python pass
+is linking's one ``mapInArrow`` over the distinct surfaces
+(``link.link_surfaces``), vocabulary-sized rather than corpus-sized.
 """
 
 __version__ = "0.1.0"

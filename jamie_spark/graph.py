@@ -37,11 +37,11 @@ def canonical_triples(
     a link of its own semantic type (its tag mapped by
     ``concepts.sem_type_of``); unresolved surfaces keep themselves as id.
 
-    ``concept_canon`` (dictionary-sized, like the dictionary link.py
-    broadcasts) is broadcast into the ``links`` join too. Neither side has
-    statistics (links come from a checkpoint, the map from driver rows), so
-    without the hint Spark plans a SortMergeJoin and injects a runtime
-    bloom-filter subquery that aggregates the corpus-sized triples.
+    ``concept_canon`` (dictionary-sized) is broadcast into the ``links``
+    join too. Neither side has statistics (links come from a checkpoint,
+    the map from driver rows), so without the hint Spark plans a
+    SortMergeJoin and injects a runtime bloom-filter subquery that
+    aggregates the corpus-sized triples.
     """
     from .concepts import sem_type_of
 

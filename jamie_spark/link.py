@@ -1,71 +1,89 @@
 """Entity linking: candidate generation (N2) + rerank (N3).
 
-Links mention surfaces to the concept dictionary:
+Links mention surfaces to the concept dictionary in one pass:
 
 1. distinct-surface dedup — at 10^12 documents mention surfaces follow a power
-   law; linking DISTINCT surfaces and joining back turns an O(mentions) problem
-   into an O(vocabulary) one. This is the single biggest scale lever here.
-2. exact path — broadcast equi-join surface == normalized alias (the dictionary
-   is small: broadcast, no shuffle of the big side).
-3. fuzzy path — surfaces that miss exactly are scored against every
-   same-sem_type alias of a broadcast dictionary by exact Jaccard over
-   distinct character {1,2}-grams, built ENTIRELY from JVM-side built-ins
-   (``transform``/``sequence``/``substring``/``array_intersect``/
-   ``array_union`` — no UDF, whole-stage codegen applies); pairs below
-   ``MIN_JACCARD`` are dropped.
-4. rerank (N3) — ``Window.partitionBy(surface, sem_type)`` ordered by
-   ``desc(score), concept_id, method`` + ``row_number() == 1``; ties break
-   deterministically on concept_id.
+   law; linking DISTINCT surfaces turns an O(mentions) problem into an
+   O(vocabulary) one. This is the single biggest scale lever here.
+2. one index, built on the driver from a single collect of the dictionary:
+   an exact map from ``(textnorm.zen_to_han(alias), sem_type)`` to the
+   smallest concept_id, and a ``(sem_type, gram)`` -> alias posting map over
+   distinct character {1,2}-grams (:func:`_grams`). The hash side is built
+   once and probed for every surface.
+3. one ``mapInArrow`` over the distinct surfaces probes it: an exact hit wins
+   (score 1.0, ``"exact"``); otherwise only the aliases that share a gram
+   with the surface are scored, by exact Jaccard, kept at >= ``MIN_JACCARD``
+   and reranked top-1 by score desc, then concept_id asc (``"broadcast"``).
 
-Width normalization of the alias side is JVM-side too (``translate`` over the
-full-width ASCII block), mirroring jamie_spark.textnorm.zen_to_han.
+Rows with a null key never link: a dictionary row with a null concept_id,
+alias or sem_type is left out of the index, and a null surface or sem_type
+finds nothing (SQL ``=`` semantics).
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import TYPE_CHECKING
 
-from pyspark.sql import Window
-from pyspark.sql import functions as F
+from .textnorm import zen_to_han
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql import Column, DataFrame
-
-# translate() mapping for the full-width ASCII block — DERIVED from
-# textnorm's _ZEN2HAN so the JVM-side alias normalization can never
-# desynchronize from the Python-side surface normalization (two
-# independently-maintained copies of the same table would drift)
-from .textnorm import _ZEN2HAN as _Z2H
-
-_ZEN = "".join(chr(c) for c in sorted(_Z2H))
-_HAN = "".join(chr(_Z2H[c]) for c in sorted(_Z2H))
+    from pyspark.sql import DataFrame
 
 #: Jaccard floor for a fuzzy candidate; single source of truth for the
 #: Spark path AND the DuckDB oracle (``kg_pipeline_triples*``).
 MIN_JACCARD = 0.10
 
 
-def normalize_col(col: "Column") -> "Column":
-    """JVM-side zen_to_han (same table as textnorm.zen_to_han)."""
-    return F.translate(col, _ZEN, _HAN)
+def _grams(s: str) -> set:
+    """Distinct 1-grams over max(len, 1) positions and 2-grams over
+    max(len - 1, 1) positions (an empty string has the one gram "")."""
+    n = len(s)
+    return {s[i:i + 1] for i in range(max(n, 1))} | {
+        s[i:i + 2] for i in range(max(n - 1, 1))
+    }
 
 
-def _with_grams(df: "DataFrame", colname: str, out: str = "grams") -> "DataFrame":
-    return df.withColumn(
-        out,
-        F.array_distinct(
-            F.concat(
-                F.expr(
-                    f"transform(sequence(1, greatest(length({colname}), 1)),"
-                    f" i -> substring({colname}, i, 1))"
-                ),
-                F.expr(
-                    f"transform(sequence(1, greatest(length({colname}) - 1, 1)),"
-                    f" i -> substring({colname}, i, 2))"
-                ),
-            )
-        ),
+def _index(rows) -> tuple[dict, dict]:
+    """(concept_id, alias, sem_type) rows -> (exact, postings).
+
+    ``exact[(alias_norm, sem_type)]`` is the smallest concept_id of that
+    alias; ``postings[(sem_type, gram)]`` lists ``(alias_norm, n_grams)``
+    once per distinct alias. Concept ids with the same alias tie on every
+    score, so the rerank only ever needs the smallest one."""
+    exact, postings = {}, {}
+    for cid, alias, st in rows:
+        if cid is None or alias is None or st is None:
+            continue
+        key = (zen_to_han(alias), st)
+        if key in exact:
+            exact[key] = min(exact[key], cid)
+            continue
+        exact[key] = cid
+        grams = _grams(key[0])
+        entry = (key[0], len(grams))  # one object per alias: pickled once
+        for g in grams:
+            postings.setdefault((st, g), []).append(entry)
+    return exact, postings
+
+
+def _resolve(surface, st, exact: dict, postings: dict):
+    """(concept_id, score, method) for one surface, or None."""
+    if surface is None or st is None:
+        return None
+    if (surface, st) in exact:
+        return exact[(surface, st)], 1.0, "exact"
+    grams = _grams(surface)
+    shared = Counter(a for g in grams for a in postings.get((st, g), ()))
+    scored = [
+        (k / (len(grams) + n - k), exact[(alias, st)])
+        for (alias, n), k in shared.items()
+    ]
+    best = min(
+        ((-score, cid) for score, cid in scored if score >= MIN_JACCARD),
+        default=None,
     )
+    return None if best is None else (best[1], -best[0], "broadcast")
 
 
 def link_surfaces(
@@ -74,85 +92,53 @@ def link_surfaces(
     materialize: bool = True,
 ) -> "DataFrame":
     """(surface, sem_type) x dictionary -> (surface, sem_type, concept_id,
-    score, method).
+    score, method), at most one row per distinct (surface, sem_type).
 
     Candidates are restricted to dictionary rows of the surface's semantic
     family — without this an anatomy mention like 肺 happily fuzzy-matches
     the disease 肺癌 (observed in verification).
 
-    Surfaces that miss the exact join are scored against every alias of
-    their sem_type by exact Jaccard on a broadcast of the dictionary
-    (``method == "broadcast"``), kept at >= ``MIN_JACCARD``. Cost: one
-    array_intersect/array_union pair per (missed surface, same-sem_type
-    alias), i.e. |missed| x |aliases per sem_type|. The surfaces side is
-    already deduped to the vocabulary, so this is cheap at fixture and
-    clinical-dictionary sizes; at UMLS size (~10^6 aliases of one type)
-    the cross product dominates. The scale path for that case — a
-    (sem_type, gram) posting join with length/overlap bounds, so aliases
-    that share no gram are never scored — is deferred until a workload
-    actually scores fuzzy pairs.
+    Cost: one collect of the dictionary, plus one Python pass over the
+    distinct surfaces that scores only the aliases sharing a gram with the
+    surface (aliases sharing none are never touched). The index travels to
+    the tasks in the function's closure, so it must fit the driver and each
+    Python worker.
+
+    ``materialize=True`` returns the links eagerly ``localCheckpoint``-ed:
+    callers read them twice as broadcast sides (subject and object), which
+    would otherwise run the linking pass twice.
     """
-    keys = ["surface", "sem_type"]
-    surf = surfaces.select(*keys).distinct()
-    if materialize:
-        # vocabulary-sized and scanned by three branches (exact, anti-join,
-        # fuzzy) — persist so the upstream corpus-sized plan runs exactly
-        # once. Callers that already hand in a cheap-to-rescan input (parquet
-        # checkpoint / localCheckpoint, e.g. pipeline.run_kg) pass
-        # materialize=False to avoid leaking cache blocks per invocation.
-        surf = surf.persist()
-    dic = concept_dict.select(
-        "concept_id",
-        normalize_col(F.col("alias")).alias("alias_norm"),
-        "sem_type",
-    ).distinct()
+    exact, postings = _index(
+        concept_dict.select("concept_id", "alias", "sem_type").collect()
+    )
+    names = ["surface", "sem_type", "concept_id", "score", "method"]
 
-    # exact path: broadcast equi-join
-    exact = surf.join(
-        F.broadcast(dic),
-        (surf["surface"] == dic["alias_norm"])
-        & (surf["sem_type"] == dic["sem_type"]),
-        "inner",
-    ).select(
-        *[surf[c].alias(c) for c in keys],
-        "concept_id",
-        F.lit(1.0).alias("score"),
-        F.lit("exact").alias("method"),
-    )
+    def _link_batches(batches):
+        import pyarrow as pa
 
-    # fuzzy path for the misses only
-    dic_surfaces = dic.select(
-        F.col("alias_norm").alias("surface"), "sem_type"
-    ).distinct()
-    missed = surf.join(F.broadcast(dic_surfaces), keys, "left_anti")
-    d_grams = _with_grams(dic, "alias_norm")
-    m_grams = _with_grams(missed, "surface")
-    pairs = m_grams.alias("m").join(
-        F.broadcast(d_grams.alias("d")),
-        F.col("m.sem_type") == F.col("d.sem_type"),
-    )
-    fuzzy = pairs.select(
-        F.col("m.surface").alias("surface"),
-        F.col("m.sem_type").alias("sem_type"),
-        F.col("m.grams").alias("s_grams"),
-        F.col("d.concept_id").alias("concept_id"),
-        F.col("d.grams").alias("a_grams"),
-    ).withColumn(
-        "score",
-        F.size(F.array_intersect("s_grams", "a_grams"))
-        / F.size(F.array_union("s_grams", "a_grams")),
-    ).where(F.col("score") >= MIN_JACCARD).select(
-        *keys, "concept_id", "score", F.lit("broadcast").alias("method")
-    )
+        for rb in batches:
+            d = rb.to_pydict()
+            rows = [
+                (s, st, *hit)
+                for s, st in zip(d["surface"], d["sem_type"])
+                if (hit := _resolve(s, st, exact, postings)) is not None
+            ]
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(c, pa.float64() if n == "score" else pa.string())
+                        for n, c in zip(names, zip(*rows))
+                    ],
+                    names=names,
+                )
 
-    candidates = exact.unionByName(fuzzy)
-
-    # N3 rerank: top-1 per (surface, sem_type), deterministic tie-break
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc("score"), F.asc("concept_id"), F.asc("method")
+    links = (
+        surfaces.select("surface", "sem_type")
+        .distinct()
+        .mapInArrow(
+            _link_batches,
+            schema="surface string, sem_type string, concept_id string, "
+            "score double, method string",
+        )
     )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") == 1)
-        .drop("rank")
-    )
+    return links.localCheckpoint(eager=True) if materialize else links

@@ -94,19 +94,11 @@ def run_kg(
     )
     if checkpoint_dir is None:
         # vocabulary-sized from here on: truncate the corpus-sized lineage so
-        # the many small linking/rerank stages don't drag the full upstream
-        # plan through re-optimization (measured 2x link latency otherwise).
-        # With a parquet checkpoint the lineage is already short.
+        # the linking pass doesn't drag the full upstream plan through
+        # re-optimization. With a parquet checkpoint the lineage is already
+        # short.
         surfaces = surfaces.localCheckpoint(eager=True)
-    # links are consumed twice (subj + obj resolution) as broadcast sides;
-    # materialize once (vocabulary-sized) so the whole linking subtree isn't
-    # inlined into both broadcast builds. materialize=False: surfaces are
-    # already checkpoint-backed here, so link_surfaces must not add its own
-    # persist (it would leak one cache entry per run_kg call — found by
-    # review in the foreachBatch/per-bucket loops).
-    links = link.link_surfaces(
-        surfaces, concept_dict, materialize=False
-    ).localCheckpoint(eager=True)
+    links = link.link_surfaces(surfaces, concept_dict)
     concept_canon = canon.canonicalize_concepts(concept_dict)
     canonical = graph.canonical_triples(triples, links, concept_canon)
     cached = [flat] if checkpoint_dir is None else []

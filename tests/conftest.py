@@ -16,3 +16,19 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def persisted_rdds(spark):
+    """Counts persistent RDDs, leaving out ``localCheckpoint`` blocks: the
+    ContextCleaner frees those when their plans are garbage-collected, so
+    their count moves with JVM GC timing, not with what a caller released."""
+
+    def count() -> int:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return sum(
+            not rdds.get(k).rdd().isLocallyCheckpointed()
+            for k in rdds.keySet().toArray()
+        )
+
+    return count

@@ -3,7 +3,7 @@
 The reference states the linking contract without Spark: an exact hit on
 ``textnorm.zen_to_han(alias)`` within the surface's sem_type wins; otherwise
 every same-sem_type alias is scored by Jaccard over distinct character
-{1,2}-grams (the ``link._with_grams`` bounds) and kept at >= ``MIN_JACCARD``;
+{1,2}-grams (the ``link._grams`` bounds) and kept at >= ``MIN_JACCARD``;
 the top-1 is by score desc, then concept_id asc.
 """
 
@@ -20,7 +20,7 @@ FULL = "ａｂＣ"  # full-width letters: zen_to_han folds them onto ASCII
 
 def _grams(s: str) -> set:
     """Distinct 1-grams over max(len, 1) positions and 2-grams over
-    max(len - 1, 1) positions, as ``link._with_grams`` builds them."""
+    max(len - 1, 1) positions, as ``link._grams`` builds them."""
     n = len(s)
     return {s[i:i + 1] for i in range(max(n, 1))} | {
         s[i:i + 2] for i in range(max(n - 1, 1))
@@ -137,3 +137,46 @@ def test_link_surfaces_matches_reference_on_random_dictionaries(spark):
         for (s, st), (_, best, m) in want.items()
         if m == "broadcast"
     )  # Jaccard ties across concept ids
+
+
+def test_null_keys_never_link(spark):
+    """A null surface, surface sem_type, alias or concept_id never links: a
+    null surface does not match a null alias, and a dictionary row with a
+    null concept_id does not outrank a real concept on the same alias."""
+    dictionary = [
+        (None, "肺癌", "Disease"),
+        ("C9", "肺癌", "Disease"),
+        ("C1", None, "Disease"),
+        ("C2", "胃癌", None),
+    ]
+    surfaces = [
+        ("肺癌", "Disease"),
+        (None, "Disease"),
+        ("胃癌", None),
+        (None, None),
+    ]
+    got = link.link_surfaces(
+        spark.createDataFrame(surfaces, "surface string, sem_type string"),
+        spark.createDataFrame(
+            dictionary, "concept_id string, alias string, sem_type string"
+        ),
+    ).collect()
+    assert [tuple(r) for r in got] == [("肺癌", "Disease", "C9", 1.0, "exact")]
+
+
+def test_default_call_leaves_no_cache_behind(spark, persisted_rdds):
+    """The default (materialized) result is a local checkpoint, which the
+    ContextCleaner frees with its plan; no persisted frame is left pinned."""
+    before = persisted_rdds()
+    links = link.link_surfaces(
+        spark.createDataFrame(
+            [("cache-probe", "Disease"), ("大腸癌", "Disease")],
+            "surface string, sem_type string",
+        ),
+        spark.createDataFrame(
+            [("C3", "大腸癌", "Disease")],
+            "concept_id string, alias string, sem_type string",
+        ),
+    )
+    assert links.count() == 1
+    assert persisted_rdds() == before

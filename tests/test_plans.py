@@ -42,17 +42,19 @@ def test_column_pruning_reaches_scan(spark, tmp_path):
     assert "url" in read_schema
 
 
-def test_dictionary_join_is_broadcast(spark):
-    """Entity linking must broadcast the dictionary, never shuffle the
-    mention side."""
+def test_linking_plan_has_no_dictionary_join(spark):
+    """Entity linking never shuffles the mention side against the
+    dictionary: the dictionary is collected into a driver-built index, and
+    the distinct surfaces probe it in one Arrow pass with no join."""
     surfaces = spark.createDataFrame(
         [("肺癌", "Disease")], "surface string, sem_type string"
     )
-    links = link.link_surfaces(surfaces, fixtures.concept_df(spark))
+    links = link.link_surfaces(
+        surfaces, fixtures.concept_df(spark), materialize=False
+    )
     plan = _plan(links)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # the big-side of the exact join must NOT be exchanged for the join
-    assert plan.count("BroadcastExchange") >= 1
+    assert "Join" not in plan
+    assert plan.count("MapInArrow") == 1
 
 
 def test_minhash_band_join_no_python(spark):

@@ -492,18 +492,9 @@ def test_process_kg_dedup_batch_replay_idempotent(spark, tmp_path):
     assert sig2 == sig1
 
 
-def _persisted_rdds(spark) -> int:
-    """Persistent RDDs, leaving out ``localCheckpoint`` blocks: the
-    ContextCleaner frees those when their plans are garbage-collected, so
-    their count moves with JVM GC timing, not with what a caller released."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs()
-    return sum(
-        not rdds.get(k).rdd().isLocallyCheckpointed()
-        for k in rdds.keySet().toArray()
-    )
-
-
-def test_process_kg_dedup_batch_releases_its_caches(spark, tmp_path):
+def test_process_kg_dedup_batch_releases_its_caches(
+    spark, tmp_path, persisted_rdds
+):
     """A dedup micro-batch with both prior and intra-batch dups leaves no
     cached RDD behind: the persisted pages, signatures and survivor set
     are all released, so a long-running stream does not leak cache."""
@@ -520,9 +511,9 @@ def test_process_kg_dedup_batch_releases_its_caches(spark, tmp_path):
     )
     # prior dups: b0 re-crawled; intra dups: each fresh page and its mirror
     b1 = b0.limit(4).unionByName(fresh).unionByName(mirrors)
-    before = _persisted_rdds(spark)
+    before = persisted_rdds()
     streaming.process_kg_dedup_batch(b1, 1, concepts, out, store)
-    assert _persisted_rdds(spark) == before
+    assert persisted_rdds() == before
     # both kinds of dup were dropped: only one copy per fresh page commits
     assert spark.read.parquet(store + "/batch=1").count() == 6
 
