@@ -8,9 +8,9 @@ DataFrame pipeline over Common-Crawl-style page tables:
       -> extract -> normalize -> segment -> tokenize
          -> joint NER/mod/rel tag + BIO decode     [textnorm, tokenizer, infer]
       -> mentions + triples (flat rows)            [mentions]
-      -> entity linking (driver-built alias index,
-         one mapInArrow probe + top-1)             [link]
-      -> canonicalization (connected components)   [canon]
+      -> entity linking (alias index from one driver
+         dictionary collect, mapInArrow probe)     [link]
+      -> canonicalization (union-find, same rows)  [canon]
       -> graph materialization (salted, bucketed)  [graph]
       -> lineage + idempotent resume               [lineage, pipeline]
 

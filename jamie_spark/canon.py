@@ -1,14 +1,18 @@
 """Canonicalization by connected components over alias edges (N4).
 
-GraphFrames is the first choice on a real cluster (north_star names it); its
-jar is optional, so the engine ships a pure-DataFrame fallback and picks at
-runtime (SURVEY.md §7 step 6). Physical strategies, chosen from what the
-call can observe:
+The canonical map is union-find on the driver over the dictionary rows
+linking reads too (:func:`canonical_map`), returned as a local relation
+built through Arrow (:func:`frames.local_frame`): a ``LocalTableScan``
+that runs no Python task when it is read or broadcast.
 
-* driver union-find below ``SMALL_GRAPH_EDGES`` — tiny alias dictionaries
-  don't deserve shuffles; the result goes back to Spark as a local relation
-  built through Arrow (:func:`frames.local_frame`), a ``LocalTableScan``
-  that runs no Python task when it is read or broadcast;
+:func:`connected_components` serves graph-sized inputs. GraphFrames is the
+first choice on a real cluster (north_star names it); its jar is optional,
+so the engine ships a pure-DataFrame fallback and picks at runtime
+(SURVEY.md §7 step 6). Physical strategies, chosen from what the call can
+observe:
+
+* driver union-find below ``SMALL_GRAPH_EDGES`` — tiny graphs don't
+  deserve shuffles; the components come back as a local relation too;
 * GraphFrames ``connectedComponents`` when the jar is present;
 * **alternating large-star / small-star** (Kiveris et al., "Connected
   Components in MapReduce and Beyond") — the distributed default: converges
@@ -17,11 +21,9 @@ call can observe:
   (long alias chains) where naive label propagation needs O(diameter)
   rounds. It raises if ``CC_MAX_ROUNDS`` pass unconverged.
 
-Alias graphs are usually shallow (a component is one concept's alias star
-plus a few cross-links), but the star algorithm costs the same there and
-removes the diameter failure mode. ``localCheckpoint`` truncates lineage
-every round so plans don't snowball. At 10^12-row scale all of this holds
-because the vertex set is the alias VOCABULARY (millions), not the corpus.
+On shallow graphs the star algorithm costs what label propagation does,
+and it removes the diameter failure mode. ``localCheckpoint`` truncates
+lineage every round so plans don't snowball.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
+from .concepts import dictionary_rows
 from .frames import local_frame
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -67,10 +70,11 @@ SMALL_GRAPH_EDGES = 100_000
 CC_MAX_ROUNDS = 50
 
 
-def _union_find(edge_rows: list) -> dict[str, str]:
-    """vertex -> lexicographic-min vertex of its component. An edge with a
-    null endpoint links nothing (as in SQL, and in the star path's
-    ``u != v`` filter); its non-null endpoint still becomes a vertex."""
+def _union_find(edges) -> dict[str, str]:
+    """(a, b) pairs -> {vertex: lexicographic-min vertex of its component}.
+    An edge with a null endpoint links nothing (as in SQL, and in the star
+    path's ``u != v`` filter); its non-null endpoint still becomes a
+    vertex."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -79,8 +83,7 @@ def _union_find(edge_rows: list) -> dict[str, str]:
             x = parent[x]
         return x
 
-    for r in edge_rows:
-        a, b = r["src"], r["dst"]
+    for a, b in edges:
         for v in (a, b):
             if v is not None:
                 parent.setdefault(v, v)
@@ -90,15 +93,6 @@ def _union_find(edge_rows: list) -> dict[str, str]:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {v: find(v) for v in parent}
-
-
-def _small_graph_rows(edges: "DataFrame", small_graph_edges: int):
-    """The driver-strategy probe: the edge rows if there are at most
-    ``small_graph_edges`` of them (one ``limit+collect`` job), else None."""
-    if small_graph_edges <= 0:
-        return None
-    rows = edges.limit(small_graph_edges + 1).collect()
-    return rows if len(rows) <= small_graph_edges else None
 
 
 def _checksum(df: "DataFrame") -> tuple[int, int]:
@@ -210,21 +204,21 @@ def connected_components(
     ``component`` is the lexicographic minimum vertex id in the component
     (deterministic canonical representative); a null endpoint links nothing
     and is no vertex. Physical strategy is adaptive: driver-side union-find
-    below ``small_graph_edges`` (the alias dictionary case; tests force the
-    distributed path with ``small_graph_edges=0``), GraphFrames when its jar
-    is present, else the star rounds, which raise ``RuntimeError`` if
-    ``CC_MAX_ROUNDS`` pass unconverged (canonicalizing with unconverged
-    labels would silently corrupt the KG). Runs Spark jobs when called:
-    the probe's ``limit+collect``, and the whole star solve.
+    below ``small_graph_edges`` (tests force the distributed path with
+    ``small_graph_edges=0``), GraphFrames when its jar is present, else the
+    star rounds, which raise ``RuntimeError`` if ``CC_MAX_ROUNDS`` pass
+    unconverged (canonicalizing with unconverged labels would silently
+    corrupt the KG). Runs Spark jobs when called: the probe's
+    ``limit+collect``, and the whole star solve.
     """
     spark = edges.sparkSession
-    rows = _small_graph_rows(edges, small_graph_edges)
-    if rows is not None:
-        return local_frame(
-            spark,
-            sorted(_union_find(rows).items()),
-            "vertex string, component string",
-        )
+    if small_graph_edges > 0:
+        rows = edges.limit(small_graph_edges + 1).collect()
+        if len(rows) <= small_graph_edges:
+            comp = _union_find((r["src"], r["dst"]) for r in rows)
+            return local_frame(
+                spark, sorted(comp.items()), "vertex string, component string"
+            )
     if _graphframes_available(spark):  # pragma: no cover - not in sandbox
         from graphframes import GraphFrame
 
@@ -244,59 +238,34 @@ def connected_components(
     return _star_components(edges)
 
 
-def canonicalize_concepts(
-    concept_dict: "DataFrame", small_graph_edges: int = SMALL_GRAPH_EDGES
-) -> "DataFrame":
-    """Alias table -> (concept_id, canonical_id) canonical mapping.
-
-    Edges: every alias row links alias<->concept_id, so aliases sharing a
-    surface (deliberate cross-links, FIXTURES.md §3) merge their concepts into
-    one component. Component representative = min vertex id; since concept ids
-    sort before raw surfaces only within their own prefix, we re-canonicalize
-    to the min concept_id of the component.
-
-    Below ``small_graph_edges`` alias edges (the dictionary case) the final
-    map is built on the driver from the one ``limit+collect`` of the edges
-    the strategy probe already runs: union-find, then the min concept id per
-    component. The result is a local relation built through Arrow (a
-    ``LocalTableScan``, evaluated by the JVM with no Python task) with no
-    dictionary scan or join left in its plan, so every consumer (both
-    broadcast builds of ``graph.canonical_triples``) reads the finished
-    map. A null alias links nothing and a null concept id maps nowhere,
-    exactly as in the distributed path. Above the threshold the components
-    come from GraphFrames or the star rounds and the map is joined back
-    there.
-    Runs Spark jobs when called: the probe, and above the threshold the
-    solve of :func:`connected_components`.
-    """
-    edges = concept_dict.select(
-        F.col("alias").alias("src"), F.col("concept_id").alias("dst")
-    ).distinct()
-    rows = _small_graph_rows(edges, small_graph_edges)
-    if rows is not None:
-        comp = _union_find(rows)
-        concept_ids = {r["dst"] for r in rows if r["dst"] is not None}
-        canonical: dict[str, str] = {}
-        for c in concept_ids:
-            root = comp[c]
-            canonical[root] = min(c, canonical.get(root, c))
-        return local_frame(
-            concept_dict.sparkSession,
-            sorted((c, canonical[comp[c]]) for c in concept_ids),
-            "concept_id string, canonical_id string",
-        )
-    cc = connected_components(edges, small_graph_edges=0)
-    concept_comp = (
-        concept_dict.select("concept_id")
-        .distinct()
-        .join(cc, F.col("concept_id") == F.col("vertex"), "inner")
-        .select("concept_id", "component")
+def canonicalize_concepts(concept_dict: "DataFrame") -> "DataFrame":
+    """Alias table -> (concept_id, canonical_id): :func:`canonical_map` over
+    one collect of the dictionary (``concepts.dictionary_rows``)."""
+    return canonical_map(
+        concept_dict.sparkSession, dictionary_rows(concept_dict)
     )
-    canon = concept_comp.groupBy("component").agg(
-        F.min("concept_id").alias("canonical_id")
-    )
-    return concept_comp.join(canon, "component", "inner").select(
-        "concept_id", "canonical_id"
+
+
+def canonical_map(spark, dict_rows: list) -> "DataFrame":
+    """(concept_id, alias, sem_type) rows -> (concept_id, canonical_id).
+
+    Every row links alias<->concept_id, so aliases sharing a surface
+    (cross-links, FIXTURES.md §3) merge their concepts, and an alias equal
+    to another row's concept id is that vertex. Each concept maps to the
+    min concept_id of its union-find component; a null alias links nothing
+    and a null concept id maps nowhere. The local relation has no
+    dictionary scan or join in its plan, so both broadcast builds of
+    ``graph.canonical_triples`` read the finished map."""
+    comp = _union_find((alias, cid) for cid, alias, _ in dict_rows)
+    concept_ids = {cid for cid, _, _ in dict_rows if cid is not None}
+    canonical: dict[str, str] = {}
+    for c in concept_ids:
+        root = comp[c]
+        canonical[root] = min(c, canonical.get(root, c))
+    return local_frame(
+        spark,
+        sorted((c, canonical[comp[c]]) for c in concept_ids),
+        "concept_id string, canonical_id string",
     )
 
 

@@ -41,6 +41,12 @@ def sem_type_of(tag_col: str):
     return tag2sem[F.col(tag_col)]
 
 
+def dictionary_rows(concept_dict) -> list:
+    """The one driver collect of a concept dictionary: (concept_id, alias,
+    sem_type) rows for ``link.link_against`` and ``canon.canonical_map``."""
+    return concept_dict.select("concept_id", "alias", "sem_type").collect()
+
+
 # modality label -> attribute family, mirroring reference data_objects.py:6-10
 MOD_DICT = {
     "positive": "certainty",

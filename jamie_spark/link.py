@@ -5,11 +5,12 @@ Links mention surfaces to the concept dictionary in one pass:
 1. distinct-surface dedup — at 10^12 documents mention surfaces follow a power
    law; linking DISTINCT surfaces turns an O(mentions) problem into an
    O(vocabulary) one. This is the single biggest scale lever here.
-2. one index, built on the driver from a single collect of the dictionary:
-   an exact map from ``(textnorm.zen_to_han(alias), sem_type)`` to the
-   smallest concept_id, and a ``(sem_type, gram)`` -> alias posting map over
-   distinct character {1,2}-grams (:func:`_grams`). The hash side is built
-   once and probed for every surface.
+2. one index, built on the driver from a single collect of the dictionary
+   (``concepts.dictionary_rows``): an exact map from
+   ``(textnorm.zen_to_han(alias), sem_type)`` to the smallest concept_id,
+   and a ``(sem_type, gram)`` -> alias posting map over distinct character
+   {1,2}-grams (:func:`_grams`). The hash side is built once and probed
+   for every surface.
 3. one ``mapInArrow`` over the distinct surfaces probes it: an exact hit wins
    (score 1.0, ``"exact"``); otherwise only the aliases that share a gram
    with the surface are scored, by exact Jaccard, kept at >= ``MIN_JACCARD``
@@ -25,6 +26,7 @@ from __future__ import annotations
 from collections import Counter
 from typing import TYPE_CHECKING
 
+from .concepts import dictionary_rows
 from .textnorm import zen_to_han
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -98,19 +100,25 @@ def link_surfaces(
     family — without this an anatomy mention like 肺 happily fuzzy-matches
     the disease 肺癌 (observed in verification).
 
-    Cost: one collect of the dictionary, plus one Python pass over the
-    distinct surfaces that scores only the aliases sharing a gram with the
-    surface (aliases sharing none are never touched). The index travels to
-    the tasks in the function's closure, so it must fit the driver and each
-    Python worker.
+    Cost: one collect of the dictionary (``concepts.dictionary_rows``, which
+    ``pipeline.run_kg`` shares with canonicalization), plus one Python pass
+    over the distinct surfaces that scores only the aliases sharing a gram
+    with the surface (aliases sharing none are never touched). The index
+    travels to the tasks in the function's closure, so it must fit the
+    driver and each Python worker.
 
     ``materialize=True`` returns the links eagerly ``localCheckpoint``-ed:
     callers read them twice as broadcast sides (subject and object), which
     would otherwise run the linking pass twice.
     """
-    exact, postings = _index(
-        concept_dict.select("concept_id", "alias", "sem_type").collect()
-    )
+    return link_against(surfaces, dictionary_rows(concept_dict), materialize)
+
+
+def link_against(
+    surfaces: "DataFrame", dict_rows: list, materialize: bool = True
+) -> "DataFrame":
+    """:func:`link_surfaces` over ``concepts.dictionary_rows`` output."""
+    exact, postings = _index(dict_rows)
     names = ["surface", "sem_type", "concept_id", "score", "method"]
 
     def _link_batches(batches):

@@ -1,7 +1,7 @@
 """End-to-end pipeline composition (SURVEY.md §3.2 Spark re-expression).
 
     pages -> annotate (one mapInArrow) -> mentions + triples
-          -> link surfaces (N2/N3) -> canonicalize (N4)
+          -> link surfaces (N2/N3) + canonicalize (N4) from one dictionary
           -> canonical triples -> materialize salted (N5) [+ lineage N6]
 
 Each stage is a DataFrame -> DataFrame function; ``run_extraction`` /
@@ -54,11 +54,14 @@ def run_kg(
     columnar in-memory cache for this row volume (measured: 17s write+reread
     vs 54s persist at 9.4M rows). Without a dir it falls back to persist().
 
+    The linking index and the canonical map are built from one dictionary
+    collect (``concepts.dictionary_rows``).
+
     ``model_spec`` selects the extractor provider (``standin`` default,
     ``numpy:<dir>``, ``torch:<dir>``) — resolved driver-side and shipped by
     closure, same contract as infer.annotate_pages_flat.
     """
-    from .concepts import sem_type_of
+    from .concepts import dictionary_rows, sem_type_of
 
     if checkpoint_dir is not None:
         spark = pages.sparkSession
@@ -98,8 +101,9 @@ def run_kg(
         # re-optimization. With a parquet checkpoint the lineage is already
         # short.
         surfaces = surfaces.localCheckpoint(eager=True)
-    links = link.link_surfaces(surfaces, concept_dict)
-    concept_canon = canon.canonicalize_concepts(concept_dict)
+    dict_rows = dictionary_rows(concept_dict)
+    links = link.link_against(surfaces, dict_rows)
+    concept_canon = canon.canonical_map(pages.sparkSession, dict_rows)
     canonical = graph.canonical_triples(triples, links, concept_canon)
     cached = [flat] if checkpoint_dir is None else []
     return {**ext, "links": links, "concept_canon": concept_canon,

@@ -278,7 +278,7 @@ def test_star_components_random_graph_vs_unionfind(spark):
             edges.append((rng.choice(members), rng.choice(members)))
     edges += [("c0_00", None), (None, "lone")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    truth = canon._union_find([{"src": a, "dst": b} for a, b in edges])
+    truth = canon._union_find(edges)
     got = {
         r["vertex"]: r["component"]
         for r in canon.connected_components(
@@ -305,14 +305,40 @@ def test_canonicalization_components(spark, corpus):
     assert rows[cid["肺癌"]] != rows[cid["胃癌"]]
 
 
-def _canon_rows(concept_dict, **kw) -> list:
+def _canon_rows(concept_dict) -> list:
     return sorted(
-        map(tuple, canon.canonicalize_concepts(concept_dict, **kw).collect())
+        map(tuple, canon.canonicalize_concepts(concept_dict).collect())
+    )
+
+
+def _star_canon_rows(concept_dict) -> list:
+    """Reference canonical map: the distributed star components of the
+    alias<->concept_id edges, then the min concept_id per component."""
+    edges = concept_dict.select(
+        F.col("alias").alias("src"), F.col("concept_id").alias("dst")
+    ).distinct()
+    cc = canon.connected_components(edges, small_graph_edges=0)
+    concept_comp = (
+        concept_dict.select("concept_id")
+        .distinct()
+        .join(cc, F.col("concept_id") == F.col("vertex"))
+        .select("concept_id", "component")
+    )
+    mins = concept_comp.groupBy("component").agg(
+        F.min("concept_id").alias("canonical_id")
+    )
+    return sorted(
+        map(
+            tuple,
+            concept_comp.join(mins, "component")
+            .select("concept_id", "canonical_id")
+            .collect(),
+        )
     )
 
 
 def test_canonical_map_driver_equals_star_on_cross_links(spark, corpus):
-    """The driver-built canonical map equals the distributed star path on
+    """The driver-built canonical map equals the star-path reference on
     the fixture dictionary plus cross-link rows: C000090..C000092 chain
     through shared aliases into 肺癌's concept, and one alias string is
     another row's concept id (the alias and the id are one vertex)."""
@@ -331,7 +357,7 @@ def test_canonical_map_driver_equals_star_on_cross_links(spark, corpus):
     )
     d = cdf.unionByName(extra)
     driver = _canon_rows(d)
-    assert driver == _canon_rows(d, small_graph_edges=0)
+    assert driver == _star_canon_rows(d)
     got = dict(driver)
     assert len(got) == len(driver)  # one row per concept
     cid = {
@@ -345,9 +371,10 @@ def test_canonical_map_driver_equals_star_on_cross_links(spark, corpus):
 
 
 def test_canonical_map_null_alias_matches_star(spark, corpus):
-    """A null alias links nothing on either strategy: the driver path used
-    to raise comparing None with a concept id. A concept whose only alias
-    is null maps to itself; a null concept id maps nowhere."""
+    """A null alias links nothing, as in the star-path reference: the
+    driver path used to raise comparing None with a concept id. A concept
+    whose only alias is null maps to itself; a null concept id maps
+    nowhere."""
     cdf = corpus["concepts"]
     extra = spark.createDataFrame(
         [
@@ -359,11 +386,69 @@ def test_canonical_map_null_alias_matches_star(spark, corpus):
     )
     d = cdf.unionByName(extra)
     driver = _canon_rows(d)
-    assert driver == _canon_rows(d, small_graph_edges=0)
+    assert driver == _star_canon_rows(d)
     got = dict(driver)
     assert got["C000097"] == "C000097"
     assert None not in got
     assert got == {**dict(_canon_rows(cdf)), "C000097": "C000097"}
+
+
+def _random_dictionary(trial: int) -> list:
+    """One seeded dictionary, its ids and aliases prefixed by the trial so
+    every trial forms its own components inside one Spark call: aliases
+    drawn from a small pool cross-link concepts, one alias is another
+    row's concept id, and one row each has a null alias or concept id."""
+    import random
+
+    rng = random.Random(trial)
+    cids = [f"{trial}:C{k}" for k in range(rng.randint(3, 8))]
+    pool = [f"{trial}:a{k}" for k in range(rng.randint(3, 12))]
+    rows = [
+        (rng.choice(cids), rng.choice(pool)) for _ in range(rng.randint(4, 14))
+    ]
+    rows.append(tuple(rng.sample(cids, 2)))
+    rows.append((rng.choice(cids), None))
+    rows.append((None, rng.choice(pool)))
+    rng.shuffle(rows)
+    return [(cid, alias, "Disease") for cid, alias in rows]
+
+
+def test_canonical_map_matches_star_on_random_dictionaries(spark):
+    """The driver-built canonical map equals the star-path reference on 30
+    seeded dictionaries at once."""
+    dictionary = [r for trial in range(30) for r in _random_dictionary(trial)]
+    d = spark.createDataFrame(
+        dictionary, "concept_id string, alias string, sem_type string"
+    )
+    driver = _canon_rows(d)
+    assert len(dict(driver)) == len(driver)  # one row per concept
+    assert driver == _star_canon_rows(d)
+
+
+def test_run_kg_collects_the_dictionary_once(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """One run_kg call evaluates its dictionary once: linking and the
+    canonical map share one driver collect."""
+    path = str(tmp_path / "concepts.parquet")
+    corpus["concepts"].write.parquet(path)
+    concept_dict = spark.read.parquet(path)
+    cls = type(concept_dict)
+    collect = cls.collect
+    reads = []
+
+    def counting(df):
+        if any(path in f for f in df.inputFiles()):
+            reads.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(cls, "collect", counting)
+    result = pipeline.run_kg(corpus["pages"], concept_dict)
+    try:
+        assert len(reads) == 1
+        assert result["canonical_triples"].count() > 0
+    finally:
+        pipeline.release(result)
 
 
 def test_full_kg_and_materialization(spark, corpus, tmp_path):
@@ -652,7 +737,7 @@ def test_incremental_components_equals_full_recompute(spark):
          ).collect()),
         key=str,
     )
-    truth = canon._union_find([{"src": a, "dst": b} for a, b in base + batch])
+    truth = canon._union_find(base + batch)
     assert got == want == sorted(truth.items(), key=str)
 
 
