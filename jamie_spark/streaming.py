@@ -29,7 +29,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from . import pipeline
+from . import pipeline, textstats
 from .fixtures import PAGES_DDL
 from .frames import local_frame
 
@@ -175,11 +175,37 @@ def _prior_signatures(
     ]
     if not dirs:
         return None
-    return (
-        spark.read.option("basePath", store_dir)
-        .parquet(*dirs)
-        .drop("batch")
-    )
+    # the store's row schema is known: inferring it would run a job that
+    # reads a footer
+    return spark.read.schema(textstats.SIG_DDL).parquet(*dirs)
+
+
+#: signature rows at or below which a dedup micro-batch decides on the
+#: driver (:func:`process_kg_dedup_batch`). Measured on 4 cores with history
+#: drops of N/2 fresh pages plus N/2 mirrors, process CPU-s driver vs
+#: distributed: 18 vs 26 at N=400, 27 vs 30 at 5k, 34 vs 40 at 20k, 50 vs
+#: 96 at 50k, wall within 7% or better. No crossover showed up to 50k, the
+#: largest size measured, so that is the bound: the driver holds every row.
+SMALL_BATCH_SIG_ROWS = 50_000
+
+
+def _small_batch_rows(
+    pages: "DataFrame", new_sig: "DataFrame"
+) -> "tuple[list, set[int]] | None":
+    """(signature rows, page doc_ids) of a batch with at most
+    ``SMALL_BATCH_SIG_ROWS`` signature rows, else None. One
+    ``limit(N + 1).collect()`` probes the size and brings the rows; the
+    doc_ids of pages with a null text, which have no signature row, come
+    from a second collect. A null doc_id (null url) is no page doc_id."""
+    if SMALL_BATCH_SIG_ROWS <= 0:
+        return None
+    # one partition: a limit over several scans them in rounds, one job each
+    rows = new_sig.coalesce(1).limit(SMALL_BATCH_SIG_ROWS + 1).collect()
+    if len(rows) > SMALL_BATCH_SIG_ROWS:
+        return None
+    no_sig = pages.where(F.col("text").isNull()).select("doc_id").collect()
+    page_ids = {r[0] for r in rows + no_sig if r[0] is not None}
+    return [tuple(r) for r in rows], page_ids
 
 
 def process_kg_dedup_batch(
@@ -188,7 +214,6 @@ def process_kg_dedup_batch(
     concept_dict: "DataFrame",
     out_dir: str,
     store_dir: str,
-    min_agree: float = STREAM_DEDUP_MIN_AGREE,
 ) -> None:
     """One micro-batch of the PRODUCTION ingest shape: near-dup the incoming
     crawl against all history via the persisted MinHash signature store
@@ -204,9 +229,28 @@ def process_kg_dedup_batch(
     Cost per batch is O(batch + matched store rows): the store's bands are
     semi-joined down to the batch's band keys before any window
     (textstats.dedup_against_signatures).
-    """
-    from . import textstats
 
+    The size of the batch's persisted signature table picks one of two
+    branches; its probe is one ``limit(SMALL_BATCH_SIG_ROWS + 1).collect()``
+    (:func:`_small_batch_rows`), skipped when the threshold is 0.
+
+    * At most ``SMALL_BATCH_SIG_ROWS`` rows: the driver decides from the
+      collected rows. The intra-batch self-match runs in Python
+      (textstats.self_dup_doc_ids). The prior-history probe joins the
+      stored signatures against the rows as a local relation and collects
+      its dup doc_ids; its store side stays distributed. The survivors are
+      a driver set, handed to the extraction and the commit as a local
+      relation. Jobs: the emptiness check, the probe's collect and the
+      null-text doc_id collect, the prior probe's stages and collect,
+      run_kg on the survivors with its write, and the commit's write.
+    * Above it: the prior probe and the intra-batch band self-join are
+      distributed plans, and the survivor doc_ids are persisted and
+      counted before the extraction and the commit.
+
+    A history drop of 200 fresh pages and 200 mirrors against a 400-page
+    history runs 29 jobs on the driver branch and 48 on the distributed one
+    (tests/test_streaming.py counts the first).
+    """
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
@@ -231,40 +275,25 @@ def process_kg_dedup_batch(
     keep = None
     try:
         prior = _prior_signatures(spark, store_dir, batch_id)
-        # a null url has no doc_id and the semi-joins below never extract
-        # it; leaving it out makes the survivor count an exact emptiness
-        # check of the extraction input
-        survivors = pages.select("doc_id").dropna()
-        if prior is not None:
-            dups = (
-                textstats.dedup_against_signatures(
-                    None, prior, n=STREAM_SHINGLE_N, min_agree=min_agree,
-                    unit=STREAM_SHINGLE_UNIT, new_sig=new_sig,
-                )
-                .select(F.col("new_doc_id").alias("doc_id"))
-                .distinct()
+        small = _small_batch_rows(pages, new_sig)
+        if small is not None:
+            sig_rows, keep_ids = small
+            if prior is not None:
+                local_sig = local_frame(spark, sig_rows, textstats.SIG_DDL)
+                keep_ids -= {
+                    r[0] for r in _history_dups(prior, local_sig).collect()
+                }
+            keep_ids -= textstats.self_dup_doc_ids(
+                sig_rows, STREAM_DEDUP_MIN_AGREE
             )
-            survivors = survivors.join(dups, "doc_id", "left_anti")
-        # INTRA-batch near-dups (a cold-start backlog collapses the whole
-        # crawl into micro-batch 0 — prior-history dedup alone would admit
-        # every mirror pair inside it): self-match the batch signatures and
-        # keep the MIN doc_id of each near-dup pair. Deterministic and
-        # transitive-safe (any doc with a smaller near-dup neighbor drops).
-        intra = (
-            textstats.dedup_against_signatures(
-                None, new_sig, n=STREAM_SHINGLE_N, min_agree=min_agree,
-                unit=STREAM_SHINGLE_UNIT, new_sig=new_sig,
+            n_keep = len(keep_ids)
+            keep = local_frame(
+                spark, [(i,) for i in sorted(keep_ids)], "doc_id long"
             )
-            .where(F.col("new_doc_id") > F.col("stored_doc_id"))
-            .select(F.col("new_doc_id").alias("doc_id"))
-            .distinct()
-        )
-        # the survivor doc_ids feed the emptiness check, the extraction and
-        # the commit: materialize them once so the prior and intra probes
-        # run once per micro-batch, not three times; the count is the
-        # emptiness check, so the extraction needs no probe of its own
-        keep = survivors.join(intra, "doc_id", "left_anti").persist()
-        if keep.count():
+        else:
+            keep = _distributed_keep(pages, new_sig, prior).persist()
+            n_keep = keep.count()
+        if n_keep:
             _write_kg_batch(
                 pages.join(keep, "doc_id", "left_semi").drop("doc_id"),
                 batch_id, concept_dict, out_dir,
@@ -280,13 +309,56 @@ def process_kg_dedup_batch(
         pages.unpersist()
 
 
+def _history_dups(prior: "DataFrame", new_sig: "DataFrame") -> "DataFrame":
+    """Distinct doc_ids of the batch (``new_sig``) that near-dup a
+    signature a prior batch committed."""
+    return (
+        textstats.dedup_against_signatures(
+            None, prior, n=STREAM_SHINGLE_N,
+            min_agree=STREAM_DEDUP_MIN_AGREE,
+            unit=STREAM_SHINGLE_UNIT, new_sig=new_sig,
+        )
+        .select(F.col("new_doc_id").alias("doc_id"))
+        .distinct()
+    )
+
+
+def _distributed_keep(
+    pages: "DataFrame", new_sig: "DataFrame", prior: "DataFrame | None"
+) -> "DataFrame":
+    """Survivor doc_ids of a large batch, planned as distributed probes."""
+    # a null url has no doc_id and the semi-joins never extract it;
+    # leaving it out makes the survivor count an exact emptiness check of
+    # the extraction input
+    survivors = pages.select("doc_id").dropna()
+    if prior is not None:
+        survivors = survivors.join(
+            _history_dups(prior, new_sig), "doc_id", "left_anti"
+        )
+    # INTRA-batch near-dups (a cold-start backlog collapses the whole
+    # crawl into micro-batch 0 — prior-history dedup alone would admit
+    # every mirror pair inside it): self-match the batch signatures and
+    # keep the MIN doc_id of each near-dup pair. Deterministic and
+    # transitive-safe (any doc with a smaller near-dup neighbor drops).
+    intra = (
+        textstats.dedup_against_signatures(
+            None, new_sig, n=STREAM_SHINGLE_N,
+            min_agree=STREAM_DEDUP_MIN_AGREE,
+            unit=STREAM_SHINGLE_UNIT, new_sig=new_sig,
+        )
+        .where(F.col("new_doc_id") > F.col("stored_doc_id"))
+        .select(F.col("new_doc_id").alias("doc_id"))
+        .distinct()
+    )
+    return survivors.join(intra, "doc_id", "left_anti")
+
+
 def stream_kg_dedup(
     pages_stream: "DataFrame",
     concept_dict: "DataFrame",
     out_dir: str,
     checkpoint_dir: str,
     store_dir: str,
-    min_agree: float = STREAM_DEDUP_MIN_AGREE,
 ) -> "StreamingQuery":
     """:func:`stream_kg` composed with incremental near-dup dedup: each
     crawl micro-batch drops near-duplicates of EVERYTHING already ingested
@@ -298,8 +370,7 @@ def stream_kg_dedup(
 
     def process(batch_df: "DataFrame", batch_id: int) -> None:
         process_kg_dedup_batch(
-            batch_df, batch_id, concept_dict, out_dir, store_dir,
-            min_agree=min_agree,
+            batch_df, batch_id, concept_dict, out_dir, store_dir
         )
 
     return (

@@ -19,6 +19,7 @@ Design rules:
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Window
@@ -398,6 +399,66 @@ def _bands_of(sig: "DataFrame") -> "DataFrame":
         "doc_id", F.col("band.band_id").alias("band_id"),
         F.col("band.band_key").alias("band_key"),
     )
+
+
+#: DDL of a signature row as :func:`minhash_signature_table` plans it
+SIG_DDL = "doc_id long, " + ", ".join(
+    f"mh{k} string" for k in range(N_MINHASHES)
+)
+
+
+def _band_keys_of(minima: Sequence[str]) -> list[tuple[int, str]]:
+    """One signature's minima -> its (band_id, band_key) pairs, the layout
+    :func:`_bands_of` plans."""
+    rows_per_band = N_MINHASHES // N_MINHASH_BANDS
+    return [
+        (b, "|".join(minima[b * rows_per_band:(b + 1) * rows_per_band]))
+        for b in range(N_MINHASH_BANDS)
+    ]
+
+
+def self_dup_doc_ids(sig_rows: Iterable[Sequence], min_agree: float) -> set[int]:
+    """Driver twin of the intra-batch self-match over collected signature
+    rows ``(doc_id, mh0..mh{N_MINHASHES-1})``: the distinct ``new_doc_id``
+    of :func:`dedup_against_signatures` run with a table as both its batch
+    and its store, kept where ``new_doc_id > stored_doc_id``.
+
+    The same candidates: a pair shares a band bucket, and the stored side
+    of each bucket holds only its ``MAX_BAND_BUCKET`` lowest doc_ids, one
+    slot per row, with null doc_ids first (the window's ascending order).
+    The same verify: some pair of the two doc_ids' signature rows agrees on
+    ``round(agree / N_MINHASHES, 4) >= min_agree`` minima. A null doc_id
+    takes a cap slot and matches nothing."""
+    sigs: dict[int, list] = {}
+    buckets: dict[tuple[int, str], list] = {}
+    for doc_id, *minima in sig_rows:
+        if doc_id is not None:
+            sigs.setdefault(doc_id, []).append(minima)
+        for key in _band_keys_of(minima):
+            buckets.setdefault(key, []).append(doc_id)
+
+    def near(x: int, y: int) -> bool:
+        return any(
+            round(
+                sum(a == b for a, b in zip(p, q))
+                / N_MINHASHES, 4,
+            ) >= min_agree
+            for p in sigs[x]
+            for q in sigs[y]
+        )
+
+    dups: set[int] = set()
+    for ids in buckets.values():
+        slots = MAX_BAND_BUCKET - ids.count(None)
+        stored = sorted(i for i in ids if i is not None)[:max(slots, 0)]
+        for x in {i for i in ids if i is not None} - dups:
+            for y in stored:
+                if y >= x:
+                    break
+                if near(x, y):
+                    dups.add(x)
+                    break
+    return dups
 
 
 def write_signature_store(

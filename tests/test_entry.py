@@ -4,6 +4,7 @@ DuckDB — row count, column names, and order-insensitive values."""
 
 import math
 import os
+import shutil
 
 import duckdb
 import pytest
@@ -49,6 +50,23 @@ def test_oracle_keys_subset_of_queries():
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+def test_stream_dedup_replay_distributed_matches_oracle(
+    spark, duck, monkeypatch
+):
+    """stream_dedup_replay again, its dedup micro-batches forced onto the
+    distributed branch, into a fresh replay dir so no partition of an
+    earlier run can stand in for a missing one."""
+    from jamie_spark import streaming
+
+    monkeypatch.setattr(streaming, "SMALL_BATCH_SIG_ROWS", 0)
+    shutil.rmtree(f"/tmp/jamie_stream_replay_{os.getpid()}", ignore_errors=True)
+    _assert_matches_oracle(spark, duck, "stream_dedup_replay")
+
+
+def _assert_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
     sdf = q(spark, SF_DIR)
     spark_cols = [c.lower() for c in sdf.columns]

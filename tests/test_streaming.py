@@ -462,7 +462,19 @@ def test_stream_kg_dedup_cold_start_intra_batch(spark, tmp_path):
     assert n_out > 0
 
 
-def test_process_kg_dedup_batch_replay_idempotent(spark, tmp_path):
+@pytest.fixture(params=["driver", "distributed"])
+def dedup_branch(request, monkeypatch):
+    """Runs a dedup micro-batch test on each branch: the driver branch is
+    the default at test sizes, and a threshold of 0 forces the distributed
+    one."""
+    if request.param == "distributed":
+        monkeypatch.setattr(streaming, "SMALL_BATCH_SIG_ROWS", 0)
+    return request.param
+
+
+def test_process_kg_dedup_batch_replay_idempotent(
+    spark, tmp_path, dedup_branch
+):
     """A replayed dedup micro-batch (same batch_id) must not dedup against
     its OWN committed signatures: both sinks are batch-keyed overwrites and
     the store read covers strictly-prior batches, so the replay reproduces
@@ -493,7 +505,7 @@ def test_process_kg_dedup_batch_replay_idempotent(spark, tmp_path):
 
 
 def test_process_kg_dedup_batch_releases_its_caches(
-    spark, tmp_path, persisted_rdds
+    spark, tmp_path, persisted_rdds, dedup_branch
 ):
     """A dedup micro-batch with both prior and intra-batch dups leaves no
     cached RDD behind: the persisted pages, signatures and survivor set
@@ -732,3 +744,139 @@ def test_process_kg_dedup_batch_null_url_only_extracts_nothing(spark, tmp_path):
     )
     assert not os.path.exists(os.path.join(out, "batch=0"))
     assert spark.read.parquet(store + "/batch=0").count() == 0
+
+
+def _branch_drops(trial: int) -> tuple[list, list]:
+    """Two seeded crawl drops as PAGES_DDL rows, urls prefixed by the trial.
+    Batch 0 holds history pages, in-batch mirrors, one url twice (once
+    shorter than a shingle, so its doc_id has two signature rows), a null
+    url, a null text and short pages. Batch 1 holds re-crawls and mirrors
+    of batch 0, fresh pages and their in-batch mirrors, a null url, a null
+    text and short pages."""
+    import random
+
+    rng = random.Random(trial)
+    pages, _, _, _ = fixtures.gen_corpus(16, seed=100 + trial)
+    pre = f"https://t{trial}.test/"
+
+    def row(p, url, text=...):
+        text = p["text"] if text is ... else text
+        return (url, p["warc_ts"], p["html"], text, p["lang"])
+
+    hist, fresh = pages[:8], pages[8:]
+    twice = rng.choice(hist)
+    b0 = [row(p, pre + p["url"]) for p in hist]
+    b0 += [row(p, f"{pre}m0/{p['url']}") for p in rng.sample(hist, 3)]
+    b0.append(row(twice, pre + twice["url"], twice["text"][:rng.randint(0, 7)]))
+    b0.append(row(rng.choice(hist), None))
+    b0.append(row(rng.choice(hist), f"{pre}nulltext/0", None))
+    b0 += [row(hist[0], f"{pre}short/{k}", t)
+           for k, t in enumerate(["骨折あり。", "貧血なし。", "骨折あり。"])]
+    b1 = [row(p, pre + p["url"]) for p in rng.sample(hist, 2)]
+    b1 += [row(p, f"{pre}m1/{p['url']}") for p in rng.sample(hist, 3)]
+    b1 += [row(p, f"{pre}f/{p['url']}") for p in fresh]
+    b1 += [row(p, f"{pre}fm/{p['url']}") for p in rng.sample(fresh, 2)]
+    b1.append(row(rng.choice(fresh), None))
+    b1.append(row(rng.choice(fresh), f"{pre}nulltext/1", None))
+    b1 += [row(hist[0], f"{pre}short/m{k}", t)
+           for k, t in enumerate(["骨折あり。", "肺癌。"])]
+    return b0, b1
+
+
+def _over_cap_drops() -> tuple[list, list]:
+    """Band buckets over MAX_BAND_BUCKET. Batch 0: 64 null-url copies of a
+    short page, each its own signature row, fill the cap of every band
+    bucket ahead of 3 copies with urls, which therefore keep no candidate
+    and all survive. Batch 1: a mirror of that page, and 66 copies of one
+    long page under distinct urls."""
+    (p,), _, _, _ = fixtures.gen_corpus(1, seed=99)
+    short = "咳あり。"
+
+    def row(url, text):
+        return (url, p["warc_ts"], p["html"], text, p["lang"])
+
+    b0 = [row(None, short)] * 64
+    b0 += [row(f"https://cap.test/{k}", short) for k in range(3)]
+    b1 = [row("https://cap.test/mirror", short)]
+    b1 += [row(f"https://cap.test/long/{k}", p["text"]) for k in range(66)]
+    return b0, b1
+
+
+def _run_branch(spark, tmp_path, branch, drops) -> tuple[dict, dict]:
+    """Runs the drops through one branch; per batch, the committed
+    signature rows and the triple rows (None: no triples partition)."""
+    import os
+    from collections import Counter
+
+    out = str(tmp_path / branch / "out")
+    store = str(tmp_path / branch / "store")
+    concepts = fixtures.concept_df(spark)
+    sigs, triples = {}, {}
+    for batch_id, rows in enumerate(drops):
+        streaming.process_kg_dedup_batch(
+            spark.createDataFrame(rows, fixtures.PAGES_DDL), batch_id,
+            concepts, out, store,
+        )
+        part = os.path.join(store, f"batch={batch_id}")
+        sigs[batch_id] = Counter(map(tuple, spark.read.parquet(part).collect()))
+        part = os.path.join(out, f"batch={batch_id}")
+        triples[batch_id] = (
+            Counter(map(tuple, spark.read.parquet(part).collect()))
+            if os.path.exists(part) else None
+        )
+    return sigs, triples
+
+
+def test_dedup_branches_agree_on_random_batches(spark, tmp_path, monkeypatch):
+    """The driver branch of process_kg_dedup_batch commits the same
+    signature partitions and writes the same triples as the distributed
+    branch, over a two-batch stream of 3 seeded trials plus band buckets
+    over the cap."""
+    trials = [_branch_drops(t) for t in range(3)] + [_over_cap_drops()]
+    drops = [
+        [r for t in trials for r in t[0]], [r for t in trials for r in t[1]]
+    ]
+    driver = _run_branch(spark, tmp_path, "driver", drops)
+    monkeypatch.setattr(streaming, "SMALL_BATCH_SIG_ROWS", 0)
+    distributed = _run_branch(spark, tmp_path, "distributed", drops)
+    assert driver == distributed
+    sigs, triples = driver
+    # the cap decided batch 0's short copies: all three were committed
+    cap_ids = {
+        r["doc_id"]
+        for r in streaming._page_doc_ids(
+            spark.createDataFrame(_over_cap_drops()[0][64:], fixtures.PAGES_DDL)
+        ).collect()
+    }
+    assert cap_ids <= {r[0] for r in sigs[0]}
+    # both dedup paths dropped pages, and both batches extracted triples
+    for batch_id, rows in enumerate(drops):
+        assert 0 < sum(sigs[batch_id].values()) < len(rows)
+        assert triples[batch_id]
+
+
+def test_process_kg_dedup_batch_job_budget(spark, tmp_path):
+    """A history drop (200 fresh pages and 200 mirrors of a 400-page drop
+    0) runs at most 29 + 2 Spark jobs, counted through a statusTracker job
+    group: 29 measured when the small-batch driver branch came in, against
+    49 before it, when every batch ran the distributed probes."""
+    out = str(tmp_path / "out")
+    store = str(tmp_path / "sigstore")
+    concepts = fixtures.concept_df(spark)
+    pages = fixtures.pages_df(spark, 600, seed=7)
+    doc = F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long")
+    drop0 = pages.where(doc < 400)
+    streaming.process_kg_dedup_batch(drop0, 0, concepts, out, store)
+    mirrors = drop0.where(doc % 2 == 1).withColumn(
+        "url", F.concat(F.lit("https://mirror.test/"), F.col("url"))
+    )
+    drop1 = pages.where(doc >= 400).unionByName(mirrors)
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-job-budget", "history drop")
+    try:
+        streaming.process_kg_dedup_batch(drop1, 1, concepts, out, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("dedup-job-budget"))
+    assert jobs <= 29 + 2, jobs

@@ -694,3 +694,65 @@ def test_md5_walk_weight_col_equals_weights_frame(spark):
     assert sorted(map(tuple, via_frame.collect())) == sorted(
         map(tuple, via_col.collect())
     )
+
+
+def _random_signatures(trial: int) -> list:
+    """One seeded signature table, its minima prefixed by the trial so
+    every trial has its own band buckets inside one Spark call. Minima come
+    from a small alphabet, so bands collide and agreement varies; some
+    doc_ids have two rows and one row has a null doc_id."""
+    import random
+
+    rng = random.Random(trial)
+    ids = [trial * 1000 + rng.randrange(100) for _ in range(rng.randint(4, 24))]
+    ids += [ids[0], None]
+    return [
+        (doc_id, *[f"{trial}:{k}:{rng.choice('abc')}"
+                   for k in range(textstats.N_MINHASHES)])
+        for doc_id in ids
+    ]
+
+
+def _over_cap_signatures() -> list:
+    """A band-0 bucket of 70 filler rows below y and x. The fillers agree
+    with x on band 0 only (2 of 8 minima); y agrees with x on 4, band 0
+    included, and shares no other band with it. Capped at 64 rows, the
+    bucket holds fillers only, so x keeps no candidate below it; uncapped,
+    y drops x."""
+    def sig(doc_id, tail):
+        return (doc_id, "cap:0", "cap:1", *tail)
+
+    rows = [sig(i, [f"f{i}:{k}" for k in range(2, 8)]) for i in range(70)]
+    rows.append(sig(500, ["y2", "y3", "y4", "y5", "y6", "y7"]))
+    rows.append(sig(600, ["y2", "x3", "y4", "x5", "x6", "x7"]))
+    return rows
+
+
+def _distributed_self_dups(sig, min_agree) -> set:
+    return {
+        r[0]
+        for r in textstats.dedup_against_signatures(
+            None, sig, min_agree=min_agree, new_sig=sig
+        )
+        .where(F.col("new_doc_id") > F.col("stored_doc_id"))
+        .select("new_doc_id")
+        .distinct()
+        .collect()
+    }
+
+
+def test_self_dup_doc_ids_matches_distributed_self_match(spark, monkeypatch):
+    """The driver twin of the intra-batch self-match gives the distributed
+    one's doc_ids on 40 seeded signature tables at once, plus a band
+    bucket over MAX_BAND_BUCKET whose cap decides one doc, at three
+    agreement floors."""
+    rows = [r for trial in range(40) for r in _random_signatures(trial)]
+    rows += _over_cap_signatures()
+    sig = spark.createDataFrame(rows, textstats.SIG_DDL)
+    for min_agree in (0.25, 0.5, 0.75):
+        driver = textstats.self_dup_doc_ids(rows, min_agree)
+        assert driver == _distributed_self_dups(sig, min_agree), min_agree
+    # at 0.5 the cap decides x: it hides y, and no filler verifies
+    assert 600 not in textstats.self_dup_doc_ids(rows, 0.5)
+    monkeypatch.setattr(textstats, "MAX_BAND_BUCKET", 100)
+    assert 600 in textstats.self_dup_doc_ids(rows, 0.5)
