@@ -25,7 +25,7 @@ from jamie_spark import (
 )
 from jamie_spark import search as search_mod
 from jamie_spark.concepts import MOD_DICT
-from jamie_spark.frames import local_frame
+from jamie_spark.frames import local_frame, materialize
 from jamie_spark.textstats import LANG_MARKERS, LANG_PRIORITY, STOPWORDS
 
 
@@ -251,14 +251,14 @@ def _e3_rel_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _kg_triples_window(spark, sf_dir)
     # gold feeds both eval sides — materialize the window-triple extraction
     # once (same rationale as _e3_rel_relax)
-    gold = t.select(
+    gold = materialize(t.select(
         "doc_id",
         F.col("pos_a").alias("tail_begin"),
         (F.col("pos_a") + 1).alias("tail_end"),
         F.col("pos_b").alias("head_begin"),
         (F.col("pos_b") + 1).alias("head_end"),
         "subj",
-    ).localCheckpoint(eager=True)
+    ))
     dropped = (F.col("doc_id") % 7 == 0) & (F.col("tail_begin") % 2 == 0)
     pred = gold.where(~dropped).withColumn(
         "head_end",
@@ -384,9 +384,9 @@ def _e3_rel_relax(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage); materialize the extraction once instead of running the
     # multihead explode twice (guide §2.4: shared subplans with different
     # downstream keys never hit ReuseExchange)
-    gold = jmentions.rel_token_triples(
-        _relax_annotations(spark, sf_dir)
-    ).localCheckpoint(eager=True)
+    gold = materialize(
+        jmentions.rel_token_triples(_relax_annotations(spark, sf_dir))
+    )
     doc = F.col("url").cast("long")
     dropped = (doc % 7 == 0) & (F.col("tail_id") % 2 == 0)
     pred = gold.where(~dropped).withColumn(
@@ -758,7 +758,14 @@ def _word_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical-entity graph the pipeline materializes (graph.materialize), so
     every graph-analytics oracle runs on the same parquet the driver mounts."""
     docs = _docs(spark, sf_dir, spread=True)
-    return (
+    # the edge set is VOCABULARY-sized (distinct word pairs) but its
+    # lineage is a corpus-sized explode; every kg_* consumer reads it 2-7x
+    # through branches with different shuffle keys (degrees both
+    # directions, CC probe + solve, pagerank nodes/e_deg, incremental
+    # base/batch/new_vs) that ReuseExchange cannot collapse — so the corpus
+    # explode re-ran per branch. Materialize once per call (guide §2.4 /
+    # §5: cut lineage when the payoff is re-read count).
+    return materialize(
         docs.select(F.split("text", " ").alias("ws"))
         .where(F.size("ws") >= 2)
         .select(
@@ -771,14 +778,6 @@ def _word_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.src", "e.dst")
         .distinct()
-        # the edge set is VOCABULARY-sized (distinct word pairs) but its
-        # lineage is a corpus-sized explode; every kg_* consumer reads it
-        # 2-7x through branches with different shuffle keys (degrees both
-        # directions, CC probe + solve, pagerank nodes/e_deg, incremental
-        # base/batch/new_vs) that ReuseExchange cannot collapse — so the
-        # corpus explode re-ran per branch. Materialize once per call
-        # (guide §2.4 / §5: cut lineage when the payoff is re-read count).
-        .localCheckpoint(eager=True)
     )
 
 

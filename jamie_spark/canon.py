@@ -22,8 +22,9 @@ observe:
   rounds. It raises if ``CC_MAX_ROUNDS`` pass unconverged.
 
 On shallow graphs the star algorithm costs what label propagation does,
-and it removes the diameter failure mode. ``localCheckpoint`` truncates
-lineage every round so plans don't snowball.
+and it removes the diameter failure mode. ``frames.materialize`` truncates
+lineage every round so plans don't snowball; the rounds are released when
+the solve returns.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from .concepts import dictionary_rows
-from .frames import local_frame
+from .frames import local_frame, materialize, scope
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -131,69 +132,68 @@ def _star_components(edges: "DataFrame") -> "DataFrame":
     an order-insensitive checksum of the edge set. A null endpoint links
     nothing and is no vertex, as in ``_union_find``.
     """
-    verts = _endpoints(edges).localCheckpoint(eager=True)
-    e = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev = None
-    converged = False
-    for _ in range(CC_MAX_ROUNDS):
-        if e.isEmpty():
-            converged = True
-            break
-        # large-star over the symmetric closure
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = sym.groupBy("u").agg(F.min("v").alias("mv")).select(
-            "u", F.least("u", F.col("mv")).alias("m")
-        )
-        e1 = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    with scope() as s:
+        verts = materialize(_endpoints(edges))
+        e = materialize(
+            edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        # small-star over the large->small orientation
-        dr = e1.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m2 = dr.groupBy("u").agg(F.min("v").alias("m"))
-        e2 = (
-            dr.join(m2, "u")
-            .select(F.col("v").alias("node"), "m")
-            .union(m2.select(F.col("u").alias("node"), "m"))
-            .where(F.col("node") != F.col("m"))
-            .select(F.col("node").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+        prev = None
+        for _ in range(CC_MAX_ROUNDS):
+            if e.isEmpty():
+                break
+            # large-star over the symmetric closure
+            sym = e.union(
+                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            m = sym.groupBy("u").agg(F.min("v").alias("mv")).select(
+                "u", F.least("u", F.col("mv")).alias("m")
+            )
+            e1 = (
+                sym.join(m, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .where(F.col("u") != F.col("v"))
+                .distinct()
+            )
+            # small-star over the large->small orientation
+            dr = e1.select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            ).distinct()
+            m2 = dr.groupBy("u").agg(F.min("v").alias("m"))
+            e2 = materialize(
+                dr.join(m2, "u")
+                .select(F.col("v").alias("node"), "m")
+                .union(m2.select(F.col("u").alias("node"), "m"))
+                .where(F.col("node") != F.col("m"))
+                .select(F.col("node").alias("u"), F.col("m").alias("v"))
+                .distinct()
+            )
+            cur = _checksum(e2)
+            e = e2
+            if cur == prev:
+                break
+            prev = cur
+        else:
+            # an unconverged edge set can hold several (u -> v) edges per
+            # vertex, which would emit duplicate conflicting (vertex,
+            # component) rows — never return that silently
+            raise RuntimeError(
+                f"star connected_components did not converge within"
+                f" {CC_MAX_ROUNDS} rounds; components are non-canonical"
+            )
+        # converged: e holds (vertex -> component-min) star edges; roots
+        # map to themselves, isolated vertices cannot occur (every vertex
+        # came from an edge), so coalesce covers exactly the roots.
+        comps = verts.join(
+            e.select(F.col("u").alias("vertex"), F.col("v").alias("c")),
+            "vertex",
+            "left",
+        ).select(
+            "vertex", F.coalesce("c", F.col("vertex")).alias("component")
         )
-        cur = _checksum(e2)
-        e = e2
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # an unconverged edge set can hold several (u -> v) edges per
-        # vertex, which would emit duplicate conflicting (vertex,
-        # component) rows — never return that silently
-        raise RuntimeError(
-            f"star connected_components did not converge within"
-            f" {CC_MAX_ROUNDS} rounds; components are non-canonical"
-        )
-    # converged: e holds (vertex -> component-min) star edges; roots map to
-    # themselves, isolated vertices cannot occur (every vertex came from an
-    # edge), so coalesce covers exactly the roots.
-    return verts.join(
-        e.select(F.col("u").alias("vertex"), F.col("v").alias("c")),
-        "vertex",
-        "left",
-    ).select(
-        "vertex", F.coalesce("c", F.col("vertex")).alias("component")
-    )
+        return s.keep(materialize(comps))
 
 
 def connected_components(

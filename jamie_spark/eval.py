@@ -261,14 +261,15 @@ def mhs_eval(gold_ann: "DataFrame", pred_ann: "DataFrame") -> dict:
     rel_mention — each an independent multiset P/R/F1.
 
     The five metrics each collect() their own counts, so the inputs are
-    persisted for the battery — without this, an annotation table fed
-    straight from the inference stage would re-run the model once per
-    metric (~5x the dominant cost)."""
-    from . import mentions as m
+    materialized for the battery, in one ``frames.scope()`` that releases
+    them on return — without this, an annotation table fed straight from
+    the inference stage would re-run the model once per metric (~5x the
+    dominant cost)."""
+    from . import frames, mentions as m
 
-    gold_ann = gold_ann.persist()
-    pred_ann = pred_ann.persist()
-    try:
+    with frames.scope():
+        gold_ann = frames.materialize(gold_ann)
+        pred_ann = frames.materialize(pred_ann)
         out = eval_mentions(
             m.mentions_from_annotations(gold_ann),
             m.mentions_from_annotations(pred_ann),
@@ -283,7 +284,4 @@ def mhs_eval(gold_ann: "DataFrame", pred_ann: "DataFrame") -> dict:
             m.triples_from_annotations(gold_ann),
             m.triples_from_annotations(pred_ann),
         )
-    finally:
-        gold_ann.unpersist()
-        pred_ann.unpersist()
     return out

@@ -1,9 +1,13 @@
-"""Driver-built tables as local relations: every small table the library
-builds on the driver (the canonical map, lineage rows, seed and key lists)
-goes through :func:`local_frame`."""
+"""Driver-built tables (:func:`local_frame`) and pinned intermediates: a
+pin is made by :func:`materialize` and released by the :class:`scope` it
+was made in. A function whose result is materialized opens its own scope
+and ``keep``s the result; one that returns a lazy frame leaves its pins to
+the caller's scope. Outside any scope a pin lives until the ContextCleaner
+frees it on JVM GC."""
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterable, Sequence
 from typing import TYPE_CHECKING
 
@@ -35,3 +39,47 @@ def local_frame(
         schema=to_arrow_schema(schema),
     )
     return spark.createDataFrame(table, schema)
+
+
+#: per driver thread, the open scopes, innermost last
+_open = threading.local()
+
+
+def _scopes() -> list["scope"]:
+    return _open.__dict__.setdefault("stack", [])
+
+
+def materialize(df: "DataFrame") -> "DataFrame":
+    """``df`` computed now (one Spark job) and pinned as a local checkpoint,
+    held by this thread's innermost open :class:`scope`."""
+    out = df.localCheckpoint(eager=True)
+    if _scopes():
+        _scopes()[-1]._held.append(out)
+    return out
+
+
+class scope:
+    """On exit, errors included, unpins (blocking) every frame materialized
+    inside it and every frame given to the constructor. A released frame
+    fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` when read."""
+
+    def __init__(self, *held: "DataFrame") -> None:
+        self._held = list(held)
+
+    def __enter__(self) -> "scope":
+        _scopes().append(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _scopes().pop()
+        for df in self._held:
+            df._jdf.queryExecution().logical().rdd().unpersist(True)
+
+    def keep(self, df: "DataFrame") -> "DataFrame":
+        """Hand ``df``, materialized in this scope (else ``ValueError``), on
+        to the enclosing scope, or outside any to the ContextCleaner."""
+        self._held.remove(df)
+        i = _scopes().index(self)
+        if i:
+            _scopes()[i - 1]._held.append(df)
+        return df

@@ -37,7 +37,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from .frames import local_frame
+from .frames import local_frame, materialize, scope
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -195,7 +195,7 @@ def triangles(edges: "DataFrame") -> "DataFrame":
     # the raw scan + distinct otherwise; the branches shuffle on different
     # keys so ReuseExchange cannot collapse them) — materialize once, the
     # same treatment neighbor_jaccard gives its adjacency
-    und = _undirected(edges).localCheckpoint(eager=True)
+    und = materialize(_undirected(edges))
     oriented = orient(edges, und=und)
     w1 = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
     w2 = oriented.select(F.col("lo").alias("x"), F.col("hi").alias("z"))
@@ -241,7 +241,7 @@ def label_propagation(edges: "DataFrame", iters: int = 4) -> "DataFrame":
     the round count independent of data (communities stabilize in a handful
     of rounds; convergence detection would add a driver action per round).
 
-    Lineage is truncated with an eager localCheckpoint every
+    Lineage is truncated with ``frames.materialize`` every
     ``_LPA_CHECKPOINT_EVERY`` rounds, not every round — each eager
     checkpoint is a full materialization barrier (a scheduled job), pure
     overhead when Catalyst can plan 2-3 chained rounds as one job; unbounded
@@ -250,35 +250,27 @@ def label_propagation(edges: "DataFrame", iters: int = 4) -> "DataFrame":
 
     Runs Spark jobs when called: the labels are computed here.
     """
-    adj = _adjacency(_undirected(edges)).persist()
-    nodes = adj.select("node").distinct().persist()
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for it in range(iters):
-        nbr_labels = adj.join(
-            labels.select(
-                F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
-            ),
-            "nbr",
-        )
-        counts = nbr_labels.groupBy("node", "nbr_label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        best = counts.groupBy("node").agg(
-            F.min_by(
-                "nbr_label", F.struct((-F.col("cnt")).alias("neg"), "nbr_label")
-            ).alias("label")
-        )
-        labels = nodes.join(best, "node", "left").select(
-            "node", F.coalesce(F.col("label"), F.col("node")).alias("label")
-        )
-        if (it + 1) % _LPA_CHECKPOINT_EVERY == 0 and it + 1 < iters:
-            labels = labels.localCheckpoint(eager=True)
-    # materialize BEFORE dropping the loop-invariant caches: the returned
-    # frame must not silently recompute adj/nodes from the raw scan
-    labels = labels.localCheckpoint(eager=True)
-    adj.unpersist()
-    nodes.unpersist()
-    return labels
+    with scope() as s:
+        adj = materialize(_adjacency(_undirected(edges)))
+        nodes = materialize(adj.select("node").distinct())
+        labels = nodes.select("node", F.col("node").alias("label"))
+        for it in range(iters):
+            nbr_labels = adj.join(labels.toDF("nbr", "nbr_label"), "nbr")
+            counts = nbr_labels.groupBy("node", "nbr_label").agg(
+                F.count(F.lit(1)).alias("cnt")
+            )
+            best = counts.groupBy("node").agg(
+                F.min_by(
+                    "nbr_label",
+                    F.struct((-F.col("cnt")).alias("neg"), "nbr_label"),
+                ).alias("label")
+            )
+            labels = nodes.join(best, "node", "left").select(
+                "node", F.coalesce("label", "node").alias("label")
+            )
+            if (it + 1) % _LPA_CHECKPOINT_EVERY == 0 and it + 1 < iters:
+                labels = materialize(labels)
+        return s.keep(materialize(labels))
 
 
 def neighbor_jaccard(
@@ -303,7 +295,7 @@ def neighbor_jaccard(
     # adj feeds THREE distinct subplans (deg, both wedge sides) with
     # different shuffle keys — ReuseExchange can't collapse them, so
     # materialize once instead of re-running the scan + distinct 3x
-    adj = _adjacency(_undirected(edges)).localCheckpoint(eager=True)
+    adj = materialize(_adjacency(_undirected(edges)))
     # degree over adjacency == _und_degrees over und (both directions once)
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     w1 = adj.select(F.col("node").alias("node_a"), "nbr")
@@ -364,24 +356,16 @@ def kcore(edges: "DataFrame", k: int = 3, iters: int = 5) -> "DataFrame":
 
     Runs Spark jobs when called: the core is computed here.
     """
-    und = _undirected(edges).persist()
-    cur = und
-    for it in range(iters):
-        keep = _und_degrees(cur).where(F.col("deg") >= k).select("node")
-        cur = (
-            cur.join(keep.select(F.col("node").alias("a")), "a", "left_semi")
-            .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
-            .select("a", "b")
-        )
-        if (it + 1) % _KCORE_CHECKPOINT_EVERY == 0 and it + 1 < iters:
-            cur = cur.localCheckpoint(eager=True)
-    out = (
-        _und_degrees(cur)
-        .where(F.col("deg") >= k)
-        .localCheckpoint(eager=True)
-    )
-    und.unpersist()
-    return out
+    with scope() as s:
+        cur = materialize(_undirected(edges))
+        for it in range(iters):
+            keep = _und_degrees(cur).where(F.col("deg") >= k).select("node")
+            cur = cur.join(keep.toDF("a"), "a", "left_semi").join(
+                keep.toDF("b"), "b", "left_semi"
+            ).select("a", "b")
+            if (it + 1) % _KCORE_CHECKPOINT_EVERY == 0 and it + 1 < iters:
+                cur = materialize(cur)
+        return s.keep(materialize(_und_degrees(cur).where(F.col("deg") >= k)))
 
 
 _PR_CHECKPOINT_EVERY = 3
@@ -440,59 +424,55 @@ def pagerank_weighted(
     int64, i.e. out-weight < ~3e9 — pre-bucket heavier weights).
 
     Each iteration is one join (edges x ranks, shuffled on src) + one
-    aggregation (shuffled on dst); lineage is truncated with an eager
-    localCheckpoint every ``_PR_CHECKPOINT_EVERY`` rounds (each is a full
-    materialization barrier — pure overhead when Catalyst can plan a few
-    chained rounds as one job) and once at the end, BEFORE the
-    loop-invariant caches are released. At cluster scale a reliable
-    checkpoint dir serves the same purpose. Runs Spark jobs when called:
-    the ranks are computed here.
+    aggregation (shuffled on dst); lineage is truncated with
+    ``frames.materialize`` every ``_PR_CHECKPOINT_EVERY`` rounds (each is a
+    full materialization barrier — pure overhead when Catalyst can plan a
+    few chained rounds as one job) and once at the end, before the loop
+    invariants and intermediate rounds are released on return. Runs Spark
+    jobs when called: the ranks are computed here.
     """
     e = edges.groupBy("src", "dst").agg(F.sum("w").cast("long").alias("w"))
-    # both loop-invariant inputs are persisted: every iteration re-reads the
-    # vertex set AND the weight-annotated edges — without the cache each
-    # round would re-run the upstream scan + aggregation lineage
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    e_deg = e.join(out_w, "src").persist()
     base = scale * (100 - damping_num) // 100
-    ranks = nodes.select(
-        "node", F.lit(int(scale)).cast("long").alias("rank_fp")
-    )
-    for it in range(iters):
-        contribs = (
-            e_deg.join(ranks, e_deg["src"] == ranks["node"])
-            .select(
-                F.col("dst"),
-                (
-                    F.expr("rank_fp div out_w") * F.col("w")
-                    + F.expr("((rank_fp % out_w) * w) div out_w")
-                ).alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
+    with scope() as s:
+        # both loop invariants are materialized: every iteration re-reads
+        # the vertex set AND the weight-annotated edges, which would
+        # otherwise re-run the upstream scan + aggregation each round
+        nodes = materialize(
+            e.select(F.col("src").alias("node"))
+            .unionAll(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(int(base))
-                    + _damped(damping_num, "coalesce(in_mass, 0L)")
-                ).cast("long").alias("rank_fp"),
-            )
+        out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
+        e_deg = materialize(e.join(out_w, "src"))
+        ranks = nodes.select(
+            "node", F.lit(int(scale)).cast("long").alias("rank_fp")
         )
-        if (it + 1) % _PR_CHECKPOINT_EVERY == 0 and it + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    ranks = ranks.localCheckpoint(eager=True)
-    e_deg.unpersist()
-    nodes.unpersist()
-    return ranks
+        for it in range(iters):
+            contribs = (
+                e_deg.join(ranks, e_deg["src"] == ranks["node"])
+                .select(
+                    F.col("dst"),
+                    (
+                        F.expr("rank_fp div out_w") * F.col("w")
+                        + F.expr("((rank_fp % out_w) * w) div out_w")
+                    ).alias("contrib"),
+                )
+                .groupBy("dst")
+                .agg(F.sum("contrib").alias("in_mass"))
+            )
+            ranks = (
+                nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
+                .select(
+                    "node",
+                    (
+                        F.lit(int(base))
+                        + _damped(damping_num, "coalesce(in_mass, 0L)")
+                    ).cast("long").alias("rank_fp"),
+                )
+            )
+            if (it + 1) % _PR_CHECKPOINT_EVERY == 0 and it + 1 < iters:
+                ranks = materialize(ranks)
+        return s.keep(materialize(ranks))
 
 
 _BFS_CHECKPOINT_EVERY = 3
@@ -520,8 +500,8 @@ def bfs_distances(
     BFS bound; the settled set grows monotonically and is the anti-join's
     build side. Bounded rounds keep the plan finite at web scale (a 100 TB
     KG has effectively unbounded diameter through crawl-noise chains; every
-    production path query caps its radius). Lineage is truncated with an
-    eager localCheckpoint every ``_BFS_CHECKPOINT_EVERY`` rounds, same
+    production path query caps its radius). Lineage is truncated with
+    ``frames.materialize`` every ``_BFS_CHECKPOINT_EVERY`` rounds, same
     contract as ``pagerank_fixed``; early-exits when the frontier empties.
 
     Engine-portable by construction (set arithmetic only, no floats), so the
@@ -529,33 +509,31 @@ def bfs_distances(
 
     Runs Spark jobs when called: the distances are computed here.
     """
-    e = edges.select("src", "dst").distinct().persist()
     spark = edges.sparkSession
     settled = local_frame(spark, [(source, 0)], "node string, dist long")
     frontier = settled.select("node")
-    for hop in range(1, max_hops + 1):
-        # materialize the frontier ONCE per round: it is consumed three
-        # times (the emptiness check, the settled union, next round's
-        # join) — without this each consumer replays the join+anti-join
-        nxt = (
-            e.join(frontier, e["src"] == frontier["node"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(settled.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        settled = settled.unionByName(
-            nxt.select("node", F.lit(hop).cast("long").alias("dist"))
-        )
-        if hop % _BFS_CHECKPOINT_EVERY == 0:
-            # the settled union chain feeds every later anti-join
-            settled = settled.localCheckpoint(eager=True)
-        frontier = nxt
-    settled = settled.localCheckpoint(eager=True)
-    e.unpersist()
-    return settled
+    with scope() as s:
+        e = materialize(edges.select("src", "dst").distinct())
+        for hop in range(1, max_hops + 1):
+            # materialize the frontier ONCE per round: it is consumed three
+            # times (the emptiness check, the settled union, next round's
+            # join) — without this each consumer replays the join+anti-join
+            nxt = materialize(
+                e.join(frontier, e["src"] == frontier["node"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(settled.select("node"), "node", "left_anti")
+            )
+            if nxt.isEmpty():
+                break
+            settled = settled.unionByName(
+                nxt.select("node", F.lit(hop).cast("long").alias("dist"))
+            )
+            if hop % _BFS_CHECKPOINT_EVERY == 0:
+                # the settled union chain feeds every later anti-join
+                settled = materialize(settled)
+            frontier = nxt
+        return s.keep(materialize(settled))
 
 
 def triple_provenance(
@@ -637,20 +615,15 @@ def negative_sample(
     # candidates, the positive anti-join) plus the optional eager count —
     # materialize once instead of re-running the upstream extraction +
     # distinct per consumer
-    t = triples.select("subj", "pred", "obj").distinct().localCheckpoint(
-        eager=True
-    )
+    t = materialize(triples.select("subj", "pred", "obj").distinct())
     # corruption vocabulary = ALL entities (heads and tails, the TransE
     # convention): a tails-only vocab can be so saturated by positives on
     # a dense dictionary-derived graph that every corruption collides and
     # the sample comes back empty
     # vocab feeds the count, and the rank prefix-sum reads it through two
     # branches — materialize (it is entity-cardinality, not corpus rows)
-    ent = (
-        t.select(F.col("subj").alias("obj"))
-        .union(t.select("obj"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    ent = materialize(
+        t.select(F.col("subj").alias("obj")).union(t.select("obj")).distinct()
     )
     if n_entities is None:
         n_entities = ent.count()

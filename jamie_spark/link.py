@@ -26,6 +26,7 @@ from __future__ import annotations
 from collections import Counter
 from typing import TYPE_CHECKING
 
+from . import frames
 from .concepts import dictionary_rows
 from .textnorm import zen_to_han
 
@@ -107,9 +108,9 @@ def link_surfaces(
     travels to the tasks in the function's closure, so it must fit the
     driver and each Python worker.
 
-    ``materialize=True`` returns the links eagerly ``localCheckpoint``-ed:
-    callers read them twice as broadcast sides (subject and object), which
-    would otherwise run the linking pass twice.
+    ``materialize=True`` returns the links materialized in the caller's
+    scope: callers read them twice as broadcast sides (subject and object),
+    which would otherwise run the linking pass twice.
     """
     return link_against(surfaces, dictionary_rows(concept_dict), materialize)
 
@@ -149,4 +150,4 @@ def link_against(
             "score double, method string",
         )
     )
-    return links.localCheckpoint(eager=True) if materialize else links
+    return frames.materialize(links) if materialize else links

@@ -15,7 +15,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from . import canon, graph, infer, lineage, link, mentions as mentions_mod
+from . import canon, frames, graph, infer, lineage, link
+from . import mentions as mentions_mod
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -52,7 +53,9 @@ def run_kg(
     parquet checkpoint and both passes read it back — the sandbox analog of
     the per-stage Iceberg checkpoint (N6), and ~3x cheaper than Spark's
     columnar in-memory cache for this row volume (measured: 17s write+reread
-    vs 54s persist at 9.4M rows). Without a dir it falls back to persist().
+    vs 54s persist at 9.4M rows). Without a dir it is materialized; the
+    lazy frames returned read it and the materialized links, which the
+    caller's ``frames.scope()`` (or :func:`release`) unpins.
 
     The linking index and the canonical map are built from one dictionary
     collect (``concepts.dictionary_rows``).
@@ -73,9 +76,9 @@ def run_kg(
         ).parquet(path)
         flat = spark.read.parquet(path)
     else:
-        flat = infer.annotate_pages_flat(
+        flat = frames.materialize(infer.annotate_pages_flat(
             pages, lang=lang, mode=mode, model_spec=model_spec
-        ).persist()
+        ))
     ext = {
         "annotations": flat,
         "mentions": mentions_mod.mentions_from_flat(flat),
@@ -95,30 +98,21 @@ def run_kg(
         )
         .distinct()
     )
-    if checkpoint_dir is None:
-        # vocabulary-sized from here on: truncate the corpus-sized lineage so
-        # the linking pass doesn't drag the full upstream plan through
-        # re-optimization. With a parquet checkpoint the lineage is already
-        # short.
-        surfaces = surfaces.localCheckpoint(eager=True)
     dict_rows = dictionary_rows(concept_dict)
     links = link.link_against(surfaces, dict_rows)
     concept_canon = canon.canonical_map(pages.sparkSession, dict_rows)
     canonical = graph.canonical_triples(triples, links, concept_canon)
-    cached = [flat] if checkpoint_dir is None else []
+    pinned = [links] if checkpoint_dir is not None else [flat, links]
     return {**ext, "links": links, "concept_canon": concept_canon,
-            "canonical_triples": canonical, "_cached": cached}
+            "canonical_triples": canonical, "_pinned": pinned}
 
 
 def release(result: dict) -> None:
-    """Unpersist everything a run_kg result pinned (call once per micro-batch
-    / bucket in long-running loops; checkpoint blocks are freed by the
-    context cleaner when the returned DataFrames go out of scope)."""
-    for df in result.get("_cached", []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    """Unpin what a :func:`run_kg` call materialized (the extraction output
+    and the links) for a caller outside any ``frames.scope()``; inside
+    one, the scope's exit does the same."""
+    with frames.scope(*result["_pinned"]):
+        pass
 
 
 def run_with_lineage(
@@ -161,24 +155,22 @@ def run_with_lineage(
 
     def _run_bucket(b: int) -> None:
         subset = bucketed.where(F.col("_bucket") == b).drop("_bucket")
-        result = run_kg(subset, concept_dict, lang=lang)
-        out = result["canonical_triples"].persist()
-        n_triples = out.count()
         # a second pass over the source, but column-pruned by design: the
         # agg touches only `url` (and the bucket filter is a function of
         # url), so a columnar source reads one thin column, never the html
-        # payload. Deriving these stats from the persisted annotations
+        # payload. Deriving these stats from the materialized annotations
         # would silently drop no-sentence pages from row_count.
         stats = subset.agg(
             F.min("url").alias("lo"), F.max("url").alias("hi"),
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
-        # deterministic per-bucket overwrite -> idempotent on re-run
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "data", f"bucket={b}")
-        )
-        out.unpersist()
-        release(result)
+        path = os.path.join(out_dir, "data", f"bucket={b}")
+        # one scope per bucket, on the bucket's own thread; deterministic
+        # per-bucket overwrite -> idempotent on re-run
+        with frames.scope():
+            out = run_kg(subset, concept_dict, lang=lang)["canonical_triples"]
+            out.write.mode("overwrite").parquet(path)
+        n_triples = spark.read.parquet(path).count()
         lineage.append_lineage_row(
             spark, out_dir, stage, b, stats["lo"], stats["hi"],
             mv, stats["n"], n_triples, n_buckets=n_buckets,

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from . import pipeline, textstats
 from .fixtures import PAGES_DDL
-from .frames import local_frame
+from .frames import local_frame, materialize, scope
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -91,15 +91,13 @@ def _write_kg_batch(
 ) -> None:
     """Extract and overwrite ``out_dir/batch={batch_id}`` from non-empty
     ``pages``; callers check emptiness, each with the probe it already has."""
-    result = pipeline.run_kg(pages, concept_dict)
     from . import graph
 
-    (
-        graph.salted(result["canonical_triples"], n_buckets=8, n_salts=4)
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"batch={batch_id}"))
-    )
-    pipeline.release(result)
+    with scope():
+        triples = pipeline.run_kg(pages, concept_dict)["canonical_triples"]
+        graph.salted(triples, n_buckets=8, n_salts=4).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
 
 def read_stream_output(spark: "SparkSession", out_dir: str) -> "DataFrame":
@@ -230,9 +228,11 @@ def process_kg_dedup_batch(
     semi-joined down to the batch's band keys before any window
     (textstats.dedup_against_signatures).
 
-    The size of the batch's persisted signature table picks one of two
-    branches; its probe is one ``limit(SMALL_BATCH_SIG_ROWS + 1).collect()``
-    (:func:`_small_batch_rows`), skipped when the threshold is 0.
+    The batch runs in one ``frames.scope()``, released when it returns or
+    fails; its pages (with doc_ids) and signature table are materialized
+    first. The table's size picks one of two branches; its probe is one
+    ``limit(SMALL_BATCH_SIG_ROWS + 1).collect()`` (:func:`_small_batch_rows`),
+    skipped when the threshold is 0.
 
     * At most ``SMALL_BATCH_SIG_ROWS`` rows: the driver decides from the
       collected rows. The intra-batch self-match runs in Python
@@ -240,16 +240,17 @@ def process_kg_dedup_batch(
       stored signatures against the rows as a local relation and collects
       its dup doc_ids; its store side stays distributed. The survivors are
       a driver set, handed to the extraction and the commit as a local
-      relation. Jobs: the emptiness check, the probe's collect and the
-      null-text doc_id collect, the prior probe's stages and collect,
-      run_kg on the survivors with its write, and the commit's write.
+      relation. Jobs: the emptiness check, the two materializations, the
+      probe's collect and the null-text doc_id collect, the prior probe's
+      stages and collect, run_kg on the survivors with its write, and the
+      commit's write.
     * Above it: the prior probe and the intra-batch band self-join are
-      distributed plans, and the survivor doc_ids are persisted and
+      distributed plans, and the survivor doc_ids are materialized and
       counted before the extraction and the commit.
 
     A history drop of 200 fresh pages and 200 mirrors against a 400-page
-    history runs 29 jobs on the driver branch and 48 on the distributed one
-    (tests/test_streaming.py counts the first).
+    history runs 25 jobs on the driver branch and 38 on the distributed one
+    (tests/test_streaming.py caps the first).
     """
     if batch_df.isEmpty():
         return
@@ -260,20 +261,19 @@ def process_kg_dedup_batch(
     # scheduler/stage-latency-bound, not map-parallelism-bound, so the
     # extra shuffle+job per batch only adds latency (contrast: the batch
     # declared-query tables, where the same spread won 2-5x).
-    pages = _page_doc_ids(batch_df).persist()
-    # signatures computed ONCE per batch (shingling dominates the per-batch
-    # cost) and reused for both the dedup probe and the commit step
-    new_sig = textstats.minhash_signature_table(
-        pages.select("doc_id", "text"),
-        n=STREAM_SHINGLE_N,
-        unit=STREAM_SHINGLE_UNIT,
-        # pages shorter than one shingle still get a whole-text signature
-        # row: tiny pages must dedup (at least exactly) and enter the
-        # store like everything else (ADVICE r04)
-        short_fallback=True,
-    ).persist()
-    keep = None
-    try:
+    with scope():
+        pages = materialize(_page_doc_ids(batch_df))
+        # signatures computed ONCE per batch (shingling dominates the
+        # per-batch cost) and reused for both the dedup probe and the commit
+        new_sig = materialize(textstats.minhash_signature_table(
+            pages.select("doc_id", "text"),
+            n=STREAM_SHINGLE_N,
+            unit=STREAM_SHINGLE_UNIT,
+            # pages shorter than one shingle still get a whole-text
+            # signature row: tiny pages must dedup (at least exactly) and
+            # enter the store like everything else (ADVICE r04)
+            short_fallback=True,
+        ))
         prior = _prior_signatures(spark, store_dir, batch_id)
         small = _small_batch_rows(pages, new_sig)
         if small is not None:
@@ -291,7 +291,7 @@ def process_kg_dedup_batch(
                 spark, [(i,) for i in sorted(keep_ids)], "doc_id long"
             )
         else:
-            keep = _distributed_keep(pages, new_sig, prior).persist()
+            keep = materialize(_distributed_keep(pages, new_sig, prior))
             n_keep = keep.count()
         if n_keep:
             _write_kg_batch(
@@ -302,11 +302,6 @@ def process_kg_dedup_batch(
         new_sig.join(keep, "doc_id", "left_semi").write.mode(
             "overwrite"
         ).parquet(os.path.join(store_dir, f"batch={batch_id}"))
-    finally:
-        if keep is not None:
-            keep.unpersist()
-        new_sig.unpersist()
-        pages.unpersist()
 
 
 def _history_dups(prior: "DataFrame", new_sig: "DataFrame") -> "DataFrame":

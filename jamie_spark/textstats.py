@@ -25,7 +25,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .frames import local_frame
+from .frames import local_frame, materialize
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -308,7 +308,7 @@ def ngram_jaccard_pairs(
 
     Runs one Spark job when called: that eager checkpoint of ``sh``.
     """
-    sh = _filtered_shingles(docs, n, max_df).localCheckpoint(eager=True)
+    sh = materialize(_filtered_shingles(docs, n, max_df))
     # the posting-list self-join must SHUFFLE on the shingle key: the
     # checkpointed stream's stats under-estimate and Catalyst otherwise
     # broadcasts the whole corpus-sized (doc_id, shingle) table (~150MB
@@ -577,10 +577,8 @@ def dedup_against_signatures(
         # consumed three times (batch bands -> band keys, the candidate
         # join, and the agreement verify) — materialize once instead of
         # re-shingling the batch per consumer; callers that computed the
-        # table themselves (the streaming loop) pass new_sig persisted
-        new_sig = _minhash_sig_table(new_docs, n, unit=unit).localCheckpoint(
-            eager=True
-        )
+        # table themselves (the streaming loop) pass new_sig materialized
+        new_sig = materialize(_minhash_sig_table(new_docs, n, unit=unit))
     new_bands = _bands_of(new_sig).select(
         F.col("doc_id").alias("new_doc_id"), "band_id", "band_key"
     )
@@ -677,13 +675,13 @@ def minhash_pairs(
     # windowed frame once instead of re-running the shingle explode +
     # signature aggregation + window sort per side (ReuseExchange only
     # collapses bit-identical subtrees, and the small/big filters differ)
-    ranked = sig.select(
+    ranked = materialize(sig.select(
         "doc_id",
         "band_id",
         "band_key",
         F.count(F.lit(1)).over(wp).alias("bsz"),
         F.row_number().over(wp.orderBy("doc_id")).alias("rn"),
-    ).localCheckpoint(eager=True)
+    ))
     small = ranked.where(F.col("bsz") <= max_bucket)
     pairs_small = (
         small.alias("a")
@@ -733,11 +731,9 @@ def near_dup_pairs(
     Runs Spark jobs when called: the eager checkpoints of both shingle
     streams and the one inside :func:`minhash_pairs`.
     """
-    sh_all = _distinct_shingles(docs, n).localCheckpoint(eager=True)
+    sh_all = materialize(_distinct_shingles(docs, n))
     cand = minhash_pairs(docs, n, sh=sh_all)
-    sh = _filtered_shingles(docs, n, max_df, sh=sh_all).localCheckpoint(
-        eager=True
-    )
+    sh = materialize(_filtered_shingles(docs, n, max_df, sh=sh_all))
     # shingle attachments SHUFFLE (same rationale as ngram_jaccard_pairs:
     # the checkpoint's stats otherwise broadcast the corpus-sized shingle
     # stream for both attachments — fine for a fixture, unboundable at
@@ -788,10 +784,10 @@ def dedup_clusters(
     # CollectLimit's incremental partition scale-up would re-drive the
     # whole verify pipeline's final stage several times; the distributed
     # branch reads the edge set multiple times too
-    edges = pairs.select(
+    edges = materialize(pairs.select(
         F.lpad(F.col("doc_a").cast("string"), pad, "0").alias("src"),
         F.lpad(F.col("doc_b").cast("string"), pad, "0").alias("dst"),
-    ).localCheckpoint(eager=True)
+    ))
     cc = connected_components(edges)
     out = cc.select(
         F.col("vertex").cast("long").alias("doc_id"),

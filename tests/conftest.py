@@ -20,9 +20,11 @@ def spark():
 
 @pytest.fixture
 def persisted_rdds(spark):
-    """Counts persistent RDDs, leaving out ``localCheckpoint`` blocks: the
-    ContextCleaner frees those when their plans are garbage-collected, so
-    their count moves with JVM GC timing, not with what a caller released."""
+    """Counts persistent RDDs, leaving out local checkpoint blocks: the
+    library pins only through ``frames.materialize``, whose checkpoints a
+    ``frames.scope()`` releases and which, outside any scope, the
+    ContextCleaner frees with their plans on JVM GC, so their count moves
+    with GC timing. What this counts is what a caller ``persist()``-ed."""
 
     def count() -> int:
         rdds = spark.sparkContext._jsc.getPersistentRDDs()
@@ -30,5 +32,24 @@ def persisted_rdds(spark):
             not rdds.get(k).rdd().isLocallyCheckpointed()
             for k in rdds.keySet().toArray()
         )
+
+    return count
+
+
+@pytest.fixture
+def pinned_rdds(spark):
+    """Counts every persistent RDD made since its first call, local
+    checkpoints included, so the first call returns 0. RDD ids only grow:
+    a pin an earlier test left to the ContextCleaner, which frees it on
+    JVM GC at any time, never moves the count; a pin the code under test
+    leaves behind always does."""
+    sc = spark.sparkContext
+    mark = []
+
+    def count() -> int:
+        if not mark:
+            mark.append(sc.emptyRDD().id())
+        ids = sc._jsc.getPersistentRDDs().keySet().toArray()
+        return sum(int(i) > mark[0] for i in ids)
 
     return count

@@ -10,6 +10,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from jamie_spark import frames
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
 TABLES = [
@@ -49,12 +50,12 @@ def test_oracle_keys_subset_of_queries():
 
 
 @pytest.mark.parametrize("name", ORACLED)
-def test_query_matches_oracle(spark, duck, name):
-    _assert_matches_oracle(spark, duck, name)
+def test_query_matches_oracle(spark, duck, pinned_rdds, name):
+    _assert_matches_oracle(spark, duck, pinned_rdds, name)
 
 
 def test_stream_dedup_replay_distributed_matches_oracle(
-    spark, duck, monkeypatch
+    spark, duck, pinned_rdds, monkeypatch
 ):
     """stream_dedup_replay again, its dedup micro-batches forced onto the
     distributed branch, into a fresh replay dir so no partition of an
@@ -63,14 +64,19 @@ def test_stream_dedup_replay_distributed_matches_oracle(
 
     monkeypatch.setattr(streaming, "SMALL_BATCH_SIG_ROWS", 0)
     shutil.rmtree(f"/tmp/jamie_stream_replay_{os.getpid()}", ignore_errors=True)
-    _assert_matches_oracle(spark, duck, "stream_dedup_replay")
+    _assert_matches_oracle(spark, duck, pinned_rdds, "stream_dedup_replay")
 
 
-def _assert_matches_oracle(spark, duck, name):
+def _assert_matches_oracle(spark, duck, pinned_rdds, name):
+    """Also: the entry and its collect run in one ``frames.scope()``, and
+    no RDD they pinned outlives it."""
     q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
-    spark_cols = [c.lower() for c in sdf.columns]
-    spark_rows = _rows_to_sorted([tuple(r) for r in sdf.collect()])
+    before = pinned_rdds()
+    with frames.scope():
+        sdf = q(spark, SF_DIR)
+        spark_cols = [c.lower() for c in sdf.columns]
+        spark_rows = _rows_to_sorted([tuple(r) for r in sdf.collect()])
+    assert pinned_rdds() == before, f"{name}: pinned RDDs left behind"
 
     res = duck.sql(entry_mod.oracle_sql()[name])
     duck_cols = [c.lower() for c in res.columns]

@@ -272,6 +272,24 @@ def test_crawl_frontier_normalizes_crawled_side(spark):
     assert "https://b.test/page" not in got
 
 
+def test_crawl_frontier_releases_its_link_extraction(
+    spark, persisted_rdds, pinned_rdds
+):
+    """Without ``links`` the frontier extracts them itself; that corpus-
+    sized extraction, the ranks and the gated set are released when the
+    call returns, and in a frames.scope() the frontier goes with it."""
+    from jamie_spark import frames
+
+    pages = fixtures.pages_df(spark, 60, seed=17)
+    before = persisted_rdds()
+    assert linkgraph.crawl_frontier(pages, 2, 5).collect()
+    assert persisted_rdds() == before
+    pinned = pinned_rdds()
+    with frames.scope():
+        assert linkgraph.crawl_frontier(pages, 2, 5).collect()
+    assert pinned_rdds() == pinned
+
+
 def test_crawl_frontier_semantics(spark):
     """Frontier = uncrawled dst urls of the top-K ranked hosts, <= quota
     per host in md5 order; crawled urls are excluded, slots are 1..quota."""

@@ -1,11 +1,12 @@
-"""Every driver-built table goes through ``frames.local_frame``.
+"""Frames are built and pinned through ``jamie_spark/frames.py`` only.
 
 A ``spark.createDataFrame(list)`` frame plans as a ``Scan ExistingRDD`` and
 runs Python worker tasks on every evaluation, which the plan gates that look
-for ``Python`` in the plan string do not catch. This walks the AST of the
-library (``fixtures.py``, test-data generation, is left out) and the entry
-module and fails on any ``createDataFrame`` outside ``local_frame``. No
-Spark needed.
+for ``Python`` in the plan string do not catch. A pin made outside
+``frames.materialize`` has no ``frames.scope()`` lifetime. These walk the
+AST of the library and the entry module and fail on any ``createDataFrame``
+outside ``local_frame`` (``fixtures.py``, test-data generation, is left
+out) and on any pin or release call outside ``frames.py``. No Spark needed.
 """
 
 from __future__ import annotations
@@ -14,10 +15,11 @@ import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-FILES = [
-    p for p in sorted((ROOT / "jamie_spark").glob("*.py"))
-    if p.name != "fixtures.py"
-] + [ROOT / "__spark_entry__.py"]
+MODULES = sorted((ROOT / "jamie_spark").glob("*.py")) + [
+    ROOT / "__spark_entry__.py"
+]
+FILES = [p for p in MODULES if p.name != "fixtures.py"]
+PIN_CALLS = {"localCheckpoint", "checkpoint", "persist", "cache", "unpersist"}
 
 
 def _inside_local_frame(tree: ast.Module) -> set[int]:
@@ -44,4 +46,20 @@ def test_create_dataframe_only_in_local_frame():
     assert not problems, (
         "build driver-side tables with frames.local_frame, not "
         "createDataFrame: " + ", ".join(problems)
+    )
+
+
+def test_pins_and_releases_only_in_frames():
+    problems = [
+        f"{path.relative_to(ROOT)}:{n.lineno} {n.func.attr}"
+        for path in MODULES
+        if path.name != "frames.py"
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in PIN_CALLS
+    ]
+    assert not problems, (
+        "pin frames with frames.materialize and release them with "
+        "frames.scope: " + ", ".join(problems)
     )

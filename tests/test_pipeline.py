@@ -617,6 +617,23 @@ def test_lineage_resume_idempotent(spark, corpus, tmp_path):
     assert {r["n_buckets"] for r in lin.select("n_buckets").collect()} == {4}
 
 
+@pytest.mark.parametrize("parallel", [1, 2])
+def test_lineage_buckets_leave_no_pin_behind(
+    spark, corpus, tmp_path, pinned_rdds, parallel
+):
+    """Each bucket runs in its own thread's frames.scope(): after a
+    two-bucket call no RDD it pinned is left, checkpoints included."""
+    corpus["pages"].count()
+    corpus["concepts"].count()
+    before = pinned_rdds()
+    done = pipeline.run_with_lineage(
+        spark, corpus["pages"], corpus["concepts"], str(tmp_path / "kg"),
+        n_buckets=2, parallel_buckets=parallel,
+    )
+    assert done == [0, 1]
+    assert pinned_rdds() == before
+
+
 def test_lineage_rejects_modulus_change(spark, corpus, tmp_path):
     """Resuming with a different --buckets value renumbers the url-hash
     partitions against the kept bucket=N data dirs (silent duplicate/drop)

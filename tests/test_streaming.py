@@ -505,11 +505,12 @@ def test_process_kg_dedup_batch_replay_idempotent(
 
 
 def test_process_kg_dedup_batch_releases_its_caches(
-    spark, tmp_path, persisted_rdds, dedup_branch
+    spark, tmp_path, persisted_rdds, pinned_rdds, dedup_branch
 ):
     """A dedup micro-batch with both prior and intra-batch dups leaves no
-    cached RDD behind: the persisted pages, signatures and survivor set
-    are all released, so a long-running stream does not leak cache."""
+    cached RDD behind: the materialized pages, signatures and survivor set
+    are all released, checkpoint blocks included, so a long-running stream
+    does not leak cache."""
     out = str(tmp_path / "out")
     store = str(tmp_path / "sigstore")
     concepts = fixtures.concept_df(spark)
@@ -523,9 +524,10 @@ def test_process_kg_dedup_batch_releases_its_caches(
     )
     # prior dups: b0 re-crawled; intra dups: each fresh page and its mirror
     b1 = b0.limit(4).unionByName(fresh).unionByName(mirrors)
-    before = persisted_rdds()
+    before, pinned = persisted_rdds(), pinned_rdds()
     streaming.process_kg_dedup_batch(b1, 1, concepts, out, store)
     assert persisted_rdds() == before
+    assert pinned_rdds() == pinned
     # both kinds of dup were dropped: only one copy per fresh page commits
     assert spark.read.parquet(store + "/batch=1").count() == 6
 
