@@ -758,13 +758,6 @@ def _word_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical-entity graph the pipeline materializes (graph.materialize), so
     every graph-analytics oracle runs on the same parquet the driver mounts."""
     docs = _docs(spark, sf_dir, spread=True)
-    # the edge set is VOCABULARY-sized (distinct word pairs) but its
-    # lineage is a corpus-sized explode; every kg_* consumer reads it 2-7x
-    # through branches with different shuffle keys (degrees both
-    # directions, CC probe + solve, pagerank nodes/e_deg, incremental
-    # base/batch/new_vs) that ReuseExchange cannot collapse — so the corpus
-    # explode re-ran per branch. Materialize once per call (guide §2.4 /
-    # §5: cut lineage when the payoff is re-read count).
     return materialize(
         docs.select(F.split("text", " ").alias("ws"))
         .where(F.size("ws") >= 2)
@@ -778,6 +771,13 @@ def _word_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("e.src", "e.dst")
         .distinct()
+        # the edge set is VOCABULARY-sized (distinct word pairs) but its
+        # lineage is a corpus-sized explode; every kg_* consumer reads it
+        # 2-7x through branches with different shuffle keys (degrees both
+        # directions, CC probe + solve, pagerank nodes/e_deg, incremental
+        # base/batch/new_vs) that ReuseExchange cannot collapse — so the
+        # corpus explode re-ran per branch. Materialize once per call
+        # (guide §2.4 / §5: cut lineage when the payoff is re-read count).
     )
 
 

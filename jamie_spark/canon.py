@@ -23,8 +23,7 @@ observe:
 
 On shallow graphs the star algorithm costs what label propagation does,
 and it removes the diameter failure mode. ``frames.materialize`` truncates
-lineage every round so plans don't snowball; the rounds are released when
-the solve returns.
+lineage every round so plans don't snowball; the solve releases the rounds.
 """
 
 from __future__ import annotations

@@ -261,10 +261,9 @@ def mhs_eval(gold_ann: "DataFrame", pred_ann: "DataFrame") -> dict:
     rel_mention — each an independent multiset P/R/F1.
 
     The five metrics each collect() their own counts, so the inputs are
-    materialized for the battery, in one ``frames.scope()`` that releases
-    them on return — without this, an annotation table fed straight from
-    the inference stage would re-run the model once per metric (~5x the
-    dominant cost)."""
+    materialized for the battery in one ``frames.scope()`` — without this,
+    an annotation table fed straight from the inference stage would re-run
+    the model once per metric (~5x the dominant cost)."""
     from . import frames, mentions as m
 
     with frames.scope():

@@ -1,9 +1,8 @@
 """Driver-built tables (:func:`local_frame`) and pinned intermediates: a
-pin is made by :func:`materialize` and released by the :class:`scope` it
-was made in. A function whose result is materialized opens its own scope
-and ``keep``s the result; one that returns a lazy frame leaves its pins to
-the caller's scope. Outside any scope a pin lives until the ContextCleaner
-frees it on JVM GC."""
+pin made by :func:`materialize` is released by the :class:`scope` it was
+made in. A function returning a materialized frame opens its own scope and
+``keep``s it; one returning a lazy frame leaves its pins to the caller's.
+Outside any scope a pin lives until the ContextCleaner frees it on JVM GC."""
 
 from __future__ import annotations
 

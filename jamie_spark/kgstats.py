@@ -255,7 +255,13 @@ def label_propagation(edges: "DataFrame", iters: int = 4) -> "DataFrame":
         nodes = materialize(adj.select("node").distinct())
         labels = nodes.select("node", F.col("node").alias("label"))
         for it in range(iters):
-            nbr_labels = adj.join(labels.toDF("nbr", "nbr_label"), "nbr")
+            nbr_labels = adj.join(
+                labels.select(
+                    F.col("node").alias("nbr"),
+                    F.col("label").alias("nbr_label"),
+                ),
+                "nbr",
+            )
             counts = nbr_labels.groupBy("node", "nbr_label").agg(
                 F.count(F.lit(1)).alias("cnt")
             )
@@ -266,7 +272,7 @@ def label_propagation(edges: "DataFrame", iters: int = 4) -> "DataFrame":
                 ).alias("label")
             )
             labels = nodes.join(best, "node", "left").select(
-                "node", F.coalesce("label", "node").alias("label")
+                "node", F.coalesce(F.col("label"), F.col("node")).alias("label")
             )
             if (it + 1) % _LPA_CHECKPOINT_EVERY == 0 and it + 1 < iters:
                 labels = materialize(labels)
@@ -360,9 +366,11 @@ def kcore(edges: "DataFrame", k: int = 3, iters: int = 5) -> "DataFrame":
         cur = materialize(_undirected(edges))
         for it in range(iters):
             keep = _und_degrees(cur).where(F.col("deg") >= k).select("node")
-            cur = cur.join(keep.toDF("a"), "a", "left_semi").join(
-                keep.toDF("b"), "b", "left_semi"
-            ).select("a", "b")
+            cur = (
+                cur.join(keep.select(F.col("node").alias("a")), "a", "left_semi")
+                .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
+                .select("a", "b")
+            )
             if (it + 1) % _KCORE_CHECKPOINT_EVERY == 0 and it + 1 < iters:
                 cur = materialize(cur)
         return s.keep(materialize(_und_degrees(cur).where(F.col("deg") >= k)))

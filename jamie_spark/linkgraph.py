@@ -226,65 +226,66 @@ def crawl_frontier(
     candidate list IS a hot key at crawl scale).
 
     Runs Spark jobs when called: the link extraction (unless ``links`` is
-    given), the ranks, the gated candidate set and the frontier itself are
-    each materialized; all but the frontier are released on return.
+    given), the ranks and the gated candidate set, each materialized into
+    the caller's ``frames.scope()``.
     """
     from . import frames, kgstats, textstats
 
-    with frames.scope() as s:
-        # links feeds BOTH the rank side (host_graph -> pagerank) and the
-        # candidate side; without materializing it the full-corpus HTML
-        # regexp extraction — the dominant cost at crawl scale — would run
-        # twice. A scheduler LOOP re-deriving the frontier every cycle can
-        # pass its own ``links`` instead of re-extracting per call.
-        if links is None:
-            links = frames.materialize(extract_links(pages, url_col=url_col))
-        hg = host_graph(links)
-        # WEIGHTED rank: the distinct-edge skeleton ties hosts that differ
-        # 10x in citation count (measured on the extracted fixture graph —
-        # uniform 199.6M across hosts), which would degenerate the gate to
-        # alphabetical selection; link-count mass is the authority signal
-        ranks = kgstats.pagerank_weighted(
-            hg.select(
-                F.col("src_host").alias("src"),
-                F.col("dst_host").alias("dst"),
-                F.col("n_links").alias("w"),
-            ),
-            iters=iters,
-        )
-        top = (
-            ranks.orderBy(F.col("rank_fp").desc(), F.col("node"))
-            .limit(top_hosts)
-            .withColumnRenamed("node", "host")
-        )
-        # the crawled side is NORMALIZED too: candidates are canonical urls
-        # (extract_links normalizes), so a fetched page stored under a url
-        # differing by case/trailing-slash/tracking-params still counts as
-        # crawled — otherwise it re-enters the frontier every cycle
-        crawled = pages.select(normalize_url(F.col(url_col)).alias("url"))
-        cand = (
-            links.select(F.col("dst_url").alias("url"))
-            .distinct()
-            .join(crawled, "url", "left_anti")
-            .withColumn("host", url_host(F.col("url")))
-        )
-        # materialize the gated candidate set once: the prefix sum reads it
-        # through two branches (per-bucket sums + the final join), each of
-        # which re-ran the corpus-sized distinct + anti-join without it
-        gated = frames.materialize(cand.join(F.broadcast(top), "host"))
-        d = gated.select(
-            F.col("url").alias("doc_id"), "host", "rank_fp",
-            F.lit(1).cast("long").alias("unit_w"),
-        )
-        cum = textstats._md5_walk_cumsum(
-            d, ["host", "rank_fp"], max_cum=per_host_quota,
-            weight_col="unit_w",
-        )
-        frontier = cum.where(F.col("cum_tokens") <= per_host_quota).select(
-            F.col("doc_id").alias("url"), "host", "rank_fp",
-            F.col("cum_tokens").alias("slot"),
-        )
-        return s.keep(frames.materialize(frontier))
+    # links feeds BOTH the rank side (host_graph -> pagerank) and the
+    # candidate side; without materializing it the full-corpus HTML regexp
+    # extraction — the dominant cost at crawl scale — would run twice. A
+    # scheduler LOOP re-deriving the frontier every cycle runs each cycle
+    # in a scope (or passes its own ``links``) so no cycle's copy outlives it.
+    if links is None:
+        links = frames.materialize(extract_links(pages, url_col=url_col))
+    hg = host_graph(links)
+    # WEIGHTED rank: the distinct-edge skeleton ties hosts that differ
+    # 10x in citation count (measured on the extracted fixture graph —
+    # uniform 199.6M across hosts), which would degenerate the gate to
+    # alphabetical selection; link-count mass is the authority signal
+    ranks = kgstats.pagerank_weighted(
+        hg.select(
+            F.col("src_host").alias("src"),
+            F.col("dst_host").alias("dst"),
+            F.col("n_links").alias("w"),
+        ),
+        iters=iters,
+    )
+    top = (
+        ranks.orderBy(F.col("rank_fp").desc(), F.col("node"))
+        .limit(top_hosts)
+        .withColumnRenamed("node", "host")
+    )
+    # the crawled side is NORMALIZED too: candidates are canonical urls
+    # (extract_links normalizes), so an already-fetched page whose stored
+    # url differs only by case/trailing-slash/tracking-params must still
+    # count as crawled — otherwise it re-enters the frontier every cycle
+    crawled = pages.select(
+        normalize_url(F.col(url_col)).alias("url")
+    )
+    cand = (
+        links.select(F.col("dst_url").alias("url"))
+        .distinct()
+        .join(crawled, "url", "left_anti")
+        .withColumn("host", url_host(F.col("url")))
+    )
+    # materialize the gated candidate set once: the prefix sum consumes it
+    # through two branches (per-bucket sums + the final join), and without
+    # the barrier each branch re-ran the corpus-sized distinct + anti-join
+    gated = frames.materialize(cand.join(F.broadcast(top), "host"))
+    d = gated.select(
+        F.col("url").alias("doc_id"), "host", "rank_fp",
+        F.lit(1).cast("long").alias("unit_w"),
+    )
+    cum = textstats._md5_walk_cumsum(
+        d, ["host", "rank_fp"], max_cum=per_host_quota, weight_col="unit_w"
+    )
+    return cum.where(F.col("cum_tokens") <= per_host_quota).select(
+        F.col("doc_id").alias("url"),
+        "host",
+        "rank_fp",
+        F.col("cum_tokens").alias("slot"),
+    )
 
 
 #: the engine's pinned tokenizer grammar (jamie_spark.tokenizer._char_class)

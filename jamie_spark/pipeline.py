@@ -15,8 +15,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from . import canon, frames, graph, infer, lineage, link
-from . import mentions as mentions_mod
+from . import canon, frames, graph, infer, lineage, link, mentions as mentions_mod
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -54,8 +53,7 @@ def run_kg(
     the per-stage Iceberg checkpoint (N6), and ~3x cheaper than Spark's
     columnar in-memory cache for this row volume (measured: 17s write+reread
     vs 54s persist at 9.4M rows). Without a dir it is materialized; the
-    lazy frames returned read it and the materialized links, which the
-    caller's ``frames.scope()`` (or :func:`release`) unpins.
+    caller's ``frames.scope()`` or :func:`release` unpins it and the links.
 
     The linking index and the canonical map are built from one dictionary
     collect (``concepts.dictionary_rows``).
@@ -108,9 +106,8 @@ def run_kg(
 
 
 def release(result: dict) -> None:
-    """Unpin what a :func:`run_kg` call materialized (the extraction output
-    and the links) for a caller outside any ``frames.scope()``; inside
-    one, the scope's exit does the same."""
+    """Unpin what a :func:`run_kg` call materialized, for a caller outside
+    any ``frames.scope()`` (inside one, the scope's exit does it)."""
     with frames.scope(*result["_pinned"]):
         pass
 

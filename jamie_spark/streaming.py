@@ -228,9 +228,8 @@ def process_kg_dedup_batch(
     semi-joined down to the batch's band keys before any window
     (textstats.dedup_against_signatures).
 
-    The batch runs in one ``frames.scope()``, released when it returns or
-    fails; its pages (with doc_ids) and signature table are materialized
-    first. The table's size picks one of two branches; its probe is one
+    The batch runs in one ``frames.scope()``. The size of its materialized
+    signature table picks one of two branches; its probe is one
     ``limit(SMALL_BATCH_SIG_ROWS + 1).collect()`` (:func:`_small_batch_rows`),
     skipped when the threshold is 0.
 
@@ -240,10 +239,9 @@ def process_kg_dedup_batch(
       stored signatures against the rows as a local relation and collects
       its dup doc_ids; its store side stays distributed. The survivors are
       a driver set, handed to the extraction and the commit as a local
-      relation. Jobs: the emptiness check, the two materializations, the
-      probe's collect and the null-text doc_id collect, the prior probe's
-      stages and collect, run_kg on the survivors with its write, and the
-      commit's write.
+      relation. Jobs: the emptiness check, two materializations, the probe's
+      and the null-text doc_id collects, the prior probe's stages and collect,
+      run_kg and its write on the survivors, and the commit's write.
     * Above it: the prior probe and the intra-batch band self-join are
       distributed plans, and the survivor doc_ids are materialized and
       counted before the extraction and the commit.

@@ -276,8 +276,8 @@ def test_crawl_frontier_releases_its_link_extraction(
     spark, persisted_rdds, pinned_rdds
 ):
     """Without ``links`` the frontier extracts them itself; that corpus-
-    sized extraction, the ranks and the gated set are released when the
-    call returns, and in a frames.scope() the frontier goes with it."""
+    sized extraction is no cache, and a frames.scope() around the call and
+    its read releases it with every other pin the call made."""
     from jamie_spark import frames
 
     pages = fixtures.pages_df(spark, 60, seed=17)
