@@ -1,9 +1,10 @@
 """Canonicalization by connected components over alias edges (N4).
 
 The canonical map is union-find on the driver over the dictionary rows
-linking reads too (:func:`canonical_map`), returned as a local relation
-built through Arrow (:func:`frames.local_frame`): a ``LocalTableScan``
-that runs no Python task when it is read or broadcast.
+linking reads too: ``concepts.prepare`` builds it with the linking index
+from one collect, and :func:`canonicalize_concepts` returns it as a local
+relation built through Arrow (:func:`frames.local_frame`): a
+``LocalTableScan`` that runs no Python task when it is read or broadcast.
 
 :func:`connected_components` serves graph-sized inputs. GraphFrames is the
 first choice on a real cluster (north_star names it); its jar is optional,
@@ -32,11 +33,13 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from .concepts import dictionary_rows
+from .concepts import prepare, union_find
 from .frames import local_frame, materialize, scope
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
+
+    from .concepts import Prepared
 
 
 def _graphframes_available(spark) -> bool:
@@ -68,31 +71,6 @@ SMALL_GRAPH_EDGES = 100_000
 #: round cap of the distributed star path, which raises when the cap passes
 #: unconverged; the star rounds need O(log n), so 50 leaves wide headroom
 CC_MAX_ROUNDS = 50
-
-
-def _union_find(edges) -> dict[str, str]:
-    """(a, b) pairs -> {vertex: lexicographic-min vertex of its component}.
-    An edge with a null endpoint links nothing (as in SQL, and in the star
-    path's ``u != v`` filter); its non-null endpoint still becomes a
-    vertex."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        for v in (a, b):
-            if v is not None:
-                parent.setdefault(v, v)
-        if a is None or b is None:
-            continue
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {v: find(v) for v in parent}
 
 
 def _checksum(df: "DataFrame") -> tuple[int, int]:
@@ -129,7 +107,7 @@ def _star_components(edges: "DataFrame") -> "DataFrame":
     The edge set converges to per-component stars rooted at the minimum
     vertex in O(log n) rounds (Kiveris et al.); convergence is detected by
     an order-insensitive checksum of the edge set. A null endpoint links
-    nothing and is no vertex, as in ``_union_find``.
+    nothing and is no vertex, as in ``concepts.union_find``.
     """
     with scope() as s:
         verts = materialize(_endpoints(edges))
@@ -214,7 +192,7 @@ def connected_components(
     if small_graph_edges > 0:
         rows = edges.limit(small_graph_edges + 1).collect()
         if len(rows) <= small_graph_edges:
-            comp = _union_find((r["src"], r["dst"]) for r in rows)
+            comp = union_find((r["src"], r["dst"]) for r in rows)
             return local_frame(
                 spark, sorted(comp.items()), "vertex string, component string"
             )
@@ -237,33 +215,20 @@ def connected_components(
     return _star_components(edges)
 
 
-def canonicalize_concepts(concept_dict: "DataFrame") -> "DataFrame":
-    """Alias table -> (concept_id, canonical_id): :func:`canonical_map` over
-    one collect of the dictionary (``concepts.dictionary_rows``)."""
-    return canonical_map(
-        concept_dict.sparkSession, dictionary_rows(concept_dict)
-    )
+def canonicalize_concepts(
+    concept_dict: "DataFrame | Prepared",
+) -> "DataFrame":
+    """Alias table, or its ``concepts.prepare`` result -> (concept_id,
+    canonical_id): the prepared canonical map (union-find over the
+    alias<->concept_id edges, min concept_id per component) as a local
+    relation. It has no dictionary scan or join in its plan, so both
+    broadcast builds of ``graph.canonical_triples`` read the finished
+    map."""
+    from pyspark.sql import SparkSession
 
-
-def canonical_map(spark, dict_rows: list) -> "DataFrame":
-    """(concept_id, alias, sem_type) rows -> (concept_id, canonical_id).
-
-    Every row links alias<->concept_id, so aliases sharing a surface
-    (cross-links, FIXTURES.md §3) merge their concepts, and an alias equal
-    to another row's concept id is that vertex. Each concept maps to the
-    min concept_id of its union-find component; a null alias links nothing
-    and a null concept id maps nowhere. The local relation has no
-    dictionary scan or join in its plan, so both broadcast builds of
-    ``graph.canonical_triples`` read the finished map."""
-    comp = _union_find((alias, cid) for cid, alias, _ in dict_rows)
-    concept_ids = {cid for cid, _, _ in dict_rows if cid is not None}
-    canonical: dict[str, str] = {}
-    for c in concept_ids:
-        root = comp[c]
-        canonical[root] = min(c, canonical.get(root, c))
     return local_frame(
-        spark,
-        sorted((c, canonical[comp[c]]) for c in concept_ids),
+        SparkSession.active(),
+        sorted(prepare(concept_dict).canonical.items()),
         "concept_id string, canonical_id string",
     )
 

@@ -1,4 +1,6 @@
-"""Synthetic UMLS/MedDRA-style concept dictionary (FIXTURES.md §3).
+"""Synthetic UMLS/MedDRA-style concept dictionary (FIXTURES.md §3), and
+:func:`prepare`, which turns any concept dictionary table into what the
+entity-linking and canonicalization stages probe.
 
 Shared vocabulary for the fixture corpus generator (jamie_spark.fixtures), the
 deterministic stand-in tagger (jamie_spark.standin), and the entity-linking /
@@ -10,6 +12,12 @@ All content is static and deterministic — no RNG here.
 """
 
 from __future__ import annotations
+
+import hashlib
+import json
+from dataclasses import dataclass
+
+from .textnorm import zen_to_han
 
 # tag -> human name, mirroring reference data_objects.py:11-25
 TAG2NAME = {
@@ -41,10 +49,114 @@ def sem_type_of(tag_col: str):
     return tag2sem[F.col(tag_col)]
 
 
-def dictionary_rows(concept_dict) -> list:
-    """The one driver collect of a concept dictionary: (concept_id, alias,
-    sem_type) rows for ``link.link_against`` and ``canon.canonical_map``."""
-    return concept_dict.select("concept_id", "alias", "sem_type").collect()
+def grams(s: str) -> set:
+    """Distinct 1-grams over max(len, 1) positions and 2-grams over
+    max(len - 1, 1) positions (an empty string has the one gram ""): the
+    grams the linking index posts aliases under and probes surfaces by."""
+    n = len(s)
+    return {s[i:i + 1] for i in range(max(n, 1))} | {
+        s[i:i + 2] for i in range(max(n - 1, 1))
+    }
+
+
+def union_find(edges) -> dict[str, str]:
+    """(a, b) pairs -> {vertex: lexicographic-min vertex of its component}.
+    An edge with a null endpoint links nothing (as in SQL, and in the star
+    path's ``u != v`` filter); its non-null endpoint still becomes a
+    vertex."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for v in (a, b):
+            if v is not None:
+                parent.setdefault(v, v)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+@dataclass(frozen=True)
+class Prepared:
+    """A concept dictionary read once by :func:`prepare`.
+
+    ``exact[(alias_norm, sem_type)]`` is the smallest concept_id of that
+    alias, with ``alias_norm = textnorm.zen_to_han(alias)``;
+    ``postings[(sem_type, gram)]`` lists ``(alias_norm, n_grams)`` once per
+    distinct alias (:func:`grams`); ``canonical`` maps each concept_id to
+    its canonical id; ``digest`` is the sha256 hex of the rows, whatever
+    their order."""
+
+    exact: dict
+    postings: dict
+    canonical: dict
+    digest: str
+
+
+def prepare(concept_dict) -> Prepared:
+    """The one driver collect of a concept dictionary's (concept_id, alias,
+    sem_type) rows, turned into the linking index, the canonical map and
+    the content digest. A :class:`Prepared` argument is returned as is, so
+    every stage that takes a dictionary takes either form."""
+    if isinstance(concept_dict, Prepared):
+        return concept_dict
+    picked = concept_dict.select("concept_id", "alias", "sem_type")
+    rows = [tuple(r) for r in picked.collect()]
+    exact, postings = _index(rows)
+    return Prepared(exact, postings, _canonical_ids(rows), _digest(rows))
+
+
+def _index(rows) -> tuple[dict, dict]:
+    """(exact, postings) of :class:`Prepared`. Concept ids with the same
+    alias tie on every score, so the rerank only ever needs the smallest
+    one. A row with a null concept_id, alias or sem_type is left out."""
+    exact, postings = {}, {}
+    for cid, alias, st in rows:
+        if cid is None or alias is None or st is None:
+            continue
+        key = (zen_to_han(alias), st)
+        if key in exact:
+            exact[key] = min(exact[key], cid)
+            continue
+        exact[key] = cid
+        gs = grams(key[0])
+        entry = (key[0], len(gs))  # one object per alias: pickled once
+        for g in gs:
+            postings.setdefault((st, g), []).append(entry)
+    return exact, postings
+
+
+def _canonical_ids(rows) -> dict[str, str]:
+    """concept_id -> canonical_id. Every row links alias<->concept_id, so
+    aliases sharing a surface (cross-links, FIXTURES.md §3) merge their
+    concepts, and an alias equal to another row's concept id is that
+    vertex. Each concept maps to the min concept_id of its union-find
+    component; a null alias links nothing and a null concept id maps
+    nowhere."""
+    comp = union_find((alias, cid) for cid, alias, _ in rows)
+    concept_ids = {cid for cid, _, _ in rows if cid is not None}
+    canonical: dict[str, str] = {}
+    for c in concept_ids:
+        root = comp[c]
+        canonical[root] = min(c, canonical.get(root, c))
+    return {c: canonical[comp[c]] for c in sorted(concept_ids)}
+
+
+def _digest(rows) -> str:
+    """sha256 hex over the rows as sorted JSON lines (a null field is JSON
+    null), so the same rows read in another order give the same digest."""
+    h = hashlib.sha256()
+    for line in sorted(json.dumps(r, ensure_ascii=False) for r in rows):
+        h.update(line.encode() + b"\n")
+    return h.hexdigest()
 
 
 # modality label -> attribute family, mirroring reference data_objects.py:6-10

@@ -72,8 +72,10 @@ def pending_buckets(
 ) -> list[int]:
     """Buckets not yet completed for (stage, model_version).
 
-    Keying on model_version means swapping the model (JAMIE_MODEL) correctly
-    invalidates prior completions instead of silently skipping them.
+    ``pipeline.run_with_lineage`` keys on ``pipeline.resume_key`` (model
+    version plus dictionary digest), so swapping the model (JAMIE_MODEL) or
+    changing the dictionary invalidates prior completions instead of
+    silently skipping them.
 
     The bucket MODULUS is validated against the ledger: resuming with a
     different ``n_buckets`` would renumber the url-hash partitions, so the

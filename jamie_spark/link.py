@@ -5,12 +5,13 @@ Links mention surfaces to the concept dictionary in one pass:
 1. distinct-surface dedup — at 10^12 documents mention surfaces follow a power
    law; linking DISTINCT surfaces turns an O(mentions) problem into an
    O(vocabulary) one. This is the single biggest scale lever here.
-2. one index, built on the driver from a single collect of the dictionary
-   (``concepts.dictionary_rows``): an exact map from
+2. one index, built on the driver by ``concepts.prepare`` from a single
+   collect of the dictionary: an exact map from
    ``(textnorm.zen_to_han(alias), sem_type)`` to the smallest concept_id,
    and a ``(sem_type, gram)`` -> alias posting map over distinct character
-   {1,2}-grams (:func:`_grams`). The hash side is built once and probed
-   for every surface.
+   {1,2}-grams (``concepts.grams``). The hash side is built once and probed
+   for every surface; a caller that links several times passes the
+   prepared dictionary and builds it once.
 3. one ``mapInArrow`` over the distinct surfaces probes it: an exact hit wins
    (score 1.0, ``"exact"``); otherwise only the aliases that share a gram
    with the surface are scored, by exact Jaccard, kept at >= ``MIN_JACCARD``
@@ -27,47 +28,16 @@ from collections import Counter
 from typing import TYPE_CHECKING
 
 from . import frames
-from .concepts import dictionary_rows
-from .textnorm import zen_to_han
+from .concepts import grams, prepare
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
 
+    from .concepts import Prepared
+
 #: Jaccard floor for a fuzzy candidate; single source of truth for the
 #: Spark path AND the DuckDB oracle (``kg_pipeline_triples*``).
 MIN_JACCARD = 0.10
-
-
-def _grams(s: str) -> set:
-    """Distinct 1-grams over max(len, 1) positions and 2-grams over
-    max(len - 1, 1) positions (an empty string has the one gram "")."""
-    n = len(s)
-    return {s[i:i + 1] for i in range(max(n, 1))} | {
-        s[i:i + 2] for i in range(max(n - 1, 1))
-    }
-
-
-def _index(rows) -> tuple[dict, dict]:
-    """(concept_id, alias, sem_type) rows -> (exact, postings).
-
-    ``exact[(alias_norm, sem_type)]`` is the smallest concept_id of that
-    alias; ``postings[(sem_type, gram)]`` lists ``(alias_norm, n_grams)``
-    once per distinct alias. Concept ids with the same alias tie on every
-    score, so the rerank only ever needs the smallest one."""
-    exact, postings = {}, {}
-    for cid, alias, st in rows:
-        if cid is None or alias is None or st is None:
-            continue
-        key = (zen_to_han(alias), st)
-        if key in exact:
-            exact[key] = min(exact[key], cid)
-            continue
-        exact[key] = cid
-        grams = _grams(key[0])
-        entry = (key[0], len(grams))  # one object per alias: pickled once
-        for g in grams:
-            postings.setdefault((st, g), []).append(entry)
-    return exact, postings
 
 
 def _resolve(surface, st, exact: dict, postings: dict):
@@ -76,10 +46,10 @@ def _resolve(surface, st, exact: dict, postings: dict):
         return None
     if (surface, st) in exact:
         return exact[(surface, st)], 1.0, "exact"
-    grams = _grams(surface)
-    shared = Counter(a for g in grams for a in postings.get((st, g), ()))
+    gs = grams(surface)
+    shared = Counter(a for g in gs for a in postings.get((st, g), ()))
     scored = [
-        (k / (len(grams) + n - k), exact[(alias, st)])
+        (k / (len(gs) + n - k), exact[(alias, st)])
         for (alias, n), k in shared.items()
     ]
     best = min(
@@ -91,7 +61,7 @@ def _resolve(surface, st, exact: dict, postings: dict):
 
 def link_surfaces(
     surfaces: "DataFrame",
-    concept_dict: "DataFrame",
+    concept_dict: "DataFrame | Prepared",
     materialize: bool = True,
 ) -> "DataFrame":
     """(surface, sem_type) x dictionary -> (surface, sem_type, concept_id,
@@ -101,25 +71,19 @@ def link_surfaces(
     family — without this an anatomy mention like 肺 happily fuzzy-matches
     the disease 肺癌 (observed in verification).
 
-    Cost: one collect of the dictionary (``concepts.dictionary_rows``, which
-    ``pipeline.run_kg`` shares with canonicalization), plus one Python pass
-    over the distinct surfaces that scores only the aliases sharing a gram
-    with the surface (aliases sharing none are never touched). The index
-    travels to the tasks in the function's closure, so it must fit the
-    driver and each Python worker.
+    ``concept_dict`` is a dictionary table or its ``concepts.prepare``
+    result. Cost: the table's one collect in ``concepts.prepare`` (none for
+    a prepared dictionary), plus one Python pass over the distinct surfaces
+    that scores only the aliases sharing a gram with the surface (aliases
+    sharing none are never touched). The index travels to the tasks in the
+    function's closure, so it must fit the driver and each Python worker.
 
     ``materialize=True`` returns the links materialized in the caller's
     scope: callers read them twice as broadcast sides (subject and object),
     which would otherwise run the linking pass twice.
     """
-    return link_against(surfaces, dictionary_rows(concept_dict), materialize)
-
-
-def link_against(
-    surfaces: "DataFrame", dict_rows: list, materialize: bool = True
-) -> "DataFrame":
-    """:func:`link_surfaces` over ``concepts.dictionary_rows`` output."""
-    exact, postings = _index(dict_rows)
+    dictionary = prepare(concept_dict)
+    exact, postings = dictionary.exact, dictionary.postings
     names = ["surface", "sem_type", "concept_id", "score", "method"]
 
     def _link_batches(batches):

@@ -6,6 +6,8 @@
 
 Each stage is a DataFrame -> DataFrame function; ``run_extraction`` /
 ``run_kg`` return the intermediate tables for tests and ad-hoc queries.
+A dictionary argument is a table or its ``concepts.prepare`` result;
+``run_with_lineage`` prepares it once for all of its buckets.
 """
 
 from __future__ import annotations
@@ -16,9 +18,12 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from . import canon, frames, graph, infer, lineage, link, mentions as mentions_mod
+from .concepts import prepare, sem_type_of
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
+
+    from .concepts import Prepared
 
 
 def run_extraction(
@@ -34,7 +39,7 @@ def run_extraction(
 
 def run_kg(
     pages: "DataFrame",
-    concept_dict: "DataFrame",
+    concept_dict: "DataFrame | Prepared",
     lang: str = "ja",
     checkpoint_dir: str | None = None,
     mode: str = "sentence",
@@ -55,15 +60,14 @@ def run_kg(
     vs 54s persist at 9.4M rows). Without a dir it is materialized; the
     caller's ``frames.scope()`` or :func:`release` unpins it and the links.
 
-    The linking index and the canonical map are built from one dictionary
-    collect (``concepts.dictionary_rows``).
+    The linking index and the canonical map come from one
+    ``concepts.prepare`` of ``concept_dict``: one collect for a table, none
+    for a dictionary already prepared.
 
     ``model_spec`` selects the extractor provider (``standin`` default,
     ``numpy:<dir>``, ``torch:<dir>``) — resolved driver-side and shipped by
     closure, same contract as infer.annotate_pages_flat.
     """
-    from .concepts import dictionary_rows, sem_type_of
-
     if checkpoint_dir is not None:
         spark = pages.sparkSession
         path = os.path.join(checkpoint_dir, "flat_annotations.parquet")
@@ -96,9 +100,9 @@ def run_kg(
         )
         .distinct()
     )
-    dict_rows = dictionary_rows(concept_dict)
-    links = link.link_against(surfaces, dict_rows)
-    concept_canon = canon.canonical_map(pages.sparkSession, dict_rows)
+    dictionary = prepare(concept_dict)
+    links = link.link_surfaces(surfaces, dictionary)
+    concept_canon = canon.canonicalize_concepts(dictionary)
     canonical = graph.canonical_triples(triples, links, concept_canon)
     pinned = [links] if checkpoint_dir is not None else [flat, links]
     return {**ext, "links": links, "concept_canon": concept_canon,
@@ -115,7 +119,7 @@ def release(result: dict) -> None:
 def run_with_lineage(
     spark: "SparkSession",
     pages: "DataFrame",
-    concept_dict: "DataFrame",
+    concept_dict: "DataFrame | Prepared",
     out_dir: str,
     n_buckets: int = 8,
     stage: str = "kg_triples",
@@ -125,8 +129,11 @@ def run_with_lineage(
 ) -> list[int]:
     """Bucket-wise run with lineage + resume (N6). Returns buckets processed.
 
-    Resume is keyed on (stage, bucket, model_version) — swapping the model
-    via JAMIE_MODEL invalidates completions of the previous model.
+    The dictionary is prepared once, before the ledger is read, and every
+    bucket probes it. Resume is keyed on (stage, bucket, :func:`resume_key`):
+    swapping the model via JAMIE_MODEL or changing any dictionary row
+    invalidates the completions made under the old ones, so a resume never
+    mixes canonical ids of two dictionaries in one output.
     ``max_buckets`` caps work per invocation (used by the kill/resume test to
     simulate a mid-run crash).
 
@@ -140,9 +147,8 @@ def run_with_lineage(
     and sequential is the right resume granularity; parallelism pays when
     buckets are small relative to the cluster.
     """
-    from .models import model_version
-
-    mv = model_version()
+    dictionary = prepare(concept_dict)
+    mv = resume_key(dictionary)
     todo = lineage.pending_buckets(
         spark, out_dir, stage, n_buckets, model_version=mv
     )
@@ -165,7 +171,7 @@ def run_with_lineage(
         # one scope per bucket, on the bucket's own thread; deterministic
         # per-bucket overwrite -> idempotent on re-run
         with frames.scope():
-            out = run_kg(subset, concept_dict, lang=lang)["canonical_triples"]
+            out = run_kg(subset, dictionary, lang=lang)["canonical_triples"]
             out.write.mode("overwrite").parquet(path)
         n_triples = spark.read.parquet(path).count()
         lineage.append_lineage_row(
@@ -183,6 +189,14 @@ def run_with_lineage(
             # list() drains the iterator so the first failure propagates
             list(pool.map(_run_bucket, todo))
     return todo
+
+
+def resume_key(dictionary: "Prepared") -> str:
+    """The ledger's ``model_version`` value for a run with ``dictionary``:
+    ``<models.model_version()>+dict:<first 16 hex digits of its digest>``."""
+    from .models import model_version
+
+    return f"{model_version()}+dict:{dictionary.digest[:16]}"
 
 
 def read_materialized(spark: "SparkSession", out_dir: str) -> "DataFrame":

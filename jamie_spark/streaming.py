@@ -20,6 +20,12 @@ replay overwrite the partial output instead of duplicating it (the same
 deterministic-overwrite pattern the lineage writer uses per bucket). The
 combination (replayable source + batch-keyed overwrite sink) gives
 effectively-exactly-once output.
+
+Dictionary: a query prepares its concept dictionary (``concepts.prepare``)
+at most once, on the first micro-batch that reaches extraction, and every
+later batch probes that prepared dictionary; a query whose batches are all
+empty or fully deduped never reads it. A changed dictionary therefore takes
+effect when the query restarts.
 """
 
 from __future__ import annotations
@@ -30,12 +36,15 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from . import pipeline, textstats
+from .concepts import prepare
 from .fixtures import PAGES_DDL
 from .frames import local_frame, materialize, scope
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
     from pyspark.sql.streaming import StreamingQuery
+
+    from .concepts import Prepared
 
 
 def read_page_stream(
@@ -71,8 +80,11 @@ def read_page_stream_iceberg(
 
 
 def process_kg_batch(
-    batch_df: "DataFrame", batch_id: int, concept_dict: "DataFrame", out_dir: str
-) -> None:
+    batch_df: "DataFrame",
+    batch_id: int,
+    concept_dict: "DataFrame | Prepared",
+    out_dir: str,
+) -> "DataFrame | Prepared":
     """One micro-batch: pages -> canonical triples -> batch-keyed overwrite.
 
     Module-level (not a closure) so the idempotence contract is directly
@@ -80,24 +92,33 @@ def process_kg_batch(
     crash between sink write and checkpoint commit produces — must leave the
     same rows as calling it once (``mode("overwrite")`` into the batch's own
     partition directory).
+
+    Returns the dictionary prepared when the batch reached extraction, else
+    ``concept_dict`` as given: :func:`stream_kg` hands it to the next batch.
     """
     if batch_df.isEmpty():
-        return
-    _write_kg_batch(batch_df, batch_id, concept_dict, out_dir)
+        return concept_dict
+    return _write_kg_batch(batch_df, batch_id, concept_dict, out_dir)
 
 
 def _write_kg_batch(
-    pages: "DataFrame", batch_id: int, concept_dict: "DataFrame", out_dir: str
-) -> None:
+    pages: "DataFrame",
+    batch_id: int,
+    concept_dict: "DataFrame | Prepared",
+    out_dir: str,
+) -> "Prepared":
     """Extract and overwrite ``out_dir/batch={batch_id}`` from non-empty
-    ``pages``; callers check emptiness, each with the probe it already has."""
+    ``pages``; callers check emptiness, each with the probe it already has.
+    Returns the prepared dictionary."""
     from . import graph
 
+    dictionary = prepare(concept_dict)
     with scope():
-        triples = pipeline.run_kg(pages, concept_dict)["canonical_triples"]
+        triples = pipeline.run_kg(pages, dictionary)["canonical_triples"]
         graph.salted(triples, n_buckets=8, n_salts=4).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
+    return dictionary
 
 
 def read_stream_output(spark: "SparkSession", out_dir: str) -> "DataFrame":
@@ -109,7 +130,7 @@ def read_stream_output(spark: "SparkSession", out_dir: str) -> "DataFrame":
 
 def stream_kg(
     pages_stream: "DataFrame",
-    concept_dict: "DataFrame",
+    concept_dict: "DataFrame | Prepared",
     out_dir: str,
     checkpoint_dir: str,
 ) -> "StreamingQuery":
@@ -118,11 +139,15 @@ def stream_kg(
     ``foreachBatch`` reuses the exact batch pipeline (run_kg), so streaming
     and batch can never drift semantically; each micro-batch overwrites its
     own ``batch={batch_id}`` partition (idempotent on replay — see module
-    docstring), laid out the same way as the batch materializer.
+    docstring), laid out the same way as the batch materializer. The first
+    batch that extracts prepares the dictionary for the rest.
     """
 
     def process(batch_df: "DataFrame", batch_id: int) -> None:
-        process_kg_batch(batch_df, batch_id, concept_dict, out_dir)
+        nonlocal concept_dict
+        concept_dict = process_kg_batch(
+            batch_df, batch_id, concept_dict, out_dir
+        )
 
     return (
         pages_stream.writeStream.foreachBatch(process)
@@ -209,10 +234,10 @@ def _small_batch_rows(
 def process_kg_dedup_batch(
     batch_df: "DataFrame",
     batch_id: int,
-    concept_dict: "DataFrame",
+    concept_dict: "DataFrame | Prepared",
     out_dir: str,
     store_dir: str,
-) -> None:
+) -> "DataFrame | Prepared":
     """One micro-batch of the PRODUCTION ingest shape: near-dup the incoming
     crawl against all history via the persisted MinHash signature store
     AND against itself (cold-start backlogs arrive as one giant batch 0),
@@ -249,9 +274,13 @@ def process_kg_dedup_batch(
     A history drop of 200 fresh pages and 200 mirrors against a 400-page
     history runs 25 jobs on the driver branch and 38 on the distributed one
     (tests/test_streaming.py caps the first).
+
+    Returns the dictionary prepared when survivors reached extraction, else
+    ``concept_dict`` as given: :func:`stream_kg_dedup` hands it to the next
+    batch.
     """
     if batch_df.isEmpty():
-        return
+        return concept_dict
     spark = batch_df.sparkSession
     # NOT re-spread: an A/B at the bench's 5k-page batches measured the
     # under-split micro-batch (4 landed files) FASTER without a repartition
@@ -292,7 +321,7 @@ def process_kg_dedup_batch(
             keep = materialize(_distributed_keep(pages, new_sig, prior))
             n_keep = keep.count()
         if n_keep:
-            _write_kg_batch(
+            concept_dict = _write_kg_batch(
                 pages.join(keep, "doc_id", "left_semi").drop("doc_id"),
                 batch_id, concept_dict, out_dir,
             )
@@ -300,6 +329,7 @@ def process_kg_dedup_batch(
         new_sig.join(keep, "doc_id", "left_semi").write.mode(
             "overwrite"
         ).parquet(os.path.join(store_dir, f"batch={batch_id}"))
+    return concept_dict
 
 
 def _history_dups(prior: "DataFrame", new_sig: "DataFrame") -> "DataFrame":
@@ -348,7 +378,7 @@ def _distributed_keep(
 
 def stream_kg_dedup(
     pages_stream: "DataFrame",
-    concept_dict: "DataFrame",
+    concept_dict: "DataFrame | Prepared",
     out_dir: str,
     checkpoint_dir: str,
     store_dir: str,
@@ -359,10 +389,12 @@ def stream_kg_dedup(
     admits its survivors to the store for the batches after it. Exact
     within-horizon duplicates are cheaper still — compose
     :func:`dedup_stream` upstream for those; this loop is the unbounded-
-    history tier the watermark cannot cover."""
+    history tier the watermark cannot cover. The first batch that extracts
+    prepares the dictionary for the rest."""
 
     def process(batch_df: "DataFrame", batch_id: int) -> None:
-        process_kg_dedup_batch(
+        nonlocal concept_dict
+        concept_dict = process_kg_dedup_batch(
             batch_df, batch_id, concept_dict, out_dir, store_dir
         )
 

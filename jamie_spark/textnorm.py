@@ -55,27 +55,6 @@ def han_to_zen(text: str) -> str:
     return text.translate(_HAN2ZEN)
 
 
-# --- escape guards (reference utils.py:315-332,735-742) -------------------
-
-_GUARDS = (
-    (">>", ">＞"),
-    ("&gt;", "＞"),
-)
-
-
-def guard_escapes(text: str) -> str:
-    """Reference-parity helper (T4, reference utils.py:315-332): rewrite
-    tag-like runs so downstream markup stays parseable. NOT on the default
-    path — this engine's XML writer escapes properly on emit
-    (xml_io._escape) and round-trips losslessly, which supersedes the
-    guard's lossy rewrite. If a caller ever wires it in, it must run
-    AFTER zen_to_han (the normalizer maps the guard's full-width ＞ back
-    to '>', undoing it)."""
-    for old, new in _GUARDS:
-        text = text.replace(old, new)
-    return text
-
-
 # --- HTML entity handling --------------------------------------------------
 
 _ENTITIES = (

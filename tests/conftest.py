@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -53,3 +55,54 @@ def pinned_rdds(spark):
         return sum(int(i) > mark[0] for i in ids)
 
     return count
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(block)`` runs ``block()`` under a fresh statusTracker
+    job group and returns the number of Spark jobs it ran; the group is
+    cleared after, errors included. The group is a property of the calling
+    thread: jobs a stream query's micro-batches run on the query's own
+    thread are not counted."""
+    sc = spark.sparkContext
+
+    def count(block) -> int:
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted block")
+        try:
+            block()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
+def dictionary_collects(spark, tmp_path, monkeypatch):
+    """``watch(table)`` writes a dictionary table to parquet and returns it
+    read back; ``count()`` is the number of driver ``collect`` calls that
+    have read a watched table since, on any thread, a stream query's
+    micro-batches included."""
+    from types import SimpleNamespace
+
+    paths, reads = [], []
+    cls = type(spark.range(1))
+    collect = cls.collect
+
+    def counting(df):
+        if any(p in f for p in paths for f in df.inputFiles()):
+            reads.append(df)
+        return collect(df)
+
+    monkeypatch.setattr(cls, "collect", counting)
+
+    def watch(table):
+        path = str(tmp_path / f"dictionary-{len(paths)}")
+        table.write.parquet(path)
+        paths.append(path)
+        return spark.read.parquet(path)
+
+    return SimpleNamespace(watch=watch, count=lambda: len(reads))

@@ -1,9 +1,9 @@
 """The concept dictionary reaches the driver through one function.
 
-``concepts.dictionary_rows`` owns the dictionary's (concept_id, alias,
-sem_type) projection and its collect; the linking index and the canonical
-map are both built from its rows, so ``pipeline.run_kg`` reads the
-dictionary once. This walks the AST of the library and the entry module
+``concepts.prepare`` owns the dictionary's (concept_id, alias, sem_type)
+projection and its collect; the linking index, the canonical map and the
+digest that keys lineage resume are all built from its rows, so a caller
+that prepares once reads the dictionary once. This walks the AST of the library and the entry module
 and fails on any other function that projects the dictionary's ``alias``
 column with a ``select`` and also pulls rows to the driver, itself or
 through a function of its module that does. No Spark needed.
@@ -18,7 +18,7 @@ ROOT = Path(__file__).resolve().parent.parent
 FILES = sorted((ROOT / "jamie_spark").glob("*.py")) + [
     ROOT / "__spark_entry__.py"
 ]
-OWNER = ("concepts.py", "dictionary_rows")
+OWNER = ("concepts.py", "prepare")
 COLLECTS = {"collect", "toLocalIterator", "toPandas", "toArrow"}
 
 
@@ -73,13 +73,13 @@ def _readers(path: Path) -> list[tuple[str, str, int]]:
     ]
 
 
-def test_dictionary_collect_only_in_dictionary_rows():
+def test_dictionary_collect_only_in_prepare():
     readers = [r for path in FILES for r in _readers(path)]
     # the owner is found, so the walk cannot pass vacuously
     assert [r[:2] for r in readers if r[:2] == OWNER] == [OWNER]
     others = [f"{f}:{line} {name}" for f, name, line in readers
               if (f, name) != OWNER]
     assert not others, (
-        "collect the concept dictionary through concepts.dictionary_rows: "
+        "collect the concept dictionary through concepts.prepare: "
         + ", ".join(others)
     )

@@ -3,13 +3,15 @@
 The reference states the linking contract without Spark: an exact hit on
 ``textnorm.zen_to_han(alias)`` within the surface's sem_type wins; otherwise
 every same-sem_type alias is scored by Jaccard over distinct character
-{1,2}-grams (the ``link._grams`` bounds) and kept at >= ``MIN_JACCARD``;
+{1,2}-grams (the ``concepts.grams`` bounds) and kept at >= ``MIN_JACCARD``;
 the top-1 is by score desc, then concept_id asc.
 """
 
 import random
 
-from jamie_spark import link, textnorm
+import pytest
+
+from jamie_spark import concepts, link, textnorm
 
 N_TRIALS = 30
 SEM_TYPES = ["Disease", "Remedy"]
@@ -20,7 +22,7 @@ FULL = "ａｂＣ"  # full-width letters: zen_to_han folds them onto ASCII
 
 def _grams(s: str) -> set:
     """Distinct 1-grams over max(len, 1) positions and 2-grams over
-    max(len - 1, 1) positions, as ``link._grams`` builds them."""
+    max(len - 1, 1) positions, as ``concepts.grams`` builds them."""
     n = len(s)
     return {s[i:i + 1] for i in range(max(n, 1))} | {
         s[i:i + 2] for i in range(max(n - 1, 1))
@@ -98,7 +100,12 @@ def _trial(trial: int):
     )
 
 
-def test_link_surfaces_matches_reference_on_random_dictionaries(spark):
+@pytest.mark.parametrize("prepared", [False, True], ids=["frame", "prepared"])
+def test_link_surfaces_matches_reference_on_random_dictionaries(
+    spark, prepared
+):
+    """The reference holds for a dictionary table and for its
+    ``concepts.prepare`` result alike."""
     dictionary, surfaces = [], []
     for trial in range(N_TRIALS):
         d, s = _trial(trial)
@@ -106,11 +113,14 @@ def test_link_surfaces_matches_reference_on_random_dictionaries(spark):
         surfaces += s
     want = reference_links(surfaces, dictionary)
 
+    concept_dict = spark.createDataFrame(
+        dictionary, "concept_id string, alias string, sem_type string"
+    )
+    if prepared:
+        concept_dict = concepts.prepare(concept_dict)
     got_rows = link.link_surfaces(
         spark.createDataFrame(surfaces, "surface string, sem_type string"),
-        spark.createDataFrame(
-            dictionary, "concept_id string, alias string, sem_type string"
-        ),
+        concept_dict,
     ).collect()
     got = {
         (r["surface"], r["sem_type"]): (r["concept_id"], r["score"], r["method"])

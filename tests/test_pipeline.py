@@ -6,7 +6,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from jamie_spark import canon, eval as ev, fixtures, graph, infer, link, pipeline
+from jamie_spark import (
+    canon, concepts, eval as ev, fixtures, frames, graph, infer, link, pipeline,
+)
 
 N_DOCS = 120
 SEED = 42
@@ -278,7 +280,7 @@ def test_star_components_random_graph_vs_unionfind(spark):
             edges.append((rng.choice(members), rng.choice(members)))
     edges += [("c0_00", None), (None, "lone")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    truth = canon._union_find(edges)
+    truth = concepts.union_find(edges)
     got = {
         r["vertex"]: r["component"]
         for r in canon.connected_components(
@@ -425,30 +427,59 @@ def test_canonical_map_matches_star_on_random_dictionaries(spark):
     assert driver == _star_canon_rows(d)
 
 
-def test_run_kg_collects_the_dictionary_once(
-    spark, corpus, tmp_path, monkeypatch
-):
+def test_run_kg_collects_the_dictionary_once(spark, corpus, dictionary_collects):
     """One run_kg call evaluates its dictionary once: linking and the
     canonical map share one driver collect."""
-    path = str(tmp_path / "concepts.parquet")
-    corpus["concepts"].write.parquet(path)
-    concept_dict = spark.read.parquet(path)
-    cls = type(concept_dict)
-    collect = cls.collect
-    reads = []
-
-    def counting(df):
-        if any(path in f for f in df.inputFiles()):
-            reads.append(df)
-        return collect(df)
-
-    monkeypatch.setattr(cls, "collect", counting)
+    concept_dict = dictionary_collects.watch(corpus["concepts"])
     result = pipeline.run_kg(corpus["pages"], concept_dict)
     try:
-        assert len(reads) == 1
+        assert dictionary_collects.count() == 1
         assert result["canonical_triples"].count() > 0
     finally:
         pipeline.release(result)
+
+
+@pytest.mark.parametrize("parallel", [1, 2])
+def test_run_with_lineage_collects_the_dictionary_once(
+    spark, corpus, tmp_path, dictionary_collects, parallel
+):
+    """A run_with_lineage call prepares its dictionary once, before it reads
+    the ledger, and every bucket links against that, pool threads included:
+    one collect for four buckets, where each bucket used to collect its
+    own. A no-op resume reads the dictionary once too, for its key."""
+    concept_dict = dictionary_collects.watch(corpus["concepts"])
+    out = str(tmp_path / "kg")
+
+    def call():
+        return pipeline.run_with_lineage(
+            spark, corpus["pages"], concept_dict, out, n_buckets=4,
+            parallel_buckets=parallel,
+        )
+
+    assert call() == [0, 1, 2, 3]
+    assert dictionary_collects.count() == 1
+    assert call() == []
+    assert dictionary_collects.count() == 2
+
+
+def test_run_kg_and_collect_job_count(spark, corpus, spark_jobs):
+    """run_kg plus a collect of its canonical triples runs 7 Spark jobs: 1
+    materializes the extraction, 2 link (the distinct surfaces and the
+    links' materialization), 1 collects the dictionary and 3 are the
+    collect through the canonical join. A prepared dictionary saves the
+    dictionary's job."""
+    prepared = concepts.prepare(corpus["concepts"])
+
+    def run(concept_dict):
+        def block():
+            with frames.scope():
+                pipeline.run_kg(corpus["pages"], concept_dict)[
+                    "canonical_triples"
+                ].collect()
+        return block
+
+    assert spark_jobs(run(corpus["concepts"])) == 7
+    assert spark_jobs(run(prepared)) == 6
 
 
 def test_full_kg_and_materialization(spark, corpus, tmp_path):
@@ -575,10 +606,59 @@ def test_lineage_model_swap_invalidates(spark, corpus, tmp_path):
     pipeline.run_with_lineage(
         spark, corpus["pages"], corpus["concepts"], out, n_buckets=2
     )
+    key = pipeline.resume_key(concepts.prepare(corpus["concepts"]))
     assert lin.pending_buckets(spark, out, "kg_triples", 2,
-                               model_version=models.model_version()) == []
+                               model_version=key) == []
+    swapped = key.replace(models.model_version(), "torch:other-model", 1)
     assert lin.pending_buckets(spark, out, "kg_triples", 2,
-                               model_version="torch:other-model") == [0, 1]
+                               model_version=swapped) == [0, 1]
+
+
+def test_lineage_dictionary_change_invalidates(spark, corpus, tmp_path):
+    """A resume under a dictionary with one alias changed reruns every
+    bucket, so no output mixes canonical ids of two dictionaries; the same
+    rows read in another order skip them all."""
+    out = str(tmp_path / "kg_dict")
+    cdf = corpus["concepts"]
+
+    def call(concept_dict):
+        return pipeline.run_with_lineage(
+            spark, corpus["pages"], concept_dict, out, n_buckets=2
+        )
+
+    assert call(cdf) == [0, 1]
+    reordered = spark.createDataFrame(cdf.collect()[::-1], cdf.schema)
+    assert call(reordered) == []
+    changed = cdf.withColumn(
+        "alias",
+        F.when(F.col("alias") == "肺がん", "肺がん腫").otherwise(F.col("alias")),
+    )
+    assert changed.exceptAll(cdf).count() == 1
+    assert call(changed) == [0, 1]
+
+
+def test_dictionary_digest_tracks_every_field(spark):
+    """The digest is order-free and moves with one alias, one concept_id
+    or one sem_type; rows with null fields are accepted, and a null differs
+    from the string "None". A prepared dictionary prepares to itself."""
+    ddl = "concept_id string, alias string, sem_type string"
+    rows = [
+        ("C1", "肺癌", "Disease"), ("C2", None, "Remedy"),
+        (None, "胃癌", None), ("C3", "None", "Disease"),
+    ]
+
+    def digest(rs):
+        return concepts.prepare(spark.createDataFrame(rs, ddl)).digest
+
+    base = digest(rows)
+    assert digest(rows[::-1]) == base
+    changes = [(0, 1, "肺がん"), (0, 0, "C9"), (0, 2, "Remedy"), (1, 1, "None")]
+    for i, field, value in changes:
+        changed = [list(r) for r in rows]
+        changed[i][field] = value
+        assert digest([tuple(r) for r in changed]) != base, (i, field)
+    prepared = concepts.prepare(spark.createDataFrame(rows, ddl))
+    assert concepts.prepare(prepared) is prepared
 
 
 def test_lineage_resume_idempotent(spark, corpus, tmp_path):
@@ -754,7 +834,7 @@ def test_incremental_components_equals_full_recompute(spark):
          ).collect()),
         key=str,
     )
-    truth = canon._union_find(base + batch)
+    truth = concepts.union_find(base + batch)
     assert got == want == sorted(truth.items(), key=str)
 
 

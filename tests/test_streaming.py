@@ -857,11 +857,12 @@ def test_dedup_branches_agree_on_random_batches(spark, tmp_path, monkeypatch):
         assert triples[batch_id]
 
 
-def test_process_kg_dedup_batch_job_budget(spark, tmp_path):
+def test_process_kg_dedup_batch_job_budget(spark, tmp_path, spark_jobs):
     """A history drop (200 fresh pages and 200 mirrors of a 400-page drop
-    0) runs at most 29 + 2 Spark jobs, counted through a statusTracker job
-    group: 29 measured when the small-batch driver branch came in, against
-    49 before it, when every batch ran the distributed probes."""
+    0) runs at most 25 + 2 Spark jobs, counted by ``spark_jobs``: 29 were
+    measured when the small-batch driver branch came in, against 49 before
+    it, when every batch ran the distributed probes; one pin per frame
+    took it to 25."""
     out = str(tmp_path / "out")
     store = str(tmp_path / "sigstore")
     concepts = fixtures.concept_df(spark)
@@ -873,12 +874,42 @@ def test_process_kg_dedup_batch_job_budget(spark, tmp_path):
         "url", F.concat(F.lit("https://mirror.test/"), F.col("url"))
     )
     drop1 = pages.where(doc >= 400).unionByName(mirrors)
-    sc = spark.sparkContext
-    sc.setJobGroup("dedup-job-budget", "history drop")
-    try:
-        streaming.process_kg_dedup_batch(drop1, 1, concepts, out, store)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("dedup-job-budget"))
-    assert jobs <= 29 + 2, jobs
+    jobs = spark_jobs(
+        lambda: streaming.process_kg_dedup_batch(drop1, 1, concepts, out, store)
+    )
+    assert jobs <= 25 + 2, jobs
+
+
+def test_stream_kg_dedup_collects_the_dictionary_once(
+    spark, tmp_path, dictionary_collects
+):
+    """A stream_kg_dedup query over two files, one micro-batch each,
+    prepares its dictionary on the first batch that extracts and reuses it
+    for the second: one collect, where each batch used to collect its own.
+    The same query restarted with no new input reads no dictionary."""
+    src = str(tmp_path / "in")
+    pages = fixtures.pages_df(spark, 20, seed=4)
+    doc = F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long")
+    for drop in (pages.where(doc < 10), pages.where(doc >= 10)):
+        drop.coalesce(1).write.mode("append").parquet(src)
+    concept_dict = dictionary_collects.watch(fixtures.concept_df(spark))
+    out, ckpt, store = (str(tmp_path / d) for d in ("out", "ckpt", "store"))
+
+    def run_query():
+        q = streaming.stream_kg_dedup(
+            streaming.read_page_stream(spark, src, max_files_per_trigger=1),
+            concept_dict, out, ckpt, store,
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+
+    run_query()
+    batches = {
+        r["batch"]
+        for r in streaming.read_stream_output(spark, out)
+        .select("batch").distinct().collect()
+    }
+    assert batches == {0, 1}  # both micro-batches reached extraction
+    assert dictionary_collects.count() == 1
+    run_query()
+    assert dictionary_collects.count() == 1
