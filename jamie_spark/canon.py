@@ -215,9 +215,7 @@ def connected_components(
     return _star_components(edges)
 
 
-def canonicalize_concepts(
-    concept_dict: "DataFrame | Prepared",
-) -> "DataFrame":
+def canonicalize_concepts(concept_dict: "DataFrame | Prepared") -> "DataFrame":
     """Alias table, or its ``concepts.prepare`` result -> (concept_id,
     canonical_id): the prepared canonical map (union-find over the
     alias<->concept_id edges, min concept_id per component) as a local

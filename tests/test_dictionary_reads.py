@@ -3,10 +3,11 @@
 ``concepts.prepare`` owns the dictionary's (concept_id, alias, sem_type)
 projection and its collect; the linking index, the canonical map and the
 digest that keys lineage resume are all built from its rows, so a caller
-that prepares once reads the dictionary once. This walks the AST of the library and the entry module
-and fails on any other function that projects the dictionary's ``alias``
-column with a ``select`` and also pulls rows to the driver, itself or
-through a function of its module that does. No Spark needed.
+that prepares once reads the dictionary once. This walks the AST of the
+library and the entry module and fails on any other function that
+projects the dictionary's ``alias`` column with a ``select`` and also
+pulls rows to the driver, itself or through a function of its module that
+does. No Spark needed.
 """
 
 from __future__ import annotations

@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from jamie_spark import (
-    canon, concepts, eval as ev, fixtures, frames, graph, infer, link, pipeline,
+    canon, concepts, eval as ev, fixtures, frames, graph, infer, link,
+    pipeline,
 )
 
 N_DOCS = 120
@@ -427,7 +428,7 @@ def test_canonical_map_matches_star_on_random_dictionaries(spark):
     assert driver == _star_canon_rows(d)
 
 
-def test_run_kg_collects_the_dictionary_once(spark, corpus, dictionary_collects):
+def test_run_kg_collects_the_dictionary_once(corpus, dictionary_collects):
     """One run_kg call evaluates its dictionary once: linking and the
     canonical map share one driver collect."""
     concept_dict = dictionary_collects.watch(corpus["concepts"])
@@ -629,10 +630,8 @@ def test_lineage_dictionary_change_invalidates(spark, corpus, tmp_path):
     assert call(cdf) == [0, 1]
     reordered = spark.createDataFrame(cdf.collect()[::-1], cdf.schema)
     assert call(reordered) == []
-    changed = cdf.withColumn(
-        "alias",
-        F.when(F.col("alias") == "肺がん", "肺がん腫").otherwise(F.col("alias")),
-    )
+    renamed = F.when(F.col("alias") == "肺がん", "肺がん腫")
+    changed = cdf.withColumn("alias", renamed.otherwise(F.col("alias")))
     assert changed.exceptAll(cdf).count() == 1
     assert call(changed) == [0, 1]
 
@@ -652,7 +651,9 @@ def test_dictionary_digest_tracks_every_field(spark):
 
     base = digest(rows)
     assert digest(rows[::-1]) == base
-    changes = [(0, 1, "肺がん"), (0, 0, "C9"), (0, 2, "Remedy"), (1, 1, "None")]
+    changes = [
+        (0, 1, "肺がん"), (0, 0, "C9"), (0, 2, "Remedy"), (1, 1, "None"),
+    ]
     for i, field, value in changes:
         changed = [list(r) for r in rows]
         changed[i][field] = value

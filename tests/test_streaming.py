@@ -874,9 +874,9 @@ def test_process_kg_dedup_batch_job_budget(spark, tmp_path, spark_jobs):
         "url", F.concat(F.lit("https://mirror.test/"), F.col("url"))
     )
     drop1 = pages.where(doc >= 400).unionByName(mirrors)
-    jobs = spark_jobs(
-        lambda: streaming.process_kg_dedup_batch(drop1, 1, concepts, out, store)
-    )
+    jobs = spark_jobs(lambda: streaming.process_kg_dedup_batch(
+        drop1, 1, concepts, out, store
+    ))
     assert jobs <= 25 + 2, jobs
 
 
