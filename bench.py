@@ -75,9 +75,7 @@ def run_kg_bench(
     if warmup:
         wpages = fixtures.pages_df_distributed(spark, 2000, seed=7).cache()
         wpages.count()
-        wr = pipeline.run_kg(wpages, concepts)
-        wr["canonical_triples"].count()
-        pipeline.release(wr)
+        pipeline.run_kg(wpages, concepts)["canonical_triples"].count()
         wpages.unpersist()
 
     pages = fixtures.pages_df_distributed(spark, n_docs, seed=42).cache()
@@ -86,11 +84,9 @@ def run_kg_bench(
     # first timed run up to 2.4x the median (cold code paths the 2k-doc
     # warmup does not reach at 40k-doc shuffle sizes), which made the
     # kg_pipeline spread — and the headline docs/sec — a JIT artifact
-    wr = pipeline.run_kg(
+    pipeline.run_kg(
         pages, concepts, checkpoint_dir="/tmp/jamie_bench_ckpt_warm"
-    )
-    wr["canonical_triples"].count()
-    pipeline.release(wr)
+    )["canonical_triples"].count()
     times, n = [], 0
     for run in range(n_runs):
         t0 = time.perf_counter()
@@ -100,7 +96,6 @@ def run_kg_bench(
         )
         n = result["canonical_triples"].count()
         times.append(time.perf_counter() - t0)
-        pipeline.release(result)
     pages.unpersist()
     return times, n
 
@@ -236,11 +231,10 @@ def main() -> None:
     if stress_docs > 0:
         from jamie_spark import fixtures, textstats
 
-        # pipeline-building entries persist intermediates internally (run_kg
-        # caches its flat-annotations frame); after 60+ timed queries that
-        # accumulated cache pressure measurably distorts the memory-hungry
-        # stress stages (54s vs 22s isolated, observed r4) — drop every
-        # cached block so stress timings reflect the operators
+        # drop every cached block so stress timings reflect the operators:
+        # cache pressure accumulated over 60+ timed queries measurably
+        # distorted the memory-hungry stress stages (54s vs 22s isolated,
+        # observed r4)
         spark.catalog.clearCache()
         sdocs = fixtures.boilerplate_docs_df(spark, stress_docs).cache()
         sdocs.count()
@@ -628,10 +622,10 @@ def kg_from_parquet(cpus: int, n_docs: int) -> None:
     # THROUGHPUT on long-lived executors, so the steady-state run is the
     # honest one to time.
     pages = spark.read.parquet(CORPUS_PATH)
-    warm = pipeline.run_kg(pages, concepts,
-                           checkpoint_dir=f"/tmp/jamie_warm_ckpt_{cpus}")
-    warm["canonical_triples"].count()
-    pipeline.release(warm)
+    pipeline.run_kg(pages, concepts,
+                    checkpoint_dir=f"/tmp/jamie_warm_ckpt_{cpus}")[
+        "canonical_triples"
+    ].count()
     t0 = time.perf_counter()
     result = pipeline.run_kg(pages, concepts,
                              checkpoint_dir=f"/tmp/jamie_ckpt_{cpus}")

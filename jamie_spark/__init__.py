@@ -7,17 +7,19 @@ DataFrame pipeline over Common-Crawl-style page tables:
     pages(url, warc_ts, html, text, lang)
       -> extract -> normalize -> segment -> tokenize
          -> joint NER/mod/rel tag + BIO decode     [textnorm, tokenizer, infer]
-      -> mentions + triples (flat rows)            [mentions]
-      -> entity linking (alias index from one driver
-         dictionary collect, mapInArrow probe)     [link]
-      -> canonicalization (union-find, same rows)  [canon]
+         -> entity linking + canonical ids, probed
+            in the same task against one prepared
+            dictionary (alias index + union-find
+            canonical map from one collect)        [concepts, link]
+      -> mentions, triples, canonical triples
+         (projections of the flat rows)            [mentions, pipeline]
       -> graph materialization (salted, bucketed)  [graph]
       -> lineage + idempotent resume               [lineage, pipeline]
 
 Everything heavy runs JVM-side (built-in functions) or in a single Arrow-batched
-``mapInArrow`` stage (``infer.annotate_pages_flat``); the only other Python pass
-is linking's one ``mapInArrow`` over the distinct surfaces
-(``link.link_surfaces``), vocabulary-sized rather than corpus-sized.
+``mapInArrow`` stage (``infer.annotate_pages_flat``), which also resolves each
+triple's canonical ids (``link.resolver``); the write path has no other
+Python pass, no join and no pin.
 """
 
 __version__ = "0.1.0"

@@ -39,8 +39,9 @@ TAG2NAME = {
 
 def sem_type_of(tag_col: str):
     """Column: the semantic type (``TAG2NAME`` value) of the NER tag in
-    column ``tag_col`` — the one tag -> sem_type mapping shared by the
-    linking keys of ``pipeline.run_kg`` and the canonical join."""
+    column ``tag_col``, or null for a tag outside it — the join keys of
+    ``graph.canonical_triples``; ``link.resolver`` maps tags the same way
+    in Python."""
     from pyspark.sql import functions as F
 
     tag2sem = F.create_map(

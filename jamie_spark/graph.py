@@ -29,7 +29,13 @@ def canonical_triples(
     links: "DataFrame",
     concept_canon: "DataFrame",
 ) -> "DataFrame":
-    """Resolve subj/obj surfaces -> canonical concept ids.
+    """Resolve subj/obj surfaces -> canonical concept ids, as tables.
+
+    ``pipeline.run_kg`` does not call this: its extraction stage resolves
+    the same ids itself (``link.resolver``). This composition over
+    ``link.link_surfaces`` and ``canon.canonicalize_concepts`` is the
+    table-level reference that tests hold the fused ids to, and the one
+    perfbench's traced ``run_kg`` copy still times.
 
     ``links``: (surface, sem_type, concept_id, score, method) from
     jamie_spark.link — a vocabulary-sized table, broadcast on both joins so

@@ -4,7 +4,9 @@ pages(url, warc_ts, html, text, lang)
   -> annotations(url, sent_id, tokens, ner, mod, rels, heads, entities, triples)
      (``annotate_pages``, ``mapInPandas``: the nested CONLL/XML/eval shape)
   -> flat mention/triple rows
-     (``annotate_pages_flat``, ``mapInArrow``: the KG hot path)
+     (``annotate_pages_flat``, ``mapInArrow``: the KG hot path; given a
+     prepared dictionary, each triple row also carries its canonical
+     subj/obj ids, resolved in the same task by ``link.resolver``)
 
 Everything the reference does per document — extraction (N1), width
 normalization (T1), segmentation (T2), tokenization (T3), joint
@@ -37,6 +39,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from .bio import bio_to_spans, rel_triplets
+from .link import resolver
 from .standin import MODEL_VERSION
 from .subword import MAX_SUBWORDS, subword_count
 from .textnorm import SEP, extract_text, zen_to_han
@@ -49,6 +52,8 @@ from .tokenizer import (
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
+
+    from .concepts import Prepared
 
 ANNOTATIONS_DDL = (
     "url string, sent_id int, chunk_id int, tokens array<string>, "
@@ -387,11 +392,12 @@ def annotate_pages(
 FLAT_DDL = (
     "url string, sent_id int, chunk_id int, kind string, tag string, "
     "begin int, end int, "
-    "mod string, surface string, obj_surface string, obj_tag string, rel string"
+    "mod string, surface string, obj_surface string, obj_tag string, "
+    "rel string, subj_id string, obj_id string"
 )
 
 
-def _make_flat_arrow_batches(mode: str, spec: str):
+def _make_flat_arrow_batches(mode: str, spec: str, dictionary):
     def _flat_arrow_batches(batches):
         """pages Arrow batches -> flat mention/triple rows as Arrow batches.
 
@@ -399,15 +405,18 @@ def _make_flat_arrow_batches(mode: str, spec: str):
         primitives only, built straight into ``pyarrow`` arrays. No pandas
         object columns, no nested types: this is what lets the stage scale
         linearly with python workers (nested struct conversion measured as
-        the bottleneck at 1M docs).
+        the bottleneck at 1M docs). A triple's subj_id/obj_id come from one
+        ``link.resolver`` per task, null without a dictionary.
         """
         import pyarrow as pa
 
         tagger = _get_tagger(spec)
         vocab = getattr(tagger, "subword_vocab", None)
+        resolve = None if dictionary is None else resolver(dictionary)
         names = (
             "url", "sent_id", "chunk_id", "kind", "tag", "begin", "end",
             "mod", "surface", "obj_surface", "obj_tag", "rel",
+            "subj_id", "obj_id",
         )
         types = {
             "sent_id": pa.int32(), "chunk_id": pa.int32(),
@@ -433,10 +442,13 @@ def _make_flat_arrow_batches(mode: str, spec: str):
                 # order after ``kind``
                 for m in mentions:
                     for f, v in zip(add, (url, sid, cid, "m", *m,
-                                          None, None, None)):
+                                          None, None, None, None, None)):
                         f(v)
                 for t in triples:
-                    for f, v in zip(add, (url, sid, cid, "t", *t)):
+                    ids = (None, None) if resolve is None else (
+                        resolve(t[4], t[0]), resolve(t[5], t[6])
+                    )
+                    for f, v in zip(add, (url, sid, cid, "t", *t, *ids)):
                         f(v)
             if cols["url"]:
                 yield pa.RecordBatch.from_pydict(
@@ -449,14 +461,20 @@ def _make_flat_arrow_batches(mode: str, spec: str):
 
 def annotate_pages_flat(
     pages: "DataFrame", lang: str = "ja", mode: str = "sentence",
-    model_spec: str | None = None,
+    model_spec: str | None = None, dictionary: "Prepared | None" = None,
 ) -> "DataFrame":
     """pages -> flat mention/triple rows (production hot path, mapInArrow).
 
-    ``mode`` / ``model_spec`` as in :func:`annotate_pages`."""
+    ``mode`` / ``model_spec`` as in :func:`annotate_pages`. With a
+    ``concepts.prepare`` result as ``dictionary``, each triple row also
+    carries the canonical subj_id/obj_id its surfaces resolve to
+    (``link.resolver``); the dictionary travels to the tasks in the stage's
+    closure, so it must fit the driver and each Python worker."""
     filtered = pages.where(F.col("lang") == lang).select(*_page_cols())
     return filtered.mapInArrow(
-        _make_flat_arrow_batches(mode, _resolve_model_spec(model_spec)),
+        _make_flat_arrow_batches(
+            mode, _resolve_model_spec(model_spec), dictionary
+        ),
         schema=FLAT_DDL,
     )
 

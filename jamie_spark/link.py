@@ -1,21 +1,25 @@
 """Entity linking: candidate generation (N2) + rerank (N3).
 
-Links mention surfaces to the concept dictionary in one pass:
+One index, built on the driver by ``concepts.prepare`` from a single collect
+of the dictionary: an exact map from ``(textnorm.zen_to_han(alias),
+sem_type)`` to the smallest concept_id, and a ``(sem_type, gram)`` -> alias
+posting map over distinct character {1,2}-grams (``concepts.grams``). The
+hash side is built once and probed for every surface; a caller that links
+several times passes the prepared dictionary and builds it once.
 
-1. distinct-surface dedup — at 10^12 documents mention surfaces follow a power
-   law; linking DISTINCT surfaces turns an O(mentions) problem into an
-   O(vocabulary) one. This is the single biggest scale lever here.
-2. one index, built on the driver by ``concepts.prepare`` from a single
-   collect of the dictionary: an exact map from
-   ``(textnorm.zen_to_han(alias), sem_type)`` to the smallest concept_id,
-   and a ``(sem_type, gram)`` -> alias posting map over distinct character
-   {1,2}-grams (``concepts.grams``). The hash side is built once and probed
-   for every surface; a caller that links several times passes the
-   prepared dictionary and builds it once.
-3. one ``mapInArrow`` over the distinct surfaces probes it: an exact hit wins
-   (score 1.0, ``"exact"``); otherwise only the aliases that share a gram
-   with the surface are scored, by exact Jaccard, kept at >= ``MIN_JACCARD``
-   and reranked top-1 by score desc, then concept_id asc (``"broadcast"``).
+A probe (:func:`_resolve`): an exact hit wins (score 1.0, ``"exact"``);
+otherwise only the aliases that share a gram with the surface are scored,
+by exact Jaccard, kept at >= ``MIN_JACCARD`` and reranked top-1 by score
+desc, then concept_id asc (``"broadcast"``). It is reached two ways:
+
+* :func:`resolver`, the KG write path: ``infer.annotate_pages_flat`` builds
+  one per task and resolves each triple's surfaces to canonical ids where
+  the rows already are, memoized per (surface, tag) — at 10^12 documents
+  mention surfaces follow a power law, so a task scores each distinct
+  surface once, and no surface table, join or pin is needed;
+* :func:`link_surfaces`, the table-level form: one ``mapInArrow`` over the
+  distinct (surface, sem_type) rows, emitting the link rows themselves.
+  It is the reference the fused path is tested against.
 
 Rows with a null key never link: a dictionary row with a null concept_id,
 alias or sem_type is left out of the index, and a null surface or sem_type
@@ -28,7 +32,7 @@ from collections import Counter
 from typing import TYPE_CHECKING
 
 from . import frames
-from .concepts import grams, prepare
+from .concepts import TAG2NAME, grams, prepare
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -57,6 +61,29 @@ def _resolve(surface, st, exact: dict, postings: dict):
         default=None,
     )
     return None if best is None else (best[1], -best[0], "broadcast")
+
+
+def resolver(dictionary: "Prepared"):
+    """``resolve(surface, tag)`` -> the canonical id of ``surface`` linked
+    in its NER tag's semantic family (``concepts.TAG2NAME``), or the surface
+    itself when nothing links: what :func:`link_surfaces`,
+    ``canon.canonicalize_concepts`` and ``graph.canonical_triples`` compute
+    as tables, as two dict lookups. Answers are memoized, so a resolver
+    built once per task scores each distinct (surface, tag) once there."""
+    exact, postings = dictionary.exact, dictionary.postings
+    canonical = dictionary.canonical
+    memo: dict = {}
+
+    def resolve(surface, tag):
+        key = (surface, tag)
+        if key not in memo:
+            hit = _resolve(surface, TAG2NAME.get(tag), exact, postings)
+            memo[key] = (
+                surface if hit is None else canonical.get(hit[0], hit[0])
+            )
+        return memo[key]
+
+    return resolve
 
 
 def link_surfaces(

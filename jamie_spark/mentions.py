@@ -61,17 +61,25 @@ def mentions_from_flat(flat: "DataFrame") -> "DataFrame":
     return _with_tid(m)
 
 
+#: (flat column, triples column) in triples-table order: the columns of
+#: :func:`triples_from_flat` and of ``pipeline.run_kg``'s canonical triples,
+#: which add the flat rows' subj_id and obj_id
+TRIPLE_COLUMNS = (
+    ("url", "url"),
+    ("sent_id", "sent_id"),
+    ("surface", "subj_surface"),
+    ("rel", "pred"),
+    ("obj_surface", "obj_surface"),
+    ("tag", "subj_tag"),
+    ("obj_tag", "obj_tag"),
+    ("mod", "subj_mod"),
+)
+
+
 def triples_from_flat(flat: "DataFrame") -> "DataFrame":
     """Flat hot-path rows (kind='t') -> triples table (mention-triplet shape)."""
     return flat.where(F.col("kind") == "t").select(
-        "url",
-        "sent_id",
-        F.col("surface").alias("subj_surface"),
-        F.col("rel").alias("pred"),
-        F.col("obj_surface").alias("obj_surface"),
-        F.col("tag").alias("subj_tag"),
-        F.col("obj_tag").alias("obj_tag"),
-        F.col("mod").alias("subj_mod"),
+        *[F.col(c).alias(name) for c, name in TRIPLE_COLUMNS]
     )
 
 

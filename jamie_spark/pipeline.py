@@ -1,8 +1,9 @@
 """End-to-end pipeline composition (SURVEY.md §3.2 Spark re-expression).
 
-    pages -> annotate (one mapInArrow) -> mentions + triples
-          -> link surfaces (N2/N3) + canonicalize (N4) from one dictionary
-          -> canonical triples -> materialize salted (N5) [+ lineage N6]
+    pages -> annotate + link (N2/N3) + canonicalize (N4), one mapInArrow
+             probing one prepared dictionary
+          -> mentions, triples, canonical triples (projections)
+          -> materialize salted (N5) [+ lineage N6]
 
 Each stage is a DataFrame -> DataFrame function; ``run_extraction`` /
 ``run_kg`` return the intermediate tables for tests and ad-hoc queries.
@@ -17,8 +18,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from . import canon, frames, graph, infer, lineage, link, mentions as mentions_mod
-from .concepts import prepare, sem_type_of
+from . import infer, lineage, mentions as mentions_mod
+from .concepts import prepare
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame, SparkSession
@@ -48,72 +49,45 @@ def run_kg(
     """Full knowledge-graph construction; returns all intermediate tables.
 
     Uses the flat Arrow-native hot path (infer.annotate_pages_flat): one
-    mapInArrow stage emitting primitive-typed mention/triple rows. The nested
-    annotations stage exists for parity outputs (CONLL/XML) and is not on
-    this path.
+    mapInArrow stage emitting primitive-typed mention/triple rows, each
+    triple already carrying its canonical subj_id/obj_id (``link.resolver``
+    over one ``concepts.prepare`` of ``concept_dict``: one collect for a
+    table, none for a dictionary already prepared). The canonical triples
+    are a projection of that stage, with no join and no pin: pages -> one
+    Arrow stage -> select. The nested annotations stage exists for parity
+    outputs (CONLL/XML) and is not on this path.
 
-    The inference stage feeds two downstream passes (surface discovery and
-    the canonical join). With ``checkpoint_dir`` set, the stage lands as a
-    parquet checkpoint and both passes read it back — the sandbox analog of
-    the per-stage Iceberg checkpoint (N6), and ~3x cheaper than Spark's
-    columnar in-memory cache for this row volume (measured: 17s write+reread
-    vs 54s persist at 9.4M rows). Without a dir it is materialized; the
-    caller's ``frames.scope()`` or :func:`release` unpins it and the links.
-
-    The linking index and the canonical map come from one
-    ``concepts.prepare`` of ``concept_dict``: one collect for a table, none
-    for a dictionary already prepared.
+    Every returned table reads the stage; each evaluation reruns it. With
+    ``checkpoint_dir`` set, the stage lands as a parquet checkpoint and the
+    tables read it back — the sandbox analog of the per-stage Iceberg
+    checkpoint (N6).
 
     ``model_spec`` selects the extractor provider (``standin`` default,
     ``numpy:<dir>``, ``torch:<dir>``) — resolved driver-side and shipped by
     closure, same contract as infer.annotate_pages_flat.
     """
+    flat = infer.annotate_pages_flat(
+        pages, lang=lang, mode=mode, model_spec=model_spec,
+        dictionary=prepare(concept_dict),
+    )
     if checkpoint_dir is not None:
-        spark = pages.sparkSession
         path = os.path.join(checkpoint_dir, "flat_annotations.parquet")
-        infer.annotate_pages_flat(
-            pages, lang=lang, mode=mode, model_spec=model_spec
-        ).write.mode(
-            "overwrite"
-        ).parquet(path)
-        flat = spark.read.parquet(path)
-    else:
-        flat = frames.materialize(infer.annotate_pages_flat(
-            pages, lang=lang, mode=mode, model_spec=model_spec
-        ))
-    ext = {
+        flat.write.mode("overwrite").parquet(path)
+        flat = pages.sparkSession.read.parquet(path)
+    return {
         "annotations": flat,
         "mentions": mentions_mod.mentions_from_flat(flat),
         "triples": mentions_mod.triples_from_flat(flat),
+        "canonical_triples": flat.where(F.col("kind") == "t").select(
+            *[F.col(c).alias(name) for c, name in mentions_mod.TRIPLE_COLUMNS],
+            "subj_id", "obj_id",
+        ),
     }
-    triples = ext["triples"]
-    surfaces = (
-        triples.select(
-            F.col("subj_surface").alias("surface"),
-            sem_type_of("subj_tag").alias("sem_type"),
-        )
-        .union(
-            triples.select(
-                F.col("obj_surface").alias("surface"),
-                sem_type_of("obj_tag").alias("sem_type"),
-            )
-        )
-        .distinct()
-    )
-    dictionary = prepare(concept_dict)
-    links = link.link_surfaces(surfaces, dictionary)
-    concept_canon = canon.canonicalize_concepts(dictionary)
-    canonical = graph.canonical_triples(triples, links, concept_canon)
-    pinned = [links] if checkpoint_dir is not None else [flat, links]
-    return {**ext, "links": links, "concept_canon": concept_canon,
-            "canonical_triples": canonical, "_pinned": pinned}
 
 
 def release(result: dict) -> None:
-    """Unpin what a :func:`run_kg` call materialized, for a caller outside
-    any ``frames.scope()`` (inside one, the scope's exit does it)."""
-    with frames.scope(*result["_pinned"]):
-        pass
+    """No-op: :func:`run_kg` pins nothing. Kept for perfbench's workloads,
+    which call it after each pass."""
 
 
 def run_with_lineage(
@@ -138,7 +112,9 @@ def run_with_lineage(
     simulate a mid-run crash).
 
     ``parallel_buckets`` > 1 overlaps bucket runs via driver threads (Spark
-    schedules concurrent jobs fairly). Per-bucket lineage atomicity is
+    schedules concurrent jobs fairly); their jobs run under the caller's job
+    group, description and scheduler pool, as sequential ones do, so
+    ``cancelJobGroup`` stops them. Per-bucket lineage atomicity is
     unchanged: each bucket still writes its own data directory
     (deterministic overwrite) BEFORE appending its own lineage row; the
     append itself is serialized by a driver lock (concurrent appends to one
@@ -168,11 +144,9 @@ def run_with_lineage(
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
         path = os.path.join(out_dir, "data", f"bucket={b}")
-        # one scope per bucket, on the bucket's own thread; deterministic
-        # per-bucket overwrite -> idempotent on re-run
-        with frames.scope():
-            out = run_kg(subset, dictionary, lang=lang)["canonical_triples"]
-            out.write.mode("overwrite").parquet(path)
+        # deterministic per-bucket overwrite -> idempotent on re-run
+        out = run_kg(subset, dictionary, lang=lang)["canonical_triples"]
+        out.write.mode("overwrite").parquet(path)
         n_triples = spark.read.parquet(path).count()
         lineage.append_lineage_row(
             spark, out_dir, stage, b, stats["lo"], stats["hi"],
@@ -185,9 +159,14 @@ def run_with_lineage(
     else:
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        # wrapped on the caller's thread: captures its local properties and
+        # session tags
+        run_bucket = inheritable_thread_target(spark)(_run_bucket)
         with ThreadPoolExecutor(max_workers=parallel_buckets) as pool:
             # list() drains the iterator so the first failure propagates
-            list(pool.map(_run_bucket, todo))
+            list(pool.map(run_bucket, todo))
     return todo
 
 

@@ -113,11 +113,10 @@ def _write_kg_batch(
     from . import graph
 
     dictionary = prepare(concept_dict)
-    with scope():
-        triples = pipeline.run_kg(pages, dictionary)["canonical_triples"]
-        graph.salted(triples, n_buckets=8, n_salts=4).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
+    triples = pipeline.run_kg(pages, dictionary)["canonical_triples"]
+    graph.salted(triples, n_buckets=8, n_salts=4).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
     return dictionary
 
 
@@ -266,13 +265,14 @@ def process_kg_dedup_batch(
       a driver set, handed to the extraction and the commit as a local
       relation. Jobs: the emptiness check, two materializations, the probe's
       and the null-text doc_id collects, the prior probe's stages and collect,
-      run_kg and its write on the survivors, and the commit's write.
+      the dictionary's collect unless it came prepared, run_kg's one-stage
+      write on the survivors, and the commit's write.
     * Above it: the prior probe and the intra-batch band self-join are
       distributed plans, and the survivor doc_ids are materialized and
       counted before the extraction and the commit.
 
     A history drop of 200 fresh pages and 200 mirrors against a 400-page
-    history runs 25 jobs on the driver branch and 38 on the distributed one
+    history runs 20 jobs on the driver branch and 33 on the distributed one
     (tests/test_streaming.py caps the first).
 
     Returns the dictionary prepared when survivors reached extraction, else

@@ -179,12 +179,10 @@ def test_doc_mode_cross_provider_identical(spark, tmp_path):
 
     def triples(spec):
         r = pipeline.run_kg(pages, concepts, mode="document", model_spec=spec)
-        rows = sorted(
+        return sorted(
             tuple(row)
             for row in r["canonical_triples"].select(*cols).collect()
         )
-        pipeline.release(r)
-        return rows
 
     gold = triples(None)
     got = triples(f"numpy:{ckpt}")

@@ -1,4 +1,5 @@
-"""link.link_surfaces against a pure-Python reference on random dictionaries.
+"""link.link_surfaces against a pure-Python reference on random dictionaries,
+and run_kg's fused canonical ids against the table-level composition.
 
 The reference states the linking contract without Spark: an exact hit on
 ``textnorm.zen_to_han(alias)`` within the surface's sem_type wins; otherwise
@@ -10,8 +11,12 @@ the top-1 is by score desc, then concept_id asc.
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
-from jamie_spark import concepts, link, textnorm
+from jamie_spark import (
+    canon, concepts, fixtures, frames, graph, infer, link, mentions, pipeline,
+    textnorm,
+)
 
 N_TRIALS = 30
 SEM_TYPES = ["Disease", "Remedy"]
@@ -190,3 +195,117 @@ def test_default_call_leaves_no_cache_behind(spark, persisted_rdds):
     )
     assert links.count() == 1
     assert persisted_rdds() == before
+
+
+# --- run_kg's fused canonical ids vs the table-level composition ------------
+
+CANONICAL_COLS = [
+    "url", "sent_id", "subj_surface", "pred", "obj_surface", "subj_tag",
+    "obj_tag", "subj_mod", "subj_id", "obj_id",
+]
+
+
+def _fixture_dictionary(trial: int) -> list[tuple]:
+    """A seeded dictionary over the fixture surfaces, sem types from
+    ``concepts.TAG2NAME``. Each surface gets an exact alias, or only
+    fuzzy variants (two one-character extensions under two concept ids,
+    which tie on Jaccard), or nothing. A small concept-id pool and shared
+    aliases cross-link concepts; null concept_id, alias and sem_type rows
+    ride along."""
+    rng = random.Random(trial)
+    pool = [f"C{i}" for i in range(8)]
+    pairs = concepts.surface_tag_pairs()
+    rows, exact = [], []
+    for surface, tag in pairs:
+        st = concepts.TAG2NAME[tag]
+        r = rng.random()
+        if r < 0.4:
+            exact.append((rng.choice(pool), surface, st))
+        elif r < 0.8:
+            a, b = rng.sample(pool, 2)
+            rows += [(a, surface + "＊", st), (b, surface + "#", st)]
+    rows += exact
+    for _, alias, st in rng.sample(exact, 3):
+        rows.append((rng.choice(pool), alias, st))  # cross-link, exact tie
+    a, b = rng.sample(pool, 2)
+    rows.append((a, b, "Disease"))  # an alias naming another concept id
+    surface, tag = rng.choice(pairs)
+    rows += [
+        (None, surface, concepts.TAG2NAME[tag]),
+        (rng.choice(pool), None, "Disease"),
+        (rng.choice(pool), surface, None),
+    ]
+    return rows
+
+
+def _reference_canonical(flat, concept_dict):
+    """(canonical triples, links) of link.link_surfaces +
+    canon.canonicalize_concepts + graph.canonical_triples over the flat
+    rows' triples, as run_kg composed them before it fused them."""
+    triples = mentions.triples_from_flat(flat)
+    surfaces = triples.select(
+        F.col("subj_surface").alias("surface"),
+        concepts.sem_type_of("subj_tag").alias("sem_type"),
+    ).union(triples.select(
+        F.col("obj_surface").alias("surface"),
+        concepts.sem_type_of("obj_tag").alias("sem_type"),
+    ))
+    links = link.link_surfaces(surfaces, concept_dict, materialize=False)
+    return graph.canonical_triples(
+        triples, links, canon.canonicalize_concepts(concept_dict)
+    ), links
+
+
+def _fused_equals_reference(spark, pages, flat, rows, mode="sentence"):
+    """Asserts run_kg's canonical triples on ``pages`` equal the reference's
+    over ``flat``, their flat rows, and returns the reference links and the
+    prepared dictionary."""
+    concept_dict = concepts.prepare(spark.createDataFrame(
+        rows, "concept_id string, alias string, sem_type string"
+    ))
+    want, links = _reference_canonical(flat, concept_dict)
+    want = sorted(map(tuple, want.select(*CANONICAL_COLS).collect()))
+    got = pipeline.run_kg(pages, concept_dict, mode=mode)["canonical_triples"]
+    assert sorted(map(tuple, got.select(*CANONICAL_COLS).collect())) == want
+    assert want
+    return [tuple(r) for r in links.collect()], concept_dict
+
+
+def test_fused_canonical_ids_match_reference_composition(spark):
+    """Over seeded dictionaries and pages spread over 16 partitions (so
+    each task's memo sees repeats), run_kg's ids equal the table-level
+    composition's; the data covers exact and fuzzy-only links, Jaccard ties
+    across concept ids, cross-linked concepts and null dictionary keys."""
+    pages = fixtures.pages_df(spark, 60, seed=42).repartition(16)
+    assert pages.rdd.getNumPartitions() >= 16
+    methods, tied, merged = set(), False, False
+    with frames.scope():
+        flat = frames.materialize(infer.annotate_pages_flat(pages))
+        for trial in range(4):
+            rows = _fixture_dictionary(trial)
+            links, dictionary = _fused_equals_reference(
+                spark, pages, flat, rows
+            )
+            methods |= {m for *_, m in links}
+            dic = _normalized(rows)
+            tied |= any(
+                len({c for score, c in _fuzzy_scores(s, st, dic)
+                     if score == best}) > 1
+                for s, st, _, best, m in links if m == "broadcast"
+            )
+            merged |= any(
+                dictionary.canonical[c] != c for _, _, c, _, _ in links
+            )
+    assert methods == {"exact", "broadcast"}
+    assert tied and merged
+
+
+def test_fused_canonical_ids_match_reference_in_document_mode(spark):
+    pages = fixtures.pages_df(spark, 60, seed=11).repartition(16)
+    with frames.scope():
+        flat = frames.materialize(
+            infer.annotate_pages_flat(pages, mode="document")
+        )
+        _fused_equals_reference(
+            spark, pages, flat, _fixture_dictionary(0), "document"
+        )

@@ -142,11 +142,9 @@ def test_pipeline_value_identical(spark, ckpt):
 
     def triples(spec):
         r = pipeline.run_kg(pages, concepts, model_spec=spec)
-        rows = sorted(
+        return sorted(
             tuple(row) for row in r["canonical_triples"].select(*cols).collect()
         )
-        pipeline.release(r)
-        return rows
 
     gold = triples(None)  # standin default
     got = triples(f"numpy:{ckpt}")

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jamie_spark import (
-    canon, concepts, eval as ev, fixtures, frames, graph, infer, link,
+    canon, concepts, eval as ev, fixtures, graph, infer, link,
     pipeline,
 )
 
@@ -433,11 +433,8 @@ def test_run_kg_collects_the_dictionary_once(corpus, dictionary_collects):
     canonical map share one driver collect."""
     concept_dict = dictionary_collects.watch(corpus["concepts"])
     result = pipeline.run_kg(corpus["pages"], concept_dict)
-    try:
-        assert dictionary_collects.count() == 1
-        assert result["canonical_triples"].count() > 0
-    finally:
-        pipeline.release(result)
+    assert dictionary_collects.count() == 1
+    assert result["canonical_triples"].count() > 0
 
 
 @pytest.mark.parametrize("parallel", [1, 2])
@@ -464,23 +461,19 @@ def test_run_with_lineage_collects_the_dictionary_once(
 
 
 def test_run_kg_and_collect_job_count(spark, corpus, spark_jobs):
-    """run_kg plus a collect of its canonical triples runs 7 Spark jobs: 1
-    materializes the extraction, 2 link (the distinct surfaces and the
-    links' materialization), 1 collects the dictionary and 3 are the
-    collect through the canonical join. A prepared dictionary saves the
-    dictionary's job."""
+    """run_kg plus a collect of its canonical triples runs 2 Spark jobs: 1
+    collects the dictionary and 1 is the collect, a scan of the one
+    extraction stage, which resolves the canonical ids itself. A prepared
+    dictionary saves the dictionary's job."""
     prepared = concepts.prepare(corpus["concepts"])
 
     def run(concept_dict):
-        def block():
-            with frames.scope():
-                pipeline.run_kg(corpus["pages"], concept_dict)[
-                    "canonical_triples"
-                ].collect()
-        return block
+        return lambda: pipeline.run_kg(corpus["pages"], concept_dict)[
+            "canonical_triples"
+        ].collect()
 
-    assert spark_jobs(run(corpus["concepts"])) == 7
-    assert spark_jobs(run(prepared)) == 6
+    assert spark_jobs(run(corpus["concepts"])) == 2
+    assert spark_jobs(run(prepared)) == 1
 
 
 def test_full_kg_and_materialization(spark, corpus, tmp_path):
@@ -702,8 +695,8 @@ def test_lineage_resume_idempotent(spark, corpus, tmp_path):
 def test_lineage_buckets_leave_no_pin_behind(
     spark, corpus, tmp_path, pinned_rdds, parallel
 ):
-    """Each bucket runs in its own thread's frames.scope(): after a
-    two-bucket call no RDD it pinned is left, checkpoints included."""
+    """After a two-bucket call no RDD it pinned is left, checkpoints
+    included."""
     corpus["pages"].count()
     corpus["concepts"].count()
     before = pinned_rdds()
@@ -713,6 +706,27 @@ def test_lineage_buckets_leave_no_pin_behind(
     )
     assert done == [0, 1]
     assert pinned_rdds() == before
+
+
+def test_parallel_buckets_run_in_the_callers_job_group(
+    spark, corpus, tmp_path, spark_jobs
+):
+    """The pool threads of parallel_buckets > 1 run their jobs under the
+    caller's job group, so a parallel call counts the jobs the sequential
+    one does and ``cancelJobGroup`` reaches them."""
+    corpus["pages"].count()
+    prepared = concepts.prepare(corpus["concepts"])
+
+    def call(parallel):
+        return lambda: pipeline.run_with_lineage(
+            spark, corpus["pages"], prepared,
+            str(tmp_path / f"kg_{parallel}"), n_buckets=2,
+            parallel_buckets=parallel,
+        )
+
+    sequential = spark_jobs(call(1))
+    assert sequential > 2
+    assert spark_jobs(call(2)) == sequential
 
 
 def test_lineage_rejects_modulus_change(spark, corpus, tmp_path):

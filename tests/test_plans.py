@@ -202,21 +202,19 @@ def test_int8_quantization_computed_once_per_row(spark):
             )
 
 
-def test_canonical_triples_plan_has_no_sort_merge_join(spark):
-    """The canonical join must broadcast the canonical map: neither the
-    checkpointed links nor the driver-built map carries statistics, so an
-    un-hinted join is planned as a SortMergeJoin with an injected runtime
-    bloom filter that aggregates the corpus-sized triples."""
+def test_canonical_triples_is_one_arrow_stage(spark):
+    """run_kg's canonical triples are a projection of the one extraction
+    stage, which resolves the canonical ids itself: the executed plan has
+    exactly one MapInArrow, no join of any kind and no broadcast."""
     pages = fixtures.pages_df(spark, 60, seed=11)
-    result = pipeline.run_kg(pages, fixtures.concept_df(spark))
-    canonical = result["canonical_triples"]
-    try:
-        assert canonical.count() > 0
-        plan = _plan(canonical)  # the final adaptive plan, after the action
-        assert "SortMergeJoin" not in plan
-        assert "bloom_filter_agg" not in plan
-    finally:
-        pipeline.release(result)
+    canonical = pipeline.run_kg(pages, fixtures.concept_df(spark))[
+        "canonical_triples"
+    ]
+    assert canonical.count() > 0
+    plan = _plan(canonical)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Join" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_driver_tables_are_local_relations(spark, tmp_path):
