@@ -710,9 +710,9 @@ def scaling(n_docs: int) -> None:
             f"(north_rule gate: >= 0.8)\n\n"
             "The python inference stage alone (no downstream constants) "
             "measures 0.97 leg-to-leg efficiency (BENCH/NOTES.md §6); the "
-            "pipeline number includes the vocabulary-sized linking/canon "
-            "stages and the stage checkpoint, which are constant-time by "
-            "design (they scale with the DICTIONARY, not the corpus).\n"
+            "pipeline number includes the dictionary's driver-side "
+            "preparation, which is constant-time by design (it scales with "
+            "the DICTIONARY, not the corpus), and the stage checkpoint.\n"
         )
     print(json.dumps({"scaling_efficiency": round(eff, 3),
                       "runs_lo": times[lo], "runs_hi": times[hi]}))

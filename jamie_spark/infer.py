@@ -405,8 +405,7 @@ def _make_flat_arrow_batches(mode: str, spec: str, dictionary):
         primitives only, built straight into ``pyarrow`` arrays. No pandas
         object columns, no nested types: this is what lets the stage scale
         linearly with python workers (nested struct conversion measured as
-        the bottleneck at 1M docs). A triple's subj_id/obj_id come from one
-        ``link.resolver`` per task, null without a dictionary.
+        the bottleneck at 1M docs).
         """
         import pyarrow as pa
 

@@ -241,7 +241,7 @@ def _fixture_dictionary(trial: int) -> list[tuple]:
 def _reference_canonical(flat, concept_dict):
     """(canonical triples, links) of link.link_surfaces +
     canon.canonicalize_concepts + graph.canonical_triples over the flat
-    rows' triples, as run_kg composed them before it fused them."""
+    rows' triples and their distinct (surface, sem_type) pairs."""
     triples = mentions.triples_from_flat(flat)
     surfaces = triples.select(
         F.col("subj_surface").alias("surface"),
@@ -301,6 +301,7 @@ def test_fused_canonical_ids_match_reference_composition(spark):
 
 
 def test_fused_canonical_ids_match_reference_in_document_mode(spark):
+    """Document-mode extraction resolves the same ids as the composition."""
     pages = fixtures.pages_df(spark, 60, seed=11).repartition(16)
     with frames.scope():
         flat = frames.materialize(
