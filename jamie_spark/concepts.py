@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+import pickle
 from dataclasses import dataclass
+from functools import cached_property
 
 from .textnorm import zen_to_han
 
@@ -94,12 +96,39 @@ class Prepared:
     ``postings[(sem_type, gram)]`` lists ``(alias_norm, n_grams)`` once per
     distinct alias (:func:`grams`); ``canonical`` maps each concept_id to
     its canonical id; ``digest`` is the sha256 hex of the rows, whatever
-    their order."""
+    their order.
+
+    A pickled ``Prepared`` is its digest plus its three maps, pickled once
+    per instance. Unpickling one whose digest matches the last restored in
+    this process returns that object, so a Python worker builds a
+    dictionary's maps once, not once per task that ships it."""
 
     exact: dict
     postings: dict
     canonical: dict
     digest: str
+
+    @cached_property
+    def _payload(self) -> bytes:
+        return pickle.dumps(
+            (self.exact, self.postings, self.canonical),
+            pickle.HIGHEST_PROTOCOL,
+        )
+
+    def __reduce__(self):
+        return _restore, (self.digest, self._payload)
+
+
+#: the last :class:`Prepared` unpickled in this process
+_restored: list = [None]
+
+
+def _restore(digest: str, payload: bytes) -> Prepared:
+    last = _restored[0]
+    if last is None or last.digest != digest:
+        last = Prepared(*pickle.loads(payload), digest)
+        _restored[0] = last
+    return last
 
 
 def prepare(concept_dict) -> Prepared:

@@ -5,13 +5,15 @@ additional SALT dimension inside each bucket: head entities (the reference
 never faced this — single machine, tiny corpora; at 10^12 docs canonical
 subjects are power-law) would otherwise pin whole buckets on one task.
 
-    salt    = pmod(xxhash64(subj_id, obj_id, pred), n_salts)
+    salt    = pmod(xxhash64(url, sent_id, subj_id, obj_id, pred), n_salts)
     bucket  = pmod(xxhash64(subj_id), n_buckets)
-    repartition(bucket, salt)  ->  write partitionBy(bucket)
+    rebalance(bucket, salt)  ->  write partitionBy(bucket)
 
-Salting by the full triple key spreads one hot subject over ``n_salts`` tasks
-while bucket pruning on reads still works (bucket is a pure function of
-subj_id). AQE skew-join splitting stays on as the second line of defense.
+The write is sized by the data, not by ``n_buckets``: AQE coalesces the
+rebalance's shuffle partitions up to the advisory size and splits one that
+outgrows it. The salt hashes row-level attributes, so a hot subject's rows
+fall under ``n_salts`` shuffle keys instead of one, while bucket pruning on
+reads still works (bucket is a pure function of subj_id).
 """
 
 from __future__ import annotations
@@ -138,9 +140,20 @@ def materialize(
     tests/test_optional_jars.py, which skip in this jar-less sandbox).
     Default: identical layout as parquet ``partitionBy(bucket)`` at
     ``path`` — same pruning + skew behavior.
+
+    How many tasks write is up to AQE, not ``n_buckets``: the rebalance
+    hint shuffles on (bucket, salt), coalesces partitions up to
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` and splits a skewed
+    one, so a small graph is written by few tasks, with few files per
+    bucket, and a hot bucket by several tasks. With AQE off the hint is a
+    plain hash repartition into ``spark.sql.shuffle.partitions``
+    partitions. Whether Iceberg's own write distribution mode reshuffles
+    the rebalanced frame is unverified: the Iceberg tests skip without
+    the runtime jar.
     """
-    df = salted(triples, n_buckets, n_salts)
-    part = df.repartition(n_buckets, "bucket", "salt")
+    part = salted(triples, n_buckets, n_salts).hint(
+        "rebalance", "bucket", "salt"
+    )
     if table is not None:
         # only the modes DSv2 actually expresses: collapsing 'error' or
         # 'ignore' into append would silently duplicate every triple in

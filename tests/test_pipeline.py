@@ -510,6 +510,21 @@ def test_skew_salting_bounds_partition_sizes(spark):
     canonical.unpersist()
 
 
+def _zipf_triples(spark, n: int, partitions: int):
+    """``n`` triples whose subjects are Zipf(1) over 1000 ids: a log-uniform
+    rank draw, so the head subject S1 owns ~13% of the rows."""
+    u = F.pmod(F.xxhash64("id", F.lit(13)), F.lit(1_000_000)) / 1_000_000.0
+    return spark.range(0, n, numPartitions=partitions).select(
+        F.concat(F.lit("S"), F.floor(F.pow(F.lit(1000.0), u)).cast("string"))
+        .alias("subj_id"),
+        F.concat(F.lit("P"), (F.col("id") % 7).cast("string")).alias("pred"),
+        F.concat(F.lit("O"), (F.col("id") % 50_000).cast("string"))
+        .alias("obj_id"),
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        (F.col("id") % 13).cast("int").alias("sent_id"),
+    )
+
+
 def test_skew_salting_zipf_1m_triples(spark):
     """N5 at scale shape: 1M triples with a Zipf(1) subject distribution
     (log-uniform rank draw over 1000 subjects -> the head subject owns ~13%
@@ -522,17 +537,7 @@ def test_skew_salting_zipf_1m_triples(spark):
     and median alike — and (b) the max cell is at least 4x smaller than the
     unsalted max bucket, the ABSOLUTE task-size reduction that kills the
     straggler (the metric that matters for wall-clock)."""
-    n = 1_000_000
-    u = F.pmod(F.xxhash64("id", F.lit(13)), F.lit(1_000_000)) / 1_000_000.0
-    triples = spark.range(0, n, numPartitions=32).select(
-        F.concat(F.lit("S"), F.floor(F.pow(F.lit(1000.0), u)).cast("string"))
-        .alias("subj_id"),
-        F.concat(F.lit("P"), (F.col("id") % 7).cast("string")).alias("pred"),
-        F.concat(F.lit("O"), (F.col("id") % 50_000).cast("string"))
-        .alias("obj_id"),
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        (F.col("id") % 13).cast("int").alias("sent_id"),
-    )
+    triples = _zipf_triples(spark, 1_000_000, 32)
     hist = graph.partition_histogram(triples, n_buckets=32, n_salts=8).cache()
     try:
         row = hist.agg(
@@ -548,6 +553,67 @@ def test_skew_salting_zipf_1m_triples(spark):
         assert salted_max * 4 <= unsalted_max, (salted_max, unsalted_max)
     finally:
         hist.unpersist()
+
+
+def _digest(df, cols) -> tuple:
+    """(count, sum of row hashes): an order-free multiset digest. The sum is
+    decimal, since a long sum of 64-bit hashes overflows under ANSI mode."""
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
+    ).first()
+    return tuple(row)
+
+
+def _files_by_bucket(path: str) -> dict:
+    return {
+        d: [f for f in os.listdir(os.path.join(path, d))
+            if f.endswith(".parquet")]
+        for d in os.listdir(path) if d.startswith("bucket=")
+    }
+
+
+def test_materialize_writes_one_file_per_bucket(spark, corpus, tmp_path):
+    """The write is sized by the data: the fixture graph fits one write
+    task, so each bucket dir holds exactly one file (a fixed hash
+    repartition wrote one per (bucket, salt) cell each task held), and
+    every row reads back."""
+    canonical = pipeline.run_kg(corpus["pages"], corpus["concepts"])[
+        "canonical_triples"
+    ]
+    out = str(tmp_path / "graph")
+    graph.materialize(canonical, out, n_buckets=8, n_salts=4)
+    files = _files_by_bucket(out)
+    assert files and all(len(fs) == 1 for fs in files.values()), files
+    cols = canonical.columns
+    assert _digest(spark.read.parquet(out), cols) == _digest(canonical, cols)
+
+
+def test_materialize_splits_a_hot_bucket(spark, tmp_path):
+    """A Zipf head subject's bucket is written by several tasks once it
+    outgrows the advisory partition size: at least ``n_salts`` files, the
+    largest holding at most a quarter of the bucket's rows."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "128k")
+    try:
+        out = str(tmp_path / "graph")
+        graph.materialize(
+            _zipf_triples(spark, 100_000, 16), out, n_buckets=32, n_salts=8
+        )
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    back = spark.read.parquet(out)
+    hot = back.groupBy("bucket").count().orderBy(F.desc("count")).first()
+    per_file = [
+        r["count"] for r in back.where(F.col("bucket") == hot["bucket"])
+        .groupBy(F.input_file_name()).count().collect()
+    ]
+    assert len(per_file) >= 8, per_file
+    assert max(per_file) * 4 <= hot["count"], (per_file, hot["count"])
 
 
 def test_run_kg_empty_corpus(spark, corpus):
@@ -653,6 +719,28 @@ def test_dictionary_digest_tracks_every_field(spark):
         assert digest([tuple(r) for r in changed]) != base, (i, field)
     prepared = concepts.prepare(spark.createDataFrame(rows, ddl))
     assert concepts.prepare(prepared) is prepared
+
+
+def test_prepared_unpickles_once_per_digest(spark):
+    """A process restores a pickled dictionary once: unpickling it again
+    returns the same object, equal to the original; a dictionary with
+    another digest restores its own object."""
+    import pickle
+
+    ddl = "concept_id string, alias string, sem_type string"
+    rows = [("C1", "肺癌", "Disease"), ("C2", "肺がん", "Disease")]
+    original = concepts.prepare(spark.createDataFrame(rows, ddl))
+    other = concepts.prepare(
+        spark.createDataFrame(rows + [("C3", "胃癌", "Disease")], ddl)
+    )
+    blob = pickle.dumps(original)
+    first, second = pickle.loads(blob), pickle.loads(blob)
+    assert first is second
+    assert first == original
+    restored_other = pickle.loads(pickle.dumps(other))
+    assert restored_other is not first
+    assert restored_other == other and restored_other != original
+    assert pickle.loads(blob) == original
 
 
 def test_lineage_resume_idempotent(spark, corpus, tmp_path):
