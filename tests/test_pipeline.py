@@ -2,6 +2,7 @@
 canonicalization, materialization, lineage/resume."""
 
 import os
+import pickle
 
 import pytest
 from pyspark.sql import functions as F
@@ -565,25 +566,20 @@ def _digest(df, cols) -> tuple:
     return tuple(row)
 
 
-def _files_by_bucket(path: str) -> dict:
-    return {
-        d: [f for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")]
-        for d in os.listdir(path) if d.startswith("bucket=")
-    }
-
-
 def test_materialize_writes_one_file_per_bucket(spark, corpus, tmp_path):
     """The write is sized by the data: the fixture graph fits one write
-    task, so each bucket dir holds exactly one file (a fixed hash
-    repartition wrote one per (bucket, salt) cell each task held), and
-    every row reads back."""
+    task, so each bucket dir holds exactly one file, and every row reads
+    back."""
     canonical = pipeline.run_kg(corpus["pages"], corpus["concepts"])[
         "canonical_triples"
     ]
     out = str(tmp_path / "graph")
     graph.materialize(canonical, out, n_buckets=8, n_salts=4)
-    files = _files_by_bucket(out)
+    files = {
+        d: [f for f in os.listdir(os.path.join(out, d))
+            if f.endswith(".parquet")]
+        for d in os.listdir(out) if d.startswith("bucket=")
+    }
     assert files and all(len(fs) == 1 for fs in files.values()), files
     cols = canonical.columns
     assert _digest(spark.read.parquet(out), cols) == _digest(canonical, cols)
@@ -725,8 +721,6 @@ def test_prepared_unpickles_once_per_digest(spark):
     """A process restores a pickled dictionary once: unpickling it again
     returns the same object, equal to the original; a dictionary with
     another digest restores its own object."""
-    import pickle
-
     ddl = "concept_id string, alias string, sem_type string"
     rows = [("C1", "肺癌", "Disease"), ("C2", "肺がん", "Disease")]
     original = concepts.prepare(spark.createDataFrame(rows, ddl))
