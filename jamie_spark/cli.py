@@ -41,9 +41,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--max-buckets", type=int, default=None,
                    help="cap buckets this invocation (testing)")
-    p.add_argument("--parallel-buckets", type=int, default=1,
-                   help="overlap N bucket runs via driver threads (per-bucket"
-                        " lineage atomicity preserved)")
     p.add_argument("--analytics", action="store_true",
                    help="after the pipeline, compute the graph profile of "
                         "the materialized KG (degrees, fixed-point PageRank, "
@@ -145,7 +142,6 @@ def main(argv: list[str] | None = None) -> int:
     done = pipeline.run_with_lineage(
         spark, pages, concepts, args.out,
         n_buckets=args.buckets, max_buckets=args.max_buckets, lang=args.lang,
-        parallel_buckets=args.parallel_buckets,
     )
     lin = lineage.read_lineage(spark, args.out)
     # the ledger is append-only: after a model swap (or any re-run) each

@@ -40,15 +40,10 @@ from pyspark.sql import functions as F
 
 from .bio import bio_to_spans, rel_triplets
 from .link import resolver
-from .standin import MODEL_VERSION
+from .models import get_extractor, resolve_spec
 from .subword import MAX_SUBWORDS, subword_count
 from .textnorm import SEP, extract_text, zen_to_han
-from .tokenizer import (
-    TOKENIZER_VERSION,
-    chunk_sentences,
-    split_sentences,
-    tokenize,
-)
+from .tokenizer import chunk_sentences, split_sentences, tokenize
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import DataFrame
@@ -65,26 +60,11 @@ ANNOTATIONS_DDL = (
     "rel:string, tail_tag:string, head_tag:string, tail_mod:string>>"
 )
 
-STAGE_VERSION = f"{TOKENIZER_VERSION}+{MODEL_VERSION}"
-
-def _resolve_model_spec(spec: str | None) -> str:
-    """Resolve the model spec ON THE DRIVER at plan time. Reading JAMIE_MODEL
-    inside the worker instead is a silent-wrong-model trap: reused executor
-    python workers keep the environment they were launched with, so a spec
-    set only in the driver process never reaches them and the stand-in runs
-    without a whisper (pinned by
-    tests/test_models.py::test_torch_spec_without_torch_fails_fast...)."""
-    import os
-
-    return spec or os.environ.get("JAMIE_MODEL", "standin")
-
 
 def _get_tagger(spec: str):
     """Per-python-worker model construction + memoization (reference analog:
     the single in-process model of clinical_joint.py); the spec itself was
     resolved driver-side and shipped by closure."""
-    from .models import get_extractor
-
     return get_extractor(spec)
 
 
@@ -382,7 +362,7 @@ def annotate_pages(
     """
     filtered = pages.where(F.col("lang") == lang).select(*_page_cols())
     return filtered.mapInPandas(
-        _make_annotate_batches(mode, _resolve_model_spec(model_spec)),
+        _make_annotate_batches(mode, resolve_spec(model_spec)),
         schema=ANNOTATIONS_DDL,
     )
 
@@ -472,7 +452,7 @@ def annotate_pages_flat(
     filtered = pages.where(F.col("lang") == lang).select(*_page_cols())
     return filtered.mapInArrow(
         _make_flat_arrow_batches(
-            mode, _resolve_model_spec(model_spec), dictionary
+            mode, resolve_spec(model_spec), dictionary
         ),
         schema=FLAT_DDL,
     )

@@ -73,9 +73,9 @@ def pending_buckets(
     """Buckets not yet completed for (stage, model_version).
 
     ``pipeline.run_with_lineage`` keys on ``pipeline.resume_key`` (model
-    version plus dictionary digest), so swapping the model (JAMIE_MODEL) or
-    changing the dictionary invalidates prior completions instead of
-    silently skipping them.
+    version, tokenizer version and dictionary digest), so swapping the model
+    (JAMIE_MODEL), changing the tokenizer grammar or changing the dictionary
+    invalidates prior completions instead of silently skipping them.
 
     The bucket MODULUS is validated against the ledger: resuming with a
     different ``n_buckets`` would renumber the url-hash partitions, so the
@@ -112,8 +112,9 @@ def pending_buckets(
 
 #: concurrent parquet appends to ONE directory share the _temporary/0
 #: staging dir (FileOutputCommitter) and clobber each other — serialize
-#: lineage appends across the driver's bucket threads. Bucket DATA writes
-#: need no lock (each bucket overwrites its own directory).
+#: appends from concurrent callers in one driver (threads sharing a
+#: session). Bucket DATA writes need no lock (each bucket overwrites its
+#: own directory).
 _APPEND_LOCK = threading.Lock()
 
 
@@ -127,7 +128,7 @@ def append_lineage_row(
     model_version: str,
     row_count: int,
     triple_count: int,
-    n_buckets: int | None = None,
+    n_buckets: int,
 ) -> None:
     row = (
         stage, bucket, n_buckets, url_min, url_max, model_version,

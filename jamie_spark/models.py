@@ -355,13 +355,26 @@ def save_artifacts(model, tokenizer, vocabs: dict, out_dir: str) -> None:
             json.dump(vocabs[name], fo)
 
 
+def resolve_spec(spec: str | None) -> str:
+    """``spec``, else ``JAMIE_MODEL``, else ``standin``.
+
+    The inference stage calls this ON THE DRIVER at plan time and ships the
+    result by closure. Reading JAMIE_MODEL inside the worker instead is a
+    silent-wrong-model trap: reused executor python workers keep the
+    environment they were launched with, so a spec set only in the driver
+    process never reaches them and the stand-in runs without a whisper
+    (pinned by
+    tests/test_models.py::test_torch_spec_without_torch_fails_fast...)."""
+    return spec or os.environ.get("JAMIE_MODEL", "standin")
+
+
 def model_version(spec: str | None = None) -> str:
     """Version string recorded in lineage rows: the stand-in's pinned version
     for 'standin', the full spec otherwise. Resume is keyed on this — a model
     swap must recompute buckets, not skip them."""
     from .standin import MODEL_VERSION
 
-    spec = spec or os.environ.get("JAMIE_MODEL", "standin")
+    spec = resolve_spec(spec)
     return MODEL_VERSION if spec == "standin" else spec
 
 
@@ -370,7 +383,7 @@ _CACHE: dict[str, object] = {}
 
 def get_extractor(spec: str | None = None) -> "JointExtractor":
     """Resolve + memoize an extractor for this python worker process."""
-    spec = spec or os.environ.get("JAMIE_MODEL", "standin")
+    spec = resolve_spec(spec)
     if spec not in _CACHE:
         if spec == "standin":
             _CACHE[spec] = StandInJointExtractor()

@@ -90,49 +90,41 @@ def release(result: dict) -> None:
     which call it after each pass."""
 
 
+#: the ledger stage ``run_with_lineage`` records its buckets under
+STAGE = "kg_triples"
+
+
 def run_with_lineage(
     spark: "SparkSession",
     pages: "DataFrame",
     concept_dict: "DataFrame | Prepared",
     out_dir: str,
     n_buckets: int = 8,
-    stage: str = "kg_triples",
     max_buckets: int | None = None,
     lang: str = "ja",
-    parallel_buckets: int = 1,
 ) -> list[int]:
     """Bucket-wise run with lineage + resume (N6). Returns buckets processed.
 
     The dictionary is prepared once, before the ledger is read, and every
-    bucket probes it. Resume is keyed on (stage, bucket, :func:`resume_key`):
-    swapping the model via JAMIE_MODEL or changing any dictionary row
-    invalidates the completions made under the old ones, so a resume never
-    mixes canonical ids of two dictionaries in one output.
+    bucket probes it. Resume is keyed on (:data:`STAGE`, bucket,
+    :func:`resume_key`): swapping the model via JAMIE_MODEL, changing the
+    tokenizer grammar or changing any dictionary row invalidates the
+    completions made under the old ones, so a resume never mixes triples of
+    two extractors or canonical ids of two dictionaries in one output.
     ``max_buckets`` caps work per invocation (used by the kill/resume test to
-    simulate a mid-run crash).
-
-    ``parallel_buckets`` > 1 overlaps bucket runs via driver threads (Spark
-    schedules concurrent jobs fairly); their jobs run under the caller's job
-    group, description and scheduler pool, as sequential ones do, so
-    ``cancelJobGroup`` stops them. Per-bucket lineage atomicity is
-    unchanged: each bucket still writes its own data directory
-    (deterministic overwrite) BEFORE appending its own lineage row; the
-    append itself is serialized by a driver lock (concurrent appends to one
-    parquet dir share the _temporary staging dir and clobber). Sequential
-    remains the default — at real scale one bucket saturates the cluster
-    and sequential is the right resume granularity; parallelism pays when
-    buckets are small relative to the cluster.
+    simulate a mid-run crash). Each bucket overwrites its own data directory
+    BEFORE appending its lineage row, so a crash between the two reruns that
+    bucket.
     """
     dictionary = prepare(concept_dict)
     mv = resume_key(dictionary)
     todo = lineage.pending_buckets(
-        spark, out_dir, stage, n_buckets, model_version=mv
+        spark, out_dir, STAGE, n_buckets, model_version=mv
     )
     if max_buckets is not None:
         todo = todo[:max_buckets]
     bucketed = pages.withColumn("_bucket", lineage.bucket_of_url(n_buckets))
-
-    def _run_bucket(b: int) -> None:
+    for b in todo:
         subset = bucketed.where(F.col("_bucket") == b).drop("_bucket")
         # a second pass over the source, but column-pruned by design: the
         # agg touches only `url` (and the bucket filter is a function of
@@ -149,33 +141,23 @@ def run_with_lineage(
         out.write.mode("overwrite").parquet(path)
         n_triples = spark.read.parquet(path).count()
         lineage.append_lineage_row(
-            spark, out_dir, stage, b, stats["lo"], stats["hi"],
+            spark, out_dir, STAGE, b, stats["lo"], stats["hi"],
             mv, stats["n"], n_triples, n_buckets=n_buckets,
         )
-
-    if parallel_buckets <= 1:
-        for b in todo:
-            _run_bucket(b)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        # wrapped on the caller's thread: captures its local properties and
-        # session tags
-        run_bucket = inheritable_thread_target(spark)(_run_bucket)
-        with ThreadPoolExecutor(max_workers=parallel_buckets) as pool:
-            # list() drains the iterator so the first failure propagates
-            list(pool.map(run_bucket, todo))
     return todo
 
 
 def resume_key(dictionary: "Prepared") -> str:
     """The ledger's ``model_version`` value for a run with ``dictionary``:
-    ``<models.model_version()>+dict:<first 16 hex digits of its digest>``."""
+    ``<models.model_version()>+tok:<tokenizer.TOKENIZER_VERSION>+dict:<first
+    16 hex digits of its digest>``."""
+    from . import tokenizer
     from .models import model_version
 
-    return f"{model_version()}+dict:{dictionary.digest[:16]}"
+    return (
+        f"{model_version()}+tok:{tokenizer.TOKENIZER_VERSION}"
+        f"+dict:{dictionary.digest[:16]}"
+    )
 
 
 def read_materialized(spark: "SparkSession", out_dir: str) -> "DataFrame":

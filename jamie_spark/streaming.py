@@ -137,9 +137,12 @@ def stream_kg(
 
     ``foreachBatch`` reuses the exact batch pipeline (run_kg), so streaming
     and batch can never drift semantically; each micro-batch overwrites its
-    own ``batch={batch_id}`` partition (idempotent on replay — see module
-    docstring), laid out the same way as the batch materializer. The first
-    batch that extracts prepares the dictionary for the rest.
+    own ``batch={batch_id}`` directory (idempotent on replay — see module
+    docstring) with its canonical triples plus the ``graph.salted``
+    ``bucket``/``salt`` columns (8 buckets, 4 salts), as one unpartitioned
+    parquet write: no ``partitionBy("bucket")`` and no rebalance, unlike
+    ``graph.materialize``. The first batch that extracts prepares the
+    dictionary for the rest.
     """
 
     def process(batch_df: "DataFrame", batch_id: int) -> None:
@@ -539,20 +542,23 @@ def compact_link_store(
         hp.getFileSystem(conf).delete(hp, True)
 
 
+#: micro-batches between host-graph compactions in :func:`stream_link_hosts`
+LINK_COMPACT_EVERY = 16
+
+
 def stream_link_hosts(
     pages_stream: "DataFrame",
     checkpoint_dir: str,
     store_dir: str,
-    compact_every: int = 16,
 ) -> "StreamingQuery":
     """Continuous host-graph maintenance over the crawl stream: each
-    micro-batch commits its host-pair delta; every ``compact_every``
-    batches the deltas fold into a base rollup so the scheduler-facing
-    read (:func:`host_graph_totals`) stays bounded."""
+    micro-batch commits its host-pair delta; every
+    :data:`LINK_COMPACT_EVERY` batches the deltas fold into a base rollup so
+    the scheduler-facing read (:func:`host_graph_totals`) stays bounded."""
 
     def process(batch_df: "DataFrame", batch_id: int) -> None:
         process_link_batch(batch_df, batch_id, store_dir)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+        if batch_id > 0 and batch_id % LINK_COMPACT_EVERY == 0:
             compact_link_store(
                 batch_df.sparkSession, store_dir, batch_id - 1
             )

@@ -484,7 +484,6 @@ def dedup_incremental(
     store_path: str,
     n: int = 3,
     min_agree: float = 0.25,
-    max_bucket: int | None = None,
     unit: str = "word",
 ) -> "DataFrame":
     """(new_doc_id, stored_doc_id, est_jaccard) — near-dups of a NEW batch
@@ -494,8 +493,8 @@ def dedup_incremental(
 
     Candidates: band equi-join of the batch's bands against bands derived
     from the store, with the store side of each (band_id, band_key) bucket
-    capped at ``max_bucket`` rows (min doc_ids kept — the boilerplate
-    mega-bucket guard, same recall trade as MAX_BAND_BUCKET, stated there).
+    capped at ``MAX_BAND_BUCKET`` rows (min doc_ids kept — the boilerplate
+    mega-bucket guard; its recall trade is stated there).
     Verify: MinHash agreement fraction — the ESTIMATED Jaccard
     (agreeing minima / N_MINHASHES) — because the store holds signatures,
     not shingle sets; with N_MINHASHES=8 the estimate is coarse
@@ -509,7 +508,6 @@ def dedup_incremental(
         spark.read.parquet(store_path),
         n=n,
         min_agree=min_agree,
-        max_bucket=max_bucket,
         unit=unit,
     )
 
@@ -557,7 +555,6 @@ def dedup_against_signatures(
     store_sig: "DataFrame",
     n: int = 3,
     min_agree: float = 0.25,
-    max_bucket: int | None = None,
     unit: str = "word",
     new_sig: "DataFrame | None" = None,
 ) -> "DataFrame":
@@ -571,8 +568,6 @@ def dedup_against_signatures(
 
     Without ``new_sig`` this runs one Spark job when called: the eager
     checkpoint of the batch signature table."""
-    if max_bucket is None:
-        max_bucket = MAX_BAND_BUCKET
     if new_sig is None:
         # consumed three times (batch bands -> band keys, the candidate
         # join, and the agreement verify) — materialize once instead of
@@ -593,7 +588,7 @@ def dedup_against_signatures(
         _bands_of(store_sig)
         .join(batch_keys, ["band_id", "band_key"], "left_semi")
         .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_bucket)
+        .where(F.col("rn") <= MAX_BAND_BUCKET)
         .select(
             F.col("doc_id").alias("stored_doc_id"), "band_id", "band_key"
         )

@@ -438,21 +438,19 @@ def test_run_kg_collects_the_dictionary_once(corpus, dictionary_collects):
     assert result["canonical_triples"].count() > 0
 
 
-@pytest.mark.parametrize("parallel", [1, 2])
 def test_run_with_lineage_collects_the_dictionary_once(
-    spark, corpus, tmp_path, dictionary_collects, parallel
+    spark, corpus, tmp_path, dictionary_collects
 ):
     """A run_with_lineage call prepares its dictionary once, before it reads
-    the ledger, and every bucket links against that, pool threads included:
-    one collect for four buckets, where each bucket used to collect its
-    own. A no-op resume reads the dictionary once too, for its key."""
+    the ledger, and every bucket links against that: one collect for four
+    buckets, where each bucket used to collect its own. A no-op resume
+    reads the dictionary once too, for its key."""
     concept_dict = dictionary_collects.watch(corpus["concepts"])
     out = str(tmp_path / "kg")
 
     def call():
         return pipeline.run_with_lineage(
-            spark, corpus["pages"], concept_dict, out, n_buckets=4,
-            parallel_buckets=parallel,
+            spark, corpus["pages"], concept_dict, out, n_buckets=4
         )
 
     assert call() == [0, 1, 2, 3]
@@ -691,6 +689,28 @@ def test_lineage_dictionary_change_invalidates(spark, corpus, tmp_path):
     assert call(changed) == [0, 1]
 
 
+def test_lineage_tokenizer_change_invalidates(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A resume after a tokenizer grammar change reruns every bucket, so no
+    output mixes triples of two tokenizers; an unchanged resume skips them."""
+    from jamie_spark import tokenizer
+
+    out = str(tmp_path / "kg_tok")
+
+    def call():
+        return pipeline.run_with_lineage(
+            spark, corpus["pages"], corpus["concepts"], out, n_buckets=2
+        )
+
+    assert call() == [0, 1]
+    assert call() == []
+    monkeypatch.setattr(
+        tokenizer, "TOKENIZER_VERSION", tokenizer.TOKENIZER_VERSION + "-next"
+    )
+    assert call() == [0, 1]
+
+
 def test_dictionary_digest_tracks_every_field(spark):
     """The digest is order-free and moves with one alias, one concept_id
     or one sem_type; rows with null fields are accepted, and a null differs
@@ -773,9 +793,8 @@ def test_lineage_resume_idempotent(spark, corpus, tmp_path):
     assert {r["n_buckets"] for r in lin.select("n_buckets").collect()} == {4}
 
 
-@pytest.mark.parametrize("parallel", [1, 2])
 def test_lineage_buckets_leave_no_pin_behind(
-    spark, corpus, tmp_path, pinned_rdds, parallel
+    spark, corpus, tmp_path, pinned_rdds
 ):
     """After a two-bucket call no RDD it pinned is left, checkpoints
     included."""
@@ -784,31 +803,10 @@ def test_lineage_buckets_leave_no_pin_behind(
     before = pinned_rdds()
     done = pipeline.run_with_lineage(
         spark, corpus["pages"], corpus["concepts"], str(tmp_path / "kg"),
-        n_buckets=2, parallel_buckets=parallel,
+        n_buckets=2,
     )
     assert done == [0, 1]
     assert pinned_rdds() == before
-
-
-def test_parallel_buckets_run_in_the_callers_job_group(
-    spark, corpus, tmp_path, spark_jobs
-):
-    """The pool threads of parallel_buckets > 1 run their jobs under the
-    caller's job group, so a parallel call counts the jobs the sequential
-    one does and ``cancelJobGroup`` reaches them."""
-    corpus["pages"].count()
-    prepared = concepts.prepare(corpus["concepts"])
-
-    def call(parallel):
-        return lambda: pipeline.run_with_lineage(
-            spark, corpus["pages"], prepared,
-            str(tmp_path / f"kg_{parallel}"), n_buckets=2,
-            parallel_buckets=parallel,
-        )
-
-    sequential = spark_jobs(call(1))
-    assert sequential > 2
-    assert spark_jobs(call(2)) == sequential
 
 
 def test_lineage_rejects_modulus_change(spark, corpus, tmp_path):
@@ -827,37 +825,6 @@ def test_lineage_rejects_modulus_change(spark, corpus, tmp_path):
         pipeline.run_with_lineage(
             spark, corpus["pages"], corpus["concepts"], out, n_buckets=8
         )
-
-
-def test_parallel_buckets_resume_idempotent(spark, corpus, tmp_path):
-    """--parallel-buckets: overlapped bucket runs keep per-bucket lineage
-    atomicity — kill/resume and output parity as in the sequential case."""
-    out = str(tmp_path / "kg_par")
-    first = pipeline.run_with_lineage(
-        spark, corpus["pages"], corpus["concepts"], out,
-        n_buckets=4, max_buckets=2, parallel_buckets=2,
-    )
-    assert len(first) == 2
-    second = pipeline.run_with_lineage(
-        spark, corpus["pages"], corpus["concepts"], out,
-        n_buckets=4, parallel_buckets=2,
-    )
-    assert sorted(first + second) == [0, 1, 2, 3]
-
-    resumed = pipeline.read_materialized(spark, out)
-    sequential = pipeline.run_kg(corpus["pages"], corpus["concepts"])[
-        "canonical_triples"
-    ]
-    key = ["url", "sent_id", "subj_surface", "pred", "obj_surface",
-           "subj_id", "obj_id"]
-    a = resumed.groupBy(*key).count()
-    b = sequential.groupBy(*key).count()
-    assert a.join(b, key + ["count"], "full_outer").where(
-        F.col("count").isNull()
-    ).count() == 0
-
-    lin = pipeline.lineage.read_lineage(spark, out)
-    assert lin.groupBy("bucket").count().where(F.col("count") > 1).count() == 0
 
 
 def test_cli_analytics_and_ntriples_export(spark, tmp_path):
