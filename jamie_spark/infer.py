@@ -1,12 +1,15 @@
-"""The fused NLP front-end: one Arrow-batched python stage per output shape.
+"""The fused NLP front-end: one ``mapInArrow`` stage, two output shapes.
 
 pages(url, warc_ts, html, text, lang)
   -> annotations(url, sent_id, tokens, ner, mod, rels, heads, entities, triples)
-     (``annotate_pages``, ``mapInPandas``: the nested CONLL/XML/eval shape)
+     (``annotate_pages``: the nested CONLL/XML/eval shape)
   -> flat mention/triple rows
-     (``annotate_pages_flat``, ``mapInArrow``: the KG hot path; given a
-     prepared dictionary, each triple row also carries its canonical
-     subj/obj ids, resolved in the same task by ``link.resolver``)
+     (``annotate_pages_flat``: the KG hot path; given a prepared
+     dictionary, each triple row also carries its canonical subj/obj ids,
+     resolved in the same task by ``link.resolver``)
+
+Both are :func:`_arrow_stage`, which differs only in its output DDL and its
+per-unit row writer.
 
 Everything the reference does per document — extraction (N1), width
 normalization (T1), segmentation (T2), tokenization (T3), joint
@@ -32,7 +35,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 from typing import TYPE_CHECKING
 
 import pandas as pd
@@ -167,6 +170,12 @@ def _iter_page_units(pdf_rows, mode: str, vocab: set[str] | None):
 MODEL_SUBBATCH = 32
 
 
+def _all_o(n: int) -> tuple:
+    """The annotation of an ``n``-token unit whose tagging failed: no
+    entity, no modality, no relation."""
+    return ["O"] * n, ["_"] * n, [[] for _ in range(n)], [[] for _ in range(n)]
+
+
 def _annotate_units(tagger, unit_toks: list[list[str]]) -> list[tuple]:
     """Batched model calls (``annotate_batch``, ``MODEL_SUBBATCH`` units per
     forward — per-sentence calls would run a batch-of-1 forward each,
@@ -192,11 +201,7 @@ def _annotate_units(tagger, unit_toks: list[list[str]]) -> list[tuple]:
         try:
             out.append(tagger.annotate_sentence(toks))
         except Exception:
-            n = len(toks)
-            out.append(
-                (["O"] * n, ["_"] * n, [[] for _ in range(n)],
-                 [[] for _ in range(n)])
-            )
+            out.append(_all_o(len(toks)))
     return out
 
 
@@ -233,10 +238,7 @@ def _iter_annotated(tagger, pdf_rows, mode: str, vocab: set[str] | None):
                         " failing unit(s)", exc_info=True,
                     )
                     warned = True
-                n = len(toks)
-                ner, mod = ["O"] * n, ["_"] * n
-                rels = [[] for _ in range(n)]
-                heads = [[] for _ in range(n)]
+                ner, mod, rels, heads = _all_o(len(toks))
             yield url, sid, cid, toks, ner, mod, rels, heads
         return
     units = list(_iter_page_units(pdf_rows, mode, vocab))
@@ -273,53 +275,56 @@ def _decode_unit(toks, ner, mod, rels, heads) -> tuple[list, list]:
     return mentions, triples
 
 
-def _make_annotate_batches(mode: str, spec: str):
-    def _annotate_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
+def _arrow_stage(mode: str, spec: str, ddl: str, writer):
+    """The extraction stage: pages Arrow batches -> ``ddl`` Arrow batches.
+
+    ``writer()`` runs once per task and returns ``write(add, unit,
+    mentions, triples)``, which appends one decoded unit's rows through
+    ``add``, the output columns' ``list.append`` in ``ddl`` order. A unit
+    whose decode raises yields no row (per-unit isolation, reference
+    utils.py:844-846). The Arrow schema is parsed here, on the driver:
+    ``DataType.fromDDL`` needs a Spark session, which a python worker lacks.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = to_arrow_schema(DataType.fromDDL(ddl))
+
+    def stage(batches):
+        import pyarrow as pa
+
         tagger = _get_tagger(spec)
         vocab = getattr(tagger, "subword_vocab", None)
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "url", "sent_id", "chunk_id", "tokens", "ner", "mod", "rels",
-                "heads", "entities", "triples",
-            )}
-            for url, sent_id, chunk_id, toks, ner, mod, rels, heads in (
-                _iter_annotated(
-                    tagger, zip(pdf["url"], pdf["html"], pdf["text"]),
-                    mode, vocab,
-                )
+        write = writer()
+        for rb in batches:
+            d = rb.to_pydict()
+            cols = [[] for _ in schema.names]
+            add = [c.append for c in cols]
+            for unit in _iter_annotated(
+                tagger, zip(d["url"], d["html"], d["text"]), mode, vocab
             ):
                 try:
-                    mentions, triples = _decode_unit(
-                        toks, ner, mod, rels, heads
-                    )
+                    mentions, triples = _decode_unit(*unit[3:])
                 except Exception:
-                    continue  # per-unit decode isolation
-                out["url"].append(url)
-                out["sent_id"].append(sent_id)
-                out["chunk_id"].append(chunk_id)
-                out["tokens"].append(toks)
-                out["ner"].append(ner)
-                out["mod"].append(mod)
-                out["rels"].append(rels)
-                out["heads"].append(heads)
-                out["entities"].append([
-                    {"tag": t, "begin": b, "end": e, "mod": m, "surface": sf}
-                    for t, b, e, m, sf in mentions
-                ])
-                out["triples"].append([
-                    {"tail_surface": ts, "head_surface": hs, "rel": rel,
-                     "tail_tag": tt, "head_tag": ht, "tail_mod": tm}
-                    for tt, _, _, tm, ts, hs, ht, rel in triples
-                ])
-            if out["url"]:
-                # never yield an empty frame: pandas types empty columns
-                # float64, which Arrow cannot convert to list<string> (found
-                # by probing an all-garbage partition).
-                yield pd.DataFrame(out)
+                    continue
+                write(add, unit, mentions, triples)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)],
+                schema=schema,
+            )
 
-    return _annotate_batches
+    return stage
+
+
+def _write_nested(add, unit, mentions, triples) -> None:
+    """One ``ANNOTATIONS_DDL`` row per unit. A mention tuple is already in
+    the ``entities`` struct's field order; a triple is reordered to the
+    ``triples`` struct's."""
+    row = (*unit, mentions, [
+        (ts, hs, rel, tt, ht, tm) for tt, _, _, tm, ts, hs, ht, rel in triples
+    ])
+    for f, v in zip(add, row):
+        f(v)
 
 
 #: columns shipped into the python workers. ``_iter_page_units`` reads html
@@ -328,7 +333,7 @@ def _make_annotate_batches(mode: str, spec: str):
 #: JVM-side whenever text is populated: on a crawl table whose text column
 #: is already extracted, the raw-html bytes — the widest column by far
 #: (10-100KB/page on real WARC data vs ~100B of text here) — never enter
-#: the Arrow transfer or the pandas heap. Pages missing text still carry
+#: the Arrow transfer or the python heap. Pages missing text still carry
 #: their html through to the fallback unchanged.
 def _page_cols():
     return (
@@ -350,19 +355,22 @@ def annotate_pages(
     <=510-token trunk of [SEP]-joined sentences (see :func:`_doc_units`),
     giving the extractor cross-sentence context.
 
-    The ``lang`` filter sits on a plain column before ``mapInPandas`` so it is
-    pushed into the scan (verify: ``.explain`` shows PushedFilters on lang).
+    The ``lang`` filter sits on a plain column before the python stage so it
+    is pushed into the scan (verify: ``.explain`` shows PushedFilters on lang).
 
     This emits the COMPLETE token-level record (tokens, BIO, modality,
     multihead relations, decoded entities/triples) — the shape needed by the
-    reference-parity outputs (CONLL S8, XML S9) and the evaluator. For the
-    production KG hot path use :func:`annotate_pages_flat`: converting the
-    deeply nested arrays through pandas->Arrow measured ~4x slower than the
-    flat Arrow-native stage and throttled scaling.
+    reference-parity outputs (CONLL S8, XML S9) and the evaluator. The
+    production KG hot path is :func:`annotate_pages_flat`: the same stage,
+    with one row of primitives per mention or triple, which is what the
+    linking and the graph write consume.
     """
     filtered = pages.where(F.col("lang") == lang).select(*_page_cols())
-    return filtered.mapInPandas(
-        _make_annotate_batches(mode, resolve_spec(model_spec)),
+    return filtered.mapInArrow(
+        _arrow_stage(
+            mode, resolve_spec(model_spec), ANNOTATIONS_DDL,
+            lambda: _write_nested,
+        ),
         schema=ANNOTATIONS_DDL,
     )
 
@@ -377,72 +385,36 @@ FLAT_DDL = (
 )
 
 
-def _make_flat_arrow_batches(mode: str, spec: str, dictionary):
-    def _flat_arrow_batches(batches):
-        """pages Arrow batches -> flat mention/triple rows as Arrow batches.
+def _flat_writer(dictionary: "Prepared | None"):
+    """A task's ``FLAT_DDL`` writer: one row per mention (kind='m') or
+    triple (kind='t'), primitives only, appended straight into the column
+    lists. With a dictionary, one ``link.resolver`` per task sets a triple
+    row's subj_id/obj_id."""
+    resolve = None if dictionary is None else resolver(dictionary)
 
-        One output row per mention (kind='m') or triple (kind='t') —
-        primitives only, built straight into ``pyarrow`` arrays. No pandas
-        object columns, no nested types: this is what lets the stage scale
-        linearly with python workers (nested struct conversion measured as
-        the bottleneck at 1M docs).
-        """
-        import pyarrow as pa
+    def write(add, unit, mentions, triples) -> None:
+        url, sid, cid = unit[:3]
+        # mention/triple tuples are laid out in FLAT_DDL column order after
+        # ``kind``
+        for m in mentions:
+            for f, v in zip(add, (url, sid, cid, "m", *m,
+                                  None, None, None, None, None)):
+                f(v)
+        for t in triples:
+            ids = (None, None) if resolve is None else (
+                resolve(t[4], t[0]), resolve(t[5], t[6])
+            )
+            for f, v in zip(add, (url, sid, cid, "t", *t, *ids)):
+                f(v)
 
-        tagger = _get_tagger(spec)
-        vocab = getattr(tagger, "subword_vocab", None)
-        resolve = None if dictionary is None else resolver(dictionary)
-        names = (
-            "url", "sent_id", "chunk_id", "kind", "tag", "begin", "end",
-            "mod", "surface", "obj_surface", "obj_tag", "rel",
-            "subj_id", "obj_id",
-        )
-        types = {
-            "sent_id": pa.int32(), "chunk_id": pa.int32(),
-            "begin": pa.int32(), "end": pa.int32(),
-        }
-        for rb in batches:
-            d = rb.to_pydict()
-            cols: dict[str, list] = {k: [] for k in names}
-            add = [cols[k].append for k in names]
-            for url, sid, cid, toks, ner, mod, rels, heads in (
-                _iter_annotated(
-                    tagger, zip(d["url"], d["html"], d["text"]), mode, vocab
-                )
-            ):
-                try:
-                    mentions, triples = _decode_unit(
-                        toks, ner, mod, rels, heads
-                    )
-                except Exception:
-                    # per-unit decode isolation (reference utils.py:844-846)
-                    continue
-                # mention/triple tuples are laid out in FLAT_DDL column
-                # order after ``kind``
-                for m in mentions:
-                    for f, v in zip(add, (url, sid, cid, "m", *m,
-                                          None, None, None, None, None)):
-                        f(v)
-                for t in triples:
-                    ids = (None, None) if resolve is None else (
-                        resolve(t[4], t[0]), resolve(t[5], t[6])
-                    )
-                    for f, v in zip(add, (url, sid, cid, "t", *t, *ids)):
-                        f(v)
-            if cols["url"]:
-                yield pa.RecordBatch.from_pydict(
-                    {k: pa.array(cols[k], types.get(k, pa.string()))
-                     for k in names}
-                )
-
-    return _flat_arrow_batches
+    return write
 
 
 def annotate_pages_flat(
     pages: "DataFrame", lang: str = "ja", mode: str = "sentence",
     model_spec: str | None = None, dictionary: "Prepared | None" = None,
 ) -> "DataFrame":
-    """pages -> flat mention/triple rows (production hot path, mapInArrow).
+    """pages -> flat mention/triple rows (production hot path).
 
     ``mode`` / ``model_spec`` as in :func:`annotate_pages`. With a
     ``concepts.prepare`` result as ``dictionary``, each triple row also
@@ -451,8 +423,9 @@ def annotate_pages_flat(
     closure, so it must fit the driver and each Python worker."""
     filtered = pages.where(F.col("lang") == lang).select(*_page_cols())
     return filtered.mapInArrow(
-        _make_flat_arrow_batches(
-            mode, resolve_spec(model_spec), dictionary
+        _arrow_stage(
+            mode, resolve_spec(model_spec), FLAT_DDL,
+            partial(_flat_writer, dictionary),
         ),
         schema=FLAT_DDL,
     )

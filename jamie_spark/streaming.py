@@ -127,6 +127,20 @@ def read_stream_output(spark: "SparkSession", out_dir: str) -> "DataFrame":
     )
 
 
+def _start_available_now(
+    stream: "DataFrame", process, checkpoint_dir: str
+) -> "StreamingQuery":
+    """Start ``process`` as the ``foreachBatch`` sink of ``stream``: the
+    query drains what its source holds now, in micro-batches, then stops
+    (``availableNow``)."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_kg(
     pages_stream: "DataFrame",
     concept_dict: "DataFrame | Prepared",
@@ -151,12 +165,7 @@ def stream_kg(
             batch_df, batch_id, concept_dict, out_dir
         )
 
-    return (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(pages_stream, process, checkpoint_dir)
 
 
 # --- incremental near-dup ingest (N7 composed with the signature store) ----
@@ -275,7 +284,7 @@ def process_kg_dedup_batch(
       counted before the extraction and the commit.
 
     A history drop of 200 fresh pages and 200 mirrors against a 400-page
-    history runs 20 jobs on the driver branch and 33 on the distributed one
+    history runs 18 jobs on the driver branch and 33 on the distributed one
     (tests/test_streaming.py caps the first).
 
     Returns the dictionary prepared when survivors reached extraction, else
@@ -336,8 +345,9 @@ def process_kg_dedup_batch(
 
 
 def _history_dups(prior: "DataFrame", new_sig: "DataFrame") -> "DataFrame":
-    """Distinct doc_ids of the batch (``new_sig``) that near-dup a
-    signature a prior batch committed."""
+    """doc_ids of the batch (``new_sig``) that near-dup a signature a prior
+    batch committed, once per matched pair: both consumers, a driver set
+    and an anti-join, ignore repeats."""
     return (
         textstats.dedup_against_signatures(
             None, prior, n=STREAM_SHINGLE_N,
@@ -345,7 +355,6 @@ def _history_dups(prior: "DataFrame", new_sig: "DataFrame") -> "DataFrame":
             unit=STREAM_SHINGLE_UNIT, new_sig=new_sig,
         )
         .select(F.col("new_doc_id").alias("doc_id"))
-        .distinct()
     )
 
 
@@ -374,7 +383,6 @@ def _distributed_keep(
         )
         .where(F.col("new_doc_id") > F.col("stored_doc_id"))
         .select(F.col("new_doc_id").alias("doc_id"))
-        .distinct()
     )
     return survivors.join(intra, "doc_id", "left_anti")
 
@@ -401,12 +409,7 @@ def stream_kg_dedup(
             batch_df, batch_id, concept_dict, out_dir, store_dir
         )
 
-    return (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(pages_stream, process, checkpoint_dir)
 
 
 def _store_parts(
@@ -563,12 +566,7 @@ def stream_link_hosts(
                 batch_df.sparkSession, store_dir, batch_id - 1
             )
 
-    return (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_available_now(pages_stream, process, checkpoint_dir)
 
 
 SESSION_GAP_SEC = 1800

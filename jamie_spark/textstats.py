@@ -581,12 +581,11 @@ def dedup_against_signatures(
     # store bands down to the batch's band keys BEFORE the bucket-cap
     # window — otherwise every call windows the WHOLE history's bands.
     # Per-bucket cap semantics are unchanged (the semi-join keeps matched
-    # buckets intact).
-    batch_keys = new_bands.select("band_id", "band_key").distinct()
+    # buckets intact, and repeated batch keys cannot multiply its rows).
     w = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
     store_bands = (
         _bands_of(store_sig)
-        .join(batch_keys, ["band_id", "band_key"], "left_semi")
+        .join(new_bands, ["band_id", "band_key"], "left_semi")
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= MAX_BAND_BUCKET)
         .select(

@@ -44,12 +44,35 @@ def test_extraction_byte_identity_distributed(spark, corpus):
     assert n_bad == 0
 
 
-def test_lang_filter_pushdown(corpus):
-    """The lang filter must reach the scan, not hide behind the UDF."""
-    plan = infer.annotate_pages(corpus["pages"])._jdf.queryExecution().executedPlan().toString()
-    assert "mapInPandas" in plan or "MapInPandas" in plan
-    # filter appears below the python stage (it was applied pre-UDF)
-    assert "lang" in plan
+def _plan_nodes(df):
+    """Node names of ``df``'s executed plan, each node before its
+    children."""
+    def walk(node):
+        yield node.nodeName()
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    return list(walk(df._jdf.queryExecution().executedPlan()))
+
+
+def test_lang_filter_pushdown(spark, tmp_path):
+    """The lang filter must reach the scan, not hide behind the python
+    stage, and each output shape is one ``MapInArrow``. The pages are read
+    back from parquet: no cached plan of an earlier test can stand in for
+    the frame, and the scan reports what was pushed into it."""
+    src = str(tmp_path / "pages")
+    fixtures.pages_df(spark, 8, seed=3).write.parquet(src)
+    pages = spark.read.parquet(src)
+    for annotate in (infer.annotate_pages, infer.annotate_pages_flat):
+        df = annotate(pages)
+        nodes = _plan_nodes(df)
+        assert nodes.count("MapInArrow") == 1, nodes
+        assert "MapInPandas" not in nodes, nodes
+        # linear plan: every node after the python node is below it
+        assert "Filter" in nodes[nodes.index("MapInArrow"):], nodes
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "EqualTo(lang,ja)" in plan, plan
 
 
 def test_flat_path_equals_nested_path(spark, corpus, extracted):

@@ -859,14 +859,15 @@ def test_dedup_branches_agree_on_random_batches(spark, tmp_path, monkeypatch):
 
 def test_process_kg_dedup_batch_job_budget(spark, tmp_path, spark_jobs):
     """A history drop (200 fresh pages and 200 mirrors of a 400-page drop
-    0) runs at most 20 + 2 Spark jobs, counted by ``spark_jobs``: 29 were
+    0) runs at most 18 + 2 Spark jobs, counted by ``spark_jobs``: 29 were
     measured when the small-batch driver branch came in, against 49 before
     it, when every batch ran the distributed probes; one pin per frame
-    took it to 25, and extraction resolving the canonical ids itself to
-    20. Of those, run_kg and its write on the survivors are 2 (the
-    dictionary collect and the write); the rest are the emptiness check,
-    the batch's two materializations, the probe's and the null-text
-    doc_id collects, the prior probe and the commit's write."""
+    took it to 25, extraction resolving the canonical ids itself to 20,
+    and a prior probe without its two redundant distincts to 18. Of
+    those, run_kg and its write on the survivors are 2 (the dictionary
+    collect and the write); the rest are the emptiness check, the batch's
+    two materializations, the probe's and the null-text doc_id collects,
+    the prior probe and the commit's write."""
     out = str(tmp_path / "out")
     store = str(tmp_path / "sigstore")
     concepts = fixtures.concept_df(spark)
@@ -881,7 +882,7 @@ def test_process_kg_dedup_batch_job_budget(spark, tmp_path, spark_jobs):
     jobs = spark_jobs(lambda: streaming.process_kg_dedup_batch(
         drop1, 1, concepts, out, store
     ))
-    assert jobs <= 20 + 2, jobs
+    assert jobs <= 18 + 2, jobs
 
 
 def test_stream_kg_dedup_collects_the_dictionary_once(
